@@ -166,6 +166,10 @@ object TilePack {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       FunctionName,
       exprs => {
+        if (exprs.length != 3)
+          throw new IllegalArgumentException(
+            s"tile_pack takes (pos, value, slots), got ${exprs.length} arguments"
+          )
         val slots = exprs(2) match {
           case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
           case other =>

@@ -2,8 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{IncrementalDaily, SeriesKernels, Upsert}
-import graft.sources.IncrementalIngest
+import graft.operators.{SeriesKernels, Upsert}
 
 /** Manual measurement insertion — `R/addNewContinuous.R:34-230`
   * (YukonWRB/AquaCache): validate the batch against the catalog
@@ -11,6 +10,8 @@ import graft.sources.IncrementalIngest
   * they don't accept inserts), default `imputed` to false, infer a
   * period for rows that lack one, upsert on (series, datetime) with
   * new-wins, and refresh the daily table ONLY for the touched ranges.
+  * The accepted batch is materialized once, like the nightly batch of
+  * [[DailyUpdate]], and the daily refresh is the same one.
   *
   * Batch-first like every gate here: the reference stops on the first
   * bad input; this classifies every row and carries the rest through.
@@ -60,27 +61,21 @@ object AddContinuous {
       .withColumn("imputed", coalesce(col("imputed"), lit(false)))
     // period assignment for the accepted rows (calculate_period role):
     // the kernel emits (series, datetime, period) — join it back onto
-    // the full rows and collapse ISO to seconds
+    // the full rows and collapse ISO to seconds. Materialized once, so
+    // the kernel runs once for the store write and the daily refresh.
     val periods = SeriesKernels.inferPeriods(withImputed, "timeseries_id", "datetime")
     val accepted = withImputed
       .join(periods, Seq("timeseries_id", "datetime"), "left")
       .withColumn("period_seconds", graft.functions.PeriodFormat.toSecondsCol(col("period")))
       .drop("period")
+      .localCheckpoint()
     val merged = Upsert(
       measurements.select("timeseries_id", "datetime", "value", "period_seconds"),
       accepted.select("timeseries_id", "datetime", "value", "period_seconds"),
       keys = Seq("timeseries_id", "datetime"),
       mode = Upsert.DoUpdate
     )
-    val changes = IncrementalIngest.changedRanges(
-      accepted.select("timeseries_id", "datetime", "value")
-    )
-    val aggMap = typedLit(aggTypes.map { case (k, v) => k -> v._1 })
-    val offMap = typedLit(aggTypes.map { case (k, v) => k -> v._2 })
-    val withMeta = merged
-      .withColumn("agg_type", coalesce(aggMap(col("timeseries_id")), lit("mean")))
-      .withColumn("offset_hours", coalesce(offMap(col("timeseries_id")), lit(0)))
-    val daily = IncrementalDaily.refresh(withMeta, dailyBase, changes)
+    val (_, daily) = DailyUpdate.refreshDaily(merged, accepted, dailyBase, aggTypes)
     AddResult(accepted, rejects, merged, daily)
   }
 }

@@ -12,10 +12,28 @@ import graft.sources.{AdapterRegistry, IncrementalIngest, SeriesConfig}
   * incrementally refresh the daily + DOY statistics for exactly the
   * changed ranges.
   *
-  * Execution shape on a cluster: steps 1-2 are one append job
-  * (shuffle on the series key = single writer per series); step 3 is
-  * map-side (broadcast corrections); steps 4-5 scan only partitions
-  * covered by the changed ranges. Nothing recomputes full history.
+  * Execution shape: `run` itself runs the jobs that touch the
+  * sources, and materializes three small frames with eager
+  * `localCheckpoint`s: the fetched and guarded batch (`appended`, one
+  * night's rows), its changed ranges (one row per touched series),
+  * and the daily rows of exactly the changed local days, aggregated
+  * from the upserted store. Every `Result` frame is built on those:
+  * `measurements` is the stored rows upserted with `appended`, and
+  * `daily` is the daily base with the recomputed days merged in. So
+  * the store write, the daily write and [[refreshDoyStats]] scan the
+  * stores and the checkpoints, never a source, and all of them see the
+  * one batch `run` fetched. Step 3 is map-side (broadcast
+  * corrections); steps 4-5 scan only what the changed ranges cover.
+  * Nothing recomputes full history.
+  *
+  * The checkpoint blocks live in the executors' block managers until
+  * the `Result` frames become unreachable, when Spark's
+  * `ContextCleaner` drops them; nothing is `cache()`d, so nothing
+  * needs unpersisting. Cluster trade-off: a local checkpoint is
+  * neither replicated nor recomputable from its source, so losing an
+  * executor that holds its blocks fails the cycle's writes instead of
+  * silently re-fetching a remote batch that may have changed since.
+  * Rerunning the cycle is safe: its watermark comes from the store.
   */
 object DailyUpdate {
 
@@ -52,12 +70,12 @@ object DailyUpdate {
         */
       qcSegments: Option[DataFrame] = None
   ): Result = {
-    import spark.implicits._
-
-    // 1. incremental fetch (last-point watermark per series)
+    // 1. incremental fetch (last-point watermark per series), read
+    // from the sources exactly once
     val appended = IncrementalIngest
       .getNewContinuous(spark, catalog, measurements, registry)
       .select("timeseries_id", "datetime", "value", "period_seconds", "grade", "approval")
+      .localCheckpoint()
 
     // 2. upsert into the store (conflict on (series, datetime): new wins)
     val merged = Upsert(
@@ -78,16 +96,34 @@ object DailyUpdate {
       else Corrections(merged, corrections)
 
     // 4. changed ranges -> bounded daily recompute
-    val changes = IncrementalIngest.changedRanges(appended)
-    val aggMap = typedLit(aggTypes.map { case (k, v) => k -> v._1 })
-    val offMap = typedLit(aggTypes.map { case (k, v) => k -> v._2 })
-    val withMeta = corrected
-      .withColumn("agg_type", coalesce(aggMap(col("timeseries_id")), lit("mean")))
-      .withColumn("offset_hours", coalesce(offMap(col("timeseries_id")), lit(0)))
-      .withColumn("value", col("corrected"))
-    val daily = IncrementalDaily.refresh(withMeta, dailyBase, changes)
+    val (changes, daily) =
+      refreshDaily(corrected.withColumn("value", col("corrected")), appended, dailyBase, aggTypes)
 
     Result(appended, merged, corrected, daily, changes, qcChanges)
+  }
+
+  /** The bounded daily refresh after a batch lands in `store`: the
+    * batch's changed ranges, and `dailyBase` with exactly the changed
+    * local days recomputed from `store`. The ranges and the recomputed
+    * days are local checkpoints, so the writes downstream read them
+    * instead of re-running the store scan behind them.
+    *
+    * @return (changed ranges, refreshed daily table)
+    */
+  private[jobs] def refreshDaily(
+      store: DataFrame,
+      batch: DataFrame,
+      dailyBase: DataFrame,
+      aggTypes: Map[Long, (String, Int)]
+  ): (DataFrame, DataFrame) = {
+    val changes = IncrementalIngest.changedRanges(batch).localCheckpoint()
+    val aggMap = typedLit(aggTypes.map { case (k, v) => k -> v._1 })
+    val offMap = typedLit(aggTypes.map { case (k, v) => k -> v._2 })
+    val withMeta = store
+      .withColumn("agg_type", coalesce(aggMap(col("timeseries_id")), lit("mean")))
+      .withColumn("offset_hours", coalesce(offMap(col("timeseries_id")), lit(0)))
+    val recomputed = IncrementalDaily.recompute(withMeta, changes).localCheckpoint()
+    (changes, IncrementalDaily.mergeInto(dailyBase, recomputed))
   }
 
   /** Per-QC-dimension RLE segments from the batch's point

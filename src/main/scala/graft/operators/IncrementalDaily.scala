@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
 object IncrementalDaily {
 
   /** Recompute daily rows for changed ranges and merge into the
-    * existing daily frame (recomputed rows win).
+    * existing daily frame (recomputed rows win): [[mergeInto]] of
+    * [[recompute]], one lazy plan.
     *
     * @param measurements canonical fact frame (timeseries_id,
     *                     datetime, value, agg_type, offset_hours, …)
@@ -34,7 +35,13 @@ object IncrementalDaily {
       measurements: DataFrame,
       dailyBase: DataFrame,
       changes: DataFrame
-  ): DataFrame = {
+  ): DataFrame =
+    mergeInto(dailyBase, recompute(measurements, changes))
+
+  /** The daily rows of exactly the local days the changed ranges
+    * touch, aggregated from ALL of each such day's measurements.
+    */
+  def recompute(measurements: DataFrame, changes: DataFrame): DataFrame = {
     val c = changes
       // coarse datetime pre-filter, ±2 days: wide enough to contain
       // every row of any local day touched by the range for any
@@ -61,8 +68,13 @@ object IncrementalDaily {
       .withColumn("day_hi", DailyAggregate.localDay(col("range_end"), col("offset_hours")))
       .filter(col("local_date").between(col("day_lo"), col("day_hi")))
       .drop("scan_start", "scan_end", "range_start", "range_end", "local_date", "day_lo", "day_hi")
-    val recomputed = DailyAggregate(affected)
-    // recomputed days win over the existing rows for the same key
+    DailyAggregate(affected)
+  }
+
+  /** Replace the (series, date) rows of `dailyBase` that `recomputed`
+    * carries; recomputed days win over the existing rows.
+    */
+  def mergeInto(dailyBase: DataFrame, recomputed: DataFrame): DataFrame = {
     val keys = Seq("timeseries_id", "date")
     dailyBase
       .join(recomputed.select(keys.map(col): _*), keys, "left_anti")

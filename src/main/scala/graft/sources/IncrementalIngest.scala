@@ -27,8 +27,9 @@ object IncrementalIngest {
     * Scale notes: the dispatch worklist is a DATAFRAME — catalog ids
     * joined to the last-point aggregate with the start timestamp
     * (`last + 1s`) computed distributed. Driver-side collection is
-    * demoted to the Transport-seam fetch boundary, where a scalar
-    * start genuinely must exist to parameterize the remote call:
+    * demoted to ONE collect at the Transport-seam fetch boundary,
+    * where a scalar start genuinely must exist to parameterize the
+    * remote call:
     * ONE ROW PER FETCH GROUP for cache-sharing adapters (the scale
     * path — a million ECCC series at a thousand stations collects a
     * thousand rows), and one row per series only for adapters whose
@@ -74,22 +75,22 @@ object IncrementalIngest {
         coalesce(timestamp_millis(unix_millis(col("last_dt")) + 1000L), lit(Epoch))
       )
 
-    // fetch-boundary collects: one row per shared GROUP...
-    val groupStarts: Map[(String, String), java.sql.Timestamp] = worklist
-      .filter(col("cache_key").isNotNull)
-      .groupBy(col("source_fx"), col("cache_key"))
+    // the ONE fetch-boundary collect: a row per shared GROUP (its
+    // earliest start), and a row per series only where the protocol is
+    // per-series (NULL cache_key keeps the series id in the key)
+    val starts = worklist
+      .groupBy(
+        col("source_fx"),
+        col("cache_key"),
+        when(col("cache_key").isNull, col("timeseries_id")).as("timeseries_id")
+      )
       .agg(min(col("start_ts")).as("start_ts"))
-      .as[(String, String, java.sql.Timestamp)]
+      .as[(String, Option[String], Option[Long], java.sql.Timestamp)]
       .collect()
-      .map { case (fx, key, ts) => (fx, key) -> ts }
-      .toMap
-    // ...and one per series only where the protocol is per-series
-    val seriesStarts: Map[Long, java.sql.Timestamp] = worklist
-      .filter(col("cache_key").isNull)
-      .select(col("timeseries_id"), col("start_ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .collect()
-      .toMap
+    val groupStarts: Map[(String, String), java.sql.Timestamp] =
+      starts.collect { case (fx, Some(key), _, ts) => (fx, key) -> ts }.toMap
+    val seriesStarts: Map[Long, java.sql.Timestamp] =
+      starts.collect { case (_, None, Some(id), ts) => id -> ts }.toMap
 
     def startOf(cfg: SeriesConfig): java.sql.Timestamp =
       seriesStarts.getOrElse(cfg.timeseriesId, Epoch)

@@ -1,9 +1,23 @@
 package graft.jobs
 
+import java.nio.file.{Files, Path}
+
 import graft.SparkSpec
 import graft.operators.DailyAggregate
-import graft.sources.{Adapters, SeriesConfig}
+import graft.sources.{AdapterRegistry, Adapters, CsvStationAdapter, FileTransport, SeriesConfig, Transport}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+
+/** The fixture file transport, counting every record it hands out. */
+final class CountingTransport(records: LongAccumulator) extends Transport {
+  override def bytes(url: String): Array[Byte] = FileTransport.bytes(url)
+
+  override def rows(spark: SparkSession, locator: String, format: String, options: Map[String, String]): DataFrame = {
+    val seen = udf(() => { records.add(1L); true }).asNondeterministic()
+    FileTransport.rows(spark, locator, format, options).filter(seen())
+  }
+}
 
 /** NOTE on the "No Partition Defined for Window" WARNs this suite
   * logs: the fixture's single series carries a LITERAL timeseries_id,
@@ -14,6 +28,13 @@ import org.apache.spark.sql.functions._
   * no production path windows without a partition key.
   */
 class DailyUpdateSpec extends SparkSpec {
+
+  /** An empty correction dimension. */
+  private def noCorrections: DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long, java.sql.Timestamp, java.sql.Timestamp, String, Option[Double], Option[Double], Option[Long], Option[String], Int)]
+      .toDF("correction_id", "timeseries_id", "start_dt", "end_dt", "ctype", "value1", "value2", "window_seconds", "equation", "priority")
+  }
 
   test("end-to-end: fetch -> upsert -> correct -> incremental daily refresh") {
     import spark.implicits._
@@ -39,15 +60,13 @@ class DailyUpdateSpec extends SparkSpec {
     val dailyBase = DailyAggregate(
       initial.withColumn("agg_type", lit("mean")).withColumn("offset_hours", lit(0))
     )
-    val corrections = Seq.empty[(Long, Long, java.sql.Timestamp, java.sql.Timestamp, String, Option[Double], Option[Double], Option[Long], Option[String], Int)]
-      .toDF("correction_id", "timeseries_id", "start_dt", "end_dt", "ctype", "value1", "value2", "window_seconds", "equation", "priority")
 
     val result = DailyUpdate.run(
       spark,
       Seq(cfg),
       initial,
       dailyBase,
-      corrections,
+      noCorrections,
       Adapters.default,
       aggTypes = Map(1L -> ("mean", 0))
     )
@@ -63,6 +82,77 @@ class DailyUpdateSpec extends SparkSpec {
     // DOY stats over the touched scope runs and returns the changed days
     val doy = DailyUpdate.refreshDoyStats(result.daily, result.changedRanges)
     assert(doy.count() >= 2L)
+  }
+
+  /** The i-th hour from 2023-01-01 00:00 (session time zone). */
+  private def hour(i: Int): String =
+    java.time.LocalDateTime.of(2023, 1, 1, 0, 0).plusHours(i.toLong).toString.replace('T', ' ') + ":00"
+
+  /** Hourly landing CSV over 2023-01-01..03 (72 records). */
+  private def writeCsv(path: Path, value: Int => Double): Unit = {
+    val lines = (0 until 72).map(i => s"${hour(i)},${value(i)},,provisional")
+    Files.write(path, ("datetime,value,qualifier_code,approval_label" +: lines).mkString("\n").getBytes("UTF-8"))
+  }
+
+  private def hourly(i: Int): Double = 10.0 + (i % 24) * 0.25
+
+  /** A nightly run over one CSV series whose store already holds
+    * 2023-01-01, so the batch is the 48 rows of Jan 2 and Jan 3.
+    */
+  private def csvRun(csv: Path, transport: Transport): DailyUpdate.Result = {
+    import spark.implicits._
+    val store = (0 until 24)
+      .map(i => (1L, hour(i), hourly(i), 3600L))
+      .toDF("timeseries_id", "datetime", "value", "period_seconds")
+      .withColumn("datetime", to_timestamp(col("datetime")))
+    val dailyBase = DailyAggregate(store.withColumn("agg_type", lit("mean")).withColumn("offset_hours", lit(0)))
+    val cfg = SeriesConfig(1L, CsvStationAdapter.name, Map("path" -> csv.toString),
+      defaultGrade = Some("A"), recordRateSeconds = Some(3600L))
+    DailyUpdate.run(spark, Seq(cfg), store, dailyBase, noCorrections,
+      new AdapterRegistry(Seq(new CsvStationAdapter(transport))), aggTypes = Map(1L -> ("mean", 0)))
+  }
+
+  /** The nightly writes: store, daily table, DOY statistics. */
+  private def writeAll(r: DailyUpdate.Result, dir: Path): Unit = {
+    r.measurements.write.parquet(dir.resolve("measurements").toString)
+    r.daily.write.parquet(dir.resolve("daily").toString)
+    DailyUpdate.refreshDoyStats(r.daily, r.changedRanges).write.parquet(dir.resolve("doy").toString)
+  }
+
+  test("guard: the store, daily and DOY writes read the landing CSV exactly once") {
+    val dir = Files.createTempDirectory("daily-update-once")
+    val csv = dir.resolve("series_1.csv")
+    writeCsv(csv, hourly)
+    val records = spark.sparkContext.longAccumulator("landing_csv_records")
+    writeAll(csvRun(csv, new CountingTransport(records)), dir)
+    assert(spark.read.parquet(dir.resolve("measurements").toString).count() == 72L)
+    assert(records.value == 72L, s"the 72-record landing CSV was read ${records.value / 72.0} times")
+  }
+
+  test("snapshot: the writes reflect the batch run fetched, not a later landing file") {
+    val dir = Files.createTempDirectory("daily-update-snapshot")
+    val csv = dir.resolve("series_1.csv")
+    writeCsv(csv, hourly)
+    val r = csvRun(csv, FileTransport)
+    writeCsv(csv, _ => 999.0) // the landing file changes after run returns
+    writeAll(r, dir)
+
+    val stored = spark.read.parquet(dir.resolve("measurements").toString)
+    val values = stored.select("value").collect().map(_.getDouble(0))
+    assert(values.length == 72 && !values.contains(999.0), "the store must hold the batch run saw")
+    val daily = spark.read.parquet(dir.resolve("daily").toString)
+    val full = DailyAggregate(stored.withColumn("agg_type", lit("mean")).withColumn("offset_hours", lit(0)))
+    val key = (r: Row) => (r.getAs[Long]("timeseries_id"), r.getAs[java.sql.Date]("date").toString,
+      r.getAs[Double]("value"), r.getAs[Long]("n"))
+    val changedDays = Set("2023-01-02", "2023-01-03")
+    val dailyRows = daily.collect().map(key).toSet
+    assert(dailyRows.map(_._2) == changedDays + "2023-01-01")
+    assert(dailyRows.filter(k => changedDays(k._2)) == full.collect().map(key).filter(k => changedDays(k._2)).toSet,
+      "every changed day's daily row must aggregate the stored rows")
+    val doy = spark.read.parquet(dir.resolve("doy").toString).collect().toSet
+    assert(doy.nonEmpty)
+    assert(doy == DailyUpdate.refreshDoyStats(daily, r.changedRanges).collect().toSet,
+      "the DOY statistics must come from the written daily table")
   }
 
   test("QC adjust step: batch grades become reconciled segments in the store") {
@@ -83,8 +173,6 @@ class DailyUpdateSpec extends SparkSpec {
     val dailyBase = DailyAggregate(
       empty.withColumn("agg_type", lit("mean")).withColumn("offset_hours", lit(0))
     )
-    val corrections = Seq.empty[(Long, Long, java.sql.Timestamp, java.sql.Timestamp, String, Option[Double], Option[Double], Option[Long], Option[String], Int)]
-      .toDF("correction_id", "timeseries_id", "start_dt", "end_dt", "ctype", "value1", "value2", "window_seconds", "equation", "priority")
     // existing store: grade 'A' over the first half of the day
     val store = Seq(
       (1L, "grade", 10L, "A", "2023-01-01 00:00:00", "2023-01-01 12:00:00")
@@ -93,7 +181,7 @@ class DailyUpdateSpec extends SparkSpec {
       .withColumn("end_dt", to_timestamp(col("end_s")))
       .drop("start_s", "end_s")
     val result = DailyUpdate.run(
-      spark, Seq(cfg), empty, dailyBase, corrections, Adapters.default,
+      spark, Seq(cfg), empty, dailyBase, noCorrections, Adapters.default,
       aggTypes = Map(1L -> ("mean", 0)), qcSegments = Some(store)
     )
     val qc = result.qcChanges.get.collect()

@@ -52,8 +52,9 @@ class MlSpec extends SparkSpec {
     // is coalescible by AQE, which folded the tiny-bytes docs shuffle
     // back to ~1 partition and serialized the tokenize/shingle kernels
     // plus everything under the localCheckpoint. The explicit-count form
-    // must survive execution at defaultParallelism.
-    val d = docs((1L to 64L).map(i => (i, s"alpha beta gamma delta epsilon $i")): _*)
+    // must survive execution at defaultParallelism. The docs start in
+    // ONE partition so that spread's repartition really runs.
+    val d = docs((1L to 64L).map(i => (i, s"alpha beta gamma delta epsilon $i")): _*).coalesce(1)
     val n = Dedup.shingles(d, "doc_id", "text", 3).rdd.getNumPartitions
     assert(
       n >= spark.sparkContext.defaultParallelism,

@@ -42,6 +42,18 @@ class RasterSpec extends SparkSpec {
     assert(tile == expect)
   }
 
+  test("tile_pack(pos, value) without a slot count fails with a descriptive error") {
+    import spark.implicits._
+    graft.functions.TilePack.register(spark)
+    Seq((0, 1.0)).toDF("pos", "value").createOrReplaceTempView("tile_pack_arity")
+    val e = intercept[Exception](spark.sql("SELECT tile_pack(pos, value) FROM tile_pack_arity").collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(
+      chain.exists(c => c.isInstanceOf[IllegalArgumentException] && c.getMessage.contains("got 2 arguments")),
+      s"expected the arity IllegalArgumentException, got $e"
+    )
+  }
+
   test("tile_pack aggregate reproduces the replaced collect_list formulation exactly") {
     import spark.implicits._
     // edge tiles on both axes (20x12 into 8x5 tiles) + NULL cell values:
