@@ -552,46 +552,9 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString
-    )
-    cpusLabel = Some(cpus)
-    TempRoots.initJvmScratch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ContextCleaner frees shuffle files only when the DRIVER GCs;
-      // with a large heap (SPARK_DRIVER_MEM=64g for the sf10
-      // rehearsal) GC may never run, so a long multi-query session
-      // accumulates every query's shuffle spill on disk until it
-      // fills (sf10 died at 44 GB of lingering blockmgr files). The
-      // 5-minute periodic GC trades an occasional sub-second pause —
-      // outside the timed windows at rehearsal scale — for bounded
-      // disk. Default Spark value is 30min; overridable per-run.
-      .config(
-        "spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "5min")
-      )
-      // local-mode heartbeats are pure liability: executor and driver
-      // share one JVM, so a heartbeat "timeout" can only mean the
-      // process was busy (full-GC pause / 32-way CPU saturation at
-      // rehearsal scale), never a lost node — yet HeartbeatReceiver
-      // removes the sole executor and the session is dead from there
-      // (RpcEndpointNotFoundException storms). This killed the r14
-      // sf10 re-measure leg mid-q_dedup_clusters and the first r15
-      // attempt (driver heartbeat starved 226 s > the 120 s default).
-      // Raise the tolerance to one hour — on a real cluster these
-      // stay at their defaults; this is bench-instrument hardening.
-      .config("spark.network.timeout", "3600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.warehouse.dir", TempRoots.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cores
+    cpusLabel = Some(cpus.toString)
+    val spark = Session.local(cpus)
     // host-speed yardstick BEFORE any Spark work touches the cores
     calibration = Some(cpuCalibration())
     // warm up JVM/codegen/file listing so the first timed query isn't

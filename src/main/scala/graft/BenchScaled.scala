@@ -453,24 +453,11 @@ object BenchScaled {
   private def run(): Unit = {
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/bench-tmp/sf10")
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_BASE_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // a filled disk killed two round-8 rehearsal attempts undiagnosed:
     // refuse to start without headroom for shuffle spill + checkpoints
     val freeGb = TempRoots.freeBytes / (1L << 30)
     require(freeGb >= 15, s"scaled rehearsal needs >=15 GB free, have $freeGb GB")
-    TempRoots.initJvmScratch()
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .config("spark.sql.warehouse.dir", TempRoots.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
 
     val out = new scala.collection.mutable.LinkedHashMap[String, String]()
     def flush(): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: replicate an sf directory by an
@@ -123,18 +123,7 @@ object ScaleUp {
     val textMode = if (args.length == 4) args(3) else "caesar"
     replicaAlphabet(textMode, 1) // validate the mode before any work
     require(factor >= 1)
-    TempRoots.initJvmScratch()
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${math.min(Runtime.getRuntime.availableProcessors, 32)}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", TempRoots.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
 
     def rd(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def wr(df: DataFrame, name: String, parts: Int): Unit = {

@@ -38,9 +38,8 @@ object TempRoots {
     */
   def warehouseDir: String = root.resolve("spark-warehouse").toString
 
-  /** JVM-wide scratch redirection, called by every entry point
-    * (Bench/Verify/BenchScaled/ScaleUp/specs) before the first Derby
-    * or Spark use: embedded Derby writes `derby.log` to user.dir
+  /** JVM-wide scratch redirection, called by [[Session.local]] before
+    * the first Derby or Spark use: embedded Derby writes `derby.log` to user.dir
     * unless `derby.stream.error.file` says otherwise. State
     * accumulating outside [[root]] is invisible to `sbt clean` and is
     * exactly the slow systemic cost the bench-noise postmortems go

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,23 +10,7 @@ object Verify {
     // optional trailing args: dump only these queries (dev iteration);
     // the driver always calls with exactly two args -> full dump
     val only: Option[Set[String]] = if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString
-    )
-    TempRoots.initJvmScratch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects
-      // unless read as long; TestTables.events converts back.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", TempRoots.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.ListBuffer.empty[(String, String)]
     val selected = SparkEntry.queries

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,25 +73,9 @@ case class DistinctShingles(left: Expression, right: Expression) extends BinaryE
 }
 
 object DistinctShingles {
-  val FunctionName = "distinct_shingles"
-
   private val Sep = UTF8String.fromString(" ")
 
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => DistinctShingles(exprs(0), exprs(1)),
-      "built-in"
-    )
-
-  /** Column API: registers on the active session and calls through the
-    * registry — same discipline as UnicodeTokens/VectorOps.
-    */
-  def of(toks: Column, n: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(FunctionName, toks, n)
-  }
+  def of(toks: Column, n: Column): Column = column(DistinctShingles(expression(toks), expression(n)))
 
   /** One-pass kernel: n-token windows joined by ' ', first-occurrence
     * order, per-document distinct. See the expression scaladoc for the

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,8 +65,6 @@ case class Md5Num(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 object Md5Num {
-  val FunctionName = "md5num"
-
   private val digests = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -91,17 +90,5 @@ object Md5Num {
     v
   }
 
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => Md5Num(exprs(0), exprs(1)),
-      "built-in"
-    )
-
-  def of(c: Column, nHex: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions
-      .call_function(FunctionName, c, org.apache.spark.sql.functions.lit(nHex))
-  }
+  def of(c: Column, nHex: Int): Column = column(Md5Num(expression(c), Literal(nHex)))
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -71,8 +72,6 @@ case class MinHashSig(first: Expression, second: Expression, third: Expression)
 }
 
 object MinHashSig {
-  val FunctionName = "minhash_sig"
-
   /** (a_i, b_i) permutation constants per signature width, cached —
     * the SAME [[PortableHash.minHashA]]/[[PortableHash.minHashB]]
     * family the aggregate form and the DuckDB oracle use.
@@ -115,21 +114,6 @@ object MinHashSig {
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => MinHashSig(exprs(0), exprs(1), exprs(2)),
-      "built-in"
-    )
-
-  def of(toks: Column, n: Int, numPerm: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(
-      FunctionName,
-      toks,
-      org.apache.spark.sql.functions.lit(n),
-      org.apache.spark.sql.functions.lit(numPerm)
-    )
-  }
+  def of(toks: Column, n: Int, numPerm: Int): Column =
+    column(MinHashSig(expression(toks), Literal(n), Literal(numPerm)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.DataType
@@ -49,17 +50,5 @@ case class OptimizerBarrier(child: Expression) extends UnaryExpression {
 }
 
 object OptimizerBarrier {
-  val FunctionName = "opt_barrier"
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => OptimizerBarrier(exprs.head),
-      "built-in"
-    )
-
-  def of(c: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(FunctionName, c)
-  }
+  def of(c: Column): Column = column(OptimizerBarrier(expression(c)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -77,8 +78,6 @@ case class PortableSimHash(child: Expression) extends UnaryExpression {
 }
 
 object PortableSimHash {
-  val FunctionName = "portable_simhash"
-
   /** One-pass kernel: md5num56 once per DISTINCT token (cached in a
     * local map), +/-1 vote per token INSTANCE per bit — identical to
     * counting instances first and weighting by count.
@@ -112,16 +111,5 @@ object PortableSimHash {
     out
   }
 
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => PortableSimHash(exprs.head),
-      "built-in"
-    )
-
-  def of(toks: Column): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(FunctionName, toks)
-  }
+  def of(toks: Column): Column = column(PortableSimHash(expression(toks)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -19,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * path of `graft.ml.Dedup`; the md5-based composable variant remains
   * the DuckDB-oracle-checkable twin.
   */
-case class SimHash64(child: Expression, seed: Long)
+case class SimHash64(child: Expression)
     extends UnaryExpression
     with CodegenFallback {
 
@@ -41,7 +42,7 @@ case class SimHash64(child: Expression, seed: Long)
     var i = 0
     while (i < arr.numElements()) {
       if (!arr.isNullAt(i)) {
-        val h = XxHash64Function.hash(arr.getUTF8String(i), StringType, seed)
+        val h = XxHash64Function.hash(arr.getUTF8String(i), StringType, SimHash64.Seed)
         var j = 0
         while (j < 64) {
           if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
@@ -66,17 +67,8 @@ case class SimHash64(child: Expression, seed: Long)
 }
 
 object SimHash64 {
-  val FunctionName = "simhash64"
+  /** The per-token xxhash64 seed. */
+  val Seed = 42L
 
-  /** Register in the session's function registry (SQL + call_function). */
-  def register(spark: org.apache.spark.sql.SparkSession, seed: Long = 42L): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => SimHash64(exprs.head, seed),
-      "built-in"
-    )
-
-  /** Column API (requires `register` on the session first). */
-  def simhash64(tokens: Column): Column =
-    org.apache.spark.sql.functions.call_function(FunctionName, tokens)
+  def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -156,38 +157,18 @@ object TilePack {
     */
   final class Buf(val values: Array[Double], val set: Array[Boolean])
 
-  val FunctionName = "tile_pack"
-
-  /** Register in the session's function registry (idempotent). The
-    * analyzer wraps a bare AggregateFunction from a registry builder in
-    * its AggregateExpression, same as the built-in aggregates.
+  /** SQL form: the slot count must be an int literal. The analyzer
+    * wraps the bare aggregate in its AggregateExpression, as it does
+    * for the built-in aggregates.
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => {
-        if (exprs.length != 3)
-          throw new IllegalArgumentException(
-            s"tile_pack takes (pos, value, slots), got ${exprs.length} arguments"
-          )
-        val slots = exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"tile_pack slot count must be an int literal, got $other"
-            )
-        }
-        TilePack(exprs(0), exprs(1), slots)
-      },
-      "built-in"
-    )
+  def fromSql(pos: Expression, value: Expression, slots: Expression): TilePack =
+    slots match {
+      case Literal(v: Int, IntegerType) => TilePack(pos, value, v)
+      case other =>
+        throw new IllegalArgumentException(s"tile_pack slot count must be an int literal, got $other")
+    }
 
-  /** Column API — same call_function discipline as the other kernels.
-    * `slots` must be a compile-time constant (tile w*h).
-    */
-  def of(pos: Column, value: Column, slots: Int): Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions
-      .call_function(FunctionName, pos, value, org.apache.spark.sql.functions.lit(slots))
-  }
+  /** `slots` is the tile's w*h. */
+  def of(pos: Column, value: Column, slots: Int): Column =
+    column(TilePack(expression(pos), expression(value), slots).toAggregateExpression())
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -59,24 +61,7 @@ case class UnicodeTokens(child: Expression) extends UnaryExpression {
 }
 
 object UnicodeTokens {
-  val FunctionName = "unicode_tokens"
-
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => UnicodeTokens(exprs.head),
-      "built-in"
-    )
-
-  /** Column API: registers on the active session (driver-side plan
-    * construction always has one) and calls through the registry —
-    * the same discipline as SimHash64/VecDot.
-    */
-  def tokens(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    register(org.apache.spark.sql.SparkSession.active)
-    org.apache.spark.sql.functions.call_function(FunctionName, text)
-  }
+  def tokens(text: Column): Column = column(UnicodeTokens(expression(text)))
 
   /** Unicode general categories forming tokens: letters (1..5), marks
     * (6..8), numbers (9..11) — exactly java.util.regex `\p{L}\p{M}\p{N}`.

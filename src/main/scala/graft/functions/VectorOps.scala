@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.CatalystColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -356,37 +357,18 @@ case class VecScaleInv(left: Expression, right: Expression) extends BinaryExpres
 }
 
 object VectorOps {
-  val DotName = "vec_dot"
-  val CosineName = "vec_cosine"
-  val ScaleInvName = "vec_scale_inv"
-  val Norm2Name = "vec_norm2"
-
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(DotName, exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(CosineName, exprs => VecCosine(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(ScaleInvName, exprs => VecScaleInv(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(Norm2Name, exprs => VecNorm2(exprs(0)), "built-in")
-  }
-
-  /** Column API (requires `register` on the session first). */
-  def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(DotName, a, b)
+  def dot(a: Column, b: Column): Column = column(VecDot(expression(a), expression(b)))
 
   /** Fused single-pass cosine; NULL for zero-norm inputs. */
-  def cosine(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(CosineName, a, b)
+  def cosine(a: Column, b: Column): Column = column(VecCosine(expression(a), expression(b)))
 
   /** Elementwise `v / s`; NULL when `s` is not positive. */
-  def scaleInv(v: Column, s: Column): Column =
-    org.apache.spark.sql.functions.call_function(ScaleInvName, v, s)
+  def scaleInv(v: Column, s: Column): Column = column(VecScaleInv(expression(v), expression(s)))
 
   /** Finite-positive squared norm, or NULL for any vector that cannot
     * enter cosine geometry (zero-norm, NaN/Inf component, NULL
     * element). `norm2(v).isNotNull` IS the degenerate-embedding
     * filter.
     */
-  def norm2(v: Column): Column =
-    org.apache.spark.sql.functions.call_function(Norm2Name, v)
+  def norm2(v: Column): Column = column(VecNorm2(expression(v)))
 }

@@ -948,7 +948,6 @@ object Dedup {
     * family, same near-dup behavior).
     */
   def simHashNative(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
     docs.select(
       col(idCol),
       graft.functions.SimHash64.simhash64(TextStats.tokens(col(textCol))).as("simhash")
@@ -987,7 +986,6 @@ object Dedup {
       codebook: Option[Array[Array[Double]]] = None
   ): DataFrame = {
     import graft.functions.VectorOps
-    VectorOps.register(emb.sparkSession)
     // one materialization feeds the a-side, b-side and the flag-back
     // join — without it the normalize+assign scan runs three times
     val e = assignedVecs(emb, idCol, vecCol, nCentroids, seed, dim, codebook = codebook).localCheckpoint(false)
@@ -1033,7 +1031,6 @@ object Dedup {
       codebook: Option[Array[Array[Double]]] = None
   ): DataFrame = {
     import graft.functions.VectorOps
-    VectorOps.register(emb.sparkSession)
     val assigned = assignedVecs(
       emb, idCol, vecCol, nCentroids, seed, dim,
       keep = Seq("__incoming" -> incomingPred),
@@ -1075,7 +1072,6 @@ object Dedup {
       codebook: Option[Array[Array[Double]]] = None
   ): DataFrame = {
     import graft.functions.VectorOps
-    VectorOps.register(emb.sparkSession)
     // None -> the deterministic family (oracle-reproducible); Some ->
     // a fitted codebook (Similarity.fitCentroids), the production path
     val centroids = codebook.getOrElse(Similarity.normalizedCentroids(nCentroids, dim, seed))

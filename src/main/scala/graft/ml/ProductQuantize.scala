@@ -103,7 +103,6 @@ object ProductQuantize {
     val subDim = dim / m
     val bits = 64 / m // bits available per code; k must fit
     require(k <= (1 << bits), s"k=$k codes do not fit ${bits} bits")
-    VectorOps.register(emb.sparkSession)
     val cb = codebooks(m, k, subDim, seed)
     val e = Similarity.normalizedVecs(emb, idCol, vecCol)
     val structs = (0 until m).map(j => codeStruct(col("nv"), j, subDim, cb(j)))
@@ -161,7 +160,6 @@ object ProductQuantize {
       coarseCodebook: Option[Array[Array[Double]]] = None,
       corpusReplicas: Int = 1
   ): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     val subDim = dim / m
     val cb = codebooks(m, k, subDim, pqSeed)
     val coarse =
@@ -284,7 +282,6 @@ object ProductQuantize {
       multiAssigned: Boolean
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorOps.register(emb.sparkSession)
     val subDim = dim / m
     val cb = codebooks(m, k, subDim, pqSeed)
     // None -> the deterministic family (oracle-reproducible); Some ->

@@ -31,11 +31,11 @@ object Similarity {
   private def hofDot(x: Column, y: Column): Column =
     aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
 
-  /** Native-expression cosine (requires VectorOps.register on the
-    * session). Zero-norm and NULL vectors have no direction, so their
-    * cosine is NULL (matches DuckDB's x/0 = NULL) instead of an ANSI
-    * divide-by-zero crash — a 100 TB corpus WILL contain failed-embedder
-    * zero vectors, and one of them must not kill the stage.
+  /** Native-expression cosine. Zero-norm and NULL vectors have no
+    * direction, so their cosine is NULL (matches DuckDB's x/0 = NULL)
+    * instead of an ANSI divide-by-zero crash — a 100 TB corpus WILL
+    * contain failed-embedder zero vectors, and one of them must not
+    * kill the stage.
     *
     * The fused [[graft.functions.VecCosine]] kernel accumulates
     * xy/xx/yy in ONE array pass. Its predecessor,
@@ -62,7 +62,6 @@ object Similarity {
       k: Int
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorOps.register(emb.sparkSession)
     // degenerate vectors (zero-norm/NaN/Inf/NULL-element) can neither
     // query nor serve: without the drop they'd rank NULL-cos in Spark
     // but NaN-cos-FIRST in a DuckDB mirror — same contract as
@@ -98,7 +97,6 @@ object Similarity {
       vecCol: String,
       threshold: Double
   ): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     val e = normalizedVecs(emb, idCol, vecCol)
     val a = e.select(col("id").as("a_id"), col("nv").as("va"))
     val b = e.select(col("id").as("b_id"), col("nv").as("vb"))
@@ -122,7 +120,6 @@ object Similarity {
       seed: Long = 42L,
       dim: Int = 64
   ): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     val planes = hyperplanes(nPlanes, dim, seed)
     val e = normalizedVecs(emb, idCol, vecCol)
       .withColumn("bucket", lshBucket(col("nv"), planes, nativeDot = true))
@@ -187,7 +184,6 @@ object Similarity {
       sampleN: Int = 20000,
       seed: Long = 7L
   ): Array[Array[Double]] = {
-    VectorOps.register(emb.sparkSession)
     val n = emb.count()
     val stride = math.max(1L, n / math.max(1, sampleN))
     // Sort the collected sample by id on the driver: collect() order
@@ -267,7 +263,6 @@ object Similarity {
       seed: Long,
       dim: Int = 64
   ): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     val centroids = normalizedCentroids(nCentroids, dim, seed)
     val scored = sort_array(
       array(centroids.zipWithIndex.map { case (c, i) =>
@@ -354,7 +349,6 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val spark = e.sparkSession
     import spark.implicits._
-    VectorOps.register(spark)
     val cents = broadcast(
       centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("__cc", "__cvec")
     )
@@ -438,7 +432,6 @@ object Similarity {
       codebook: Option[Array[Array[Double]]] = None,
       corpusReplicas: Int = 1
   ): DataFrame = {
-    VectorOps.register(emb.sparkSession)
     val centroids = codebook.getOrElse(normalizedCentroids(nCentroids, dim, seed))
     require(codebook.forall(_.length == nCentroids), "codebook size must equal nCentroids")
     require(corpusReplicas >= 1 && corpusReplicas <= nCentroids, "corpusReplicas in [1, nCentroids]")
@@ -558,7 +551,6 @@ object Similarity {
       multiAssigned: Boolean
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorOps.register(emb.sparkSession)
     // None -> the deterministic family (oracle-reproducible); Some ->
     // a fitted codebook ([[fitCentroids]]), the production deployment
     val centroids = codebook.getOrElse(normalizedCentroids(nCentroids, dim, seed))
@@ -672,8 +664,7 @@ object Similarity {
     }
 
   /** LSH signature bucket: sign bits of the vector against each plane.
-    * `nativeDot` uses the codegen'd vec_dot expression (requires
-    * VectorOps.register on the session).
+    * `nativeDot` uses the codegen'd vec_dot expression.
     */
   def lshBucket(vec: Column, planes: Array[Array[Double]], nativeDot: Boolean = false): Column = {
     val bits = planes.zipWithIndex.map { case (plane, i) =>
@@ -701,7 +692,6 @@ object Similarity {
       dim: Int = -1
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorOps.register(emb.sparkSession)
     // dim <= 0: infer from the data (one-row metadata read, not a scan).
     // Empty corpus -> no rows to infer from AND no possible neighbors:
     // return the empty result with the contract schema instead of

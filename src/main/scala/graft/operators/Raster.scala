@@ -211,8 +211,13 @@ object Raster {
       .min
     while (bucketRows(b) > 4096) b *= 2
 
-    // floor-division bucket on BOTH sides (negative-coordinate safe)
-    def bCol(c: Column): Column = floor(c.cast("long").cast("double") / b).cast("long")
+    // floor-division bucket on BOTH sides (negative-coordinate safe):
+    // exact long division, the same as fdiv, so beyond 2^53 a cell never
+    // lands in the bucket next to its zone's
+    def bLong(c: Column): Column = {
+      val v = c.cast("long")
+      call_function("div", v, lit(b)) - when(v % b < 0, 1L).otherwise(0L)
+    }
 
     val integralExtents = Seq("x_min", "x_max", "y_min", "y_max").forall { n =>
       zones.schema.find(_.name == n).map(_.dataType).exists {
@@ -257,8 +262,8 @@ object Raster {
         val zoneBuckets =
           zones.sparkSession.createDataFrame(bucketRowsLocal.asJava, bucketSchema)
         cellsDf
-          .withColumn("__bx", bCol(col("x")))
-          .withColumn("__by", bCol(col("y")))
+          .withColumn("__bx", bLong(col("x")))
+          .withColumn("__by", bLong(col("y")))
           .join(broadcast(zoneBuckets), Seq("__bx", "__by"))
           .filter(boxPred)
       } else {
@@ -267,11 +272,11 @@ object Raster {
         // whose residual runs on the original zone columns
         val zoneBuckets = zones
           .filter(col("x_max") > col("x_min") && col("y_max") > col("y_min"))
-          .withColumn("__bx", explode(sequence(bCol(col("x_min")), bCol(col("x_max") - 1))))
-          .withColumn("__by", explode(sequence(bCol(col("y_min")), bCol(col("y_max") - 1))))
+          .withColumn("__bx", explode(sequence(bLong(col("x_min")), bLong(col("x_max") - 1))))
+          .withColumn("__by", explode(sequence(bLong(col("y_min")), bLong(col("y_max") - 1))))
         cellsDf
-          .withColumn("__bx", bCol(col("x")))
-          .withColumn("__by", bCol(col("y")))
+          .withColumn("__bx", bLong(col("x")))
+          .withColumn("__by", bLong(col("y")))
           .join(broadcast(zoneBuckets), Seq("__bx", "__by"))
           .filter(boxPred)
       }

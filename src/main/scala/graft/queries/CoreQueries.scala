@@ -296,7 +296,7 @@ object CoreQueries {
       |ORDER BY 1""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
-    QueryDef("q_catalog_enrich", catalogEnrich, Some(catalogEnrichSql), headline = true),
+    QueryDef("q_catalog_enrich", catalogEnrich, Some(catalogEnrichSql)),
     QueryDef("q_last_point", lastPoint, Some(lastPointSql)),
     QueryDef("q_salted_join", saltedJoin, Some(saltedJoinSql)),
     QueryDef("q_location_code", locationCode, Some(locationCodeSql)),

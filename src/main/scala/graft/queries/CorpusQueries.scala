@@ -1839,7 +1839,7 @@ object CorpusQueries {
     QueryDef("q_leakage_split", leakageSplit, Some(leakageSplitSql)),
     QueryDef("q_leakage_split_serve", leakageSplitServe, Some(leakageSplitSql)),
     QueryDef("q_dsir_screen", dsirScreen, Some(dsirScreenSql)),
-    QueryDef("q_dedup_clusters", dedupClusters, Some(dedupClustersSql), headline = true),
+    QueryDef("q_dedup_clusters", dedupClusters, Some(dedupClustersSql)),
     QueryDef("q_semdedup", semDedup, Some(semDedupSql)),
     QueryDef("q_semdedup_incr", semDedupIncr, Some(semDedupIncrSql)),
     QueryDef("q_oov_score", oovScore, Some(oovScoreSql)),

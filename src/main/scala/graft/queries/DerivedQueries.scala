@@ -217,10 +217,10 @@ object DerivedQueries {
       |ORDER BY u.user_id, bin_us""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
-    QueryDef("q_corrections", corrections, Some(correctionsSql), headline = true),
+    QueryDef("q_corrections", corrections, Some(correctionsSql)),
     QueryDef("q_priority_coalesce", priorityCoalesce, Some(priorityCoalesceSql)),
     QueryDef("q_expression_compound", expressionCompound, Some(expressionCompoundSql)),
-    QueryDef("q_tolerance_asof", toleranceAsOf, Some(toleranceAsOfSql), headline = true),
+    QueryDef("q_tolerance_asof", toleranceAsOf, Some(toleranceAsOfSql)),
     QueryDef("q_resample", resample, Some(resampleSql))
   )
 }

@@ -1828,6 +1828,6 @@ object IngestQueries {
     QueryDef("q_rls_filter", rlsFilter, Some(rlsFilterSql)),
     QueryDef("q_topk_context", topkContext, Some(topkContextSql)),
     QueryDef("q_set_ops", setOps, Some(setOpsSql)),
-    QueryDef("q_donor_offsets", donorOffsets, Some(donorOffsetsSql), headline = true)
+    QueryDef("q_donor_offsets", donorOffsets, Some(donorOffsetsSql))
   )
 }

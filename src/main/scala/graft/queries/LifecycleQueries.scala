@@ -744,13 +744,13 @@ object LifecycleQueries {
       |ORDER BY bin_us""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
-    QueryDef("q_daily_update_e2e", dailyUpdateE2e, Some(dailyUpdateE2eSql), headline = true),
-    QueryDef("q_corrected_read_e2e", correctedReadE2e, Some(correctedReadE2eSql), headline = true),
+    QueryDef("q_daily_update_e2e", dailyUpdateE2e, Some(dailyUpdateE2eSql)),
+    QueryDef("q_corrected_read_e2e", correctedReadE2e, Some(correctedReadE2eSql)),
     QueryDef("q_asof_snapshot", asOfSnapshot, Some(asOfSnapshotSql)),
     QueryDef("q_corrected_asof", correctedAsOf, Some(correctedAsOfSql)),
     QueryDef("q_compound_closure", compoundClosure, Some(compoundClosureSql)),
     QueryDef("q_guidelines", guidelines, Some(guidelinesSql)),
-    QueryDef("q_increments", increments, Some(incrementsSql), headline = true),
+    QueryDef("q_increments", increments, Some(incrementsSql)),
     QueryDef("q_period_infer", periodInfer, Some(periodInferSql))
   )
 }

@@ -227,7 +227,7 @@ object PipelineQueries {
        |ORDER BY shard, pos""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
-    QueryDef("q_corpus_select", corpusSelect, Some(corpusSelectSql), headline = true),
+    QueryDef("q_corpus_select", corpusSelect, Some(corpusSelectSql)),
     QueryDef("q_sessionize", sessionize, Some(sessionizeSql)),
     QueryDef("q_censored_stats", censoredStats, Some(censoredStatsSql)),
     QueryDef("q_deterministic_split", deterministicSplit, Some(deterministicSplitSql)),

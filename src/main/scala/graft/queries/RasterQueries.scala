@@ -795,7 +795,7 @@ object RasterQueries {
 
   def defs: Seq[QueryDef] = Seq(
     QueryDef("q_image_series", imageSeries, Some(imageSeriesSql)),
-    QueryDef("q_raster_zonal", rasterZonal, Some(rasterZonalSql), headline = true),
+    QueryDef("q_raster_zonal", rasterZonal, Some(rasterZonalSql)),
     QueryDef("q_raster_pyramid", rasterPyramid, Some(rasterPyramidSql)),
     QueryDef("q_raster_supersede", rasterSupersede, Some(rasterSupersedeSql)),
     QueryDef("q_image_latest", imageLatest, Some(imageLatestSql)),

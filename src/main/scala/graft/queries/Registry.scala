@@ -10,9 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** headline queries are timed by Bench */
-    headline: Boolean = false
+    oracle: Option[String]
 )
 
 object Registry {

@@ -125,12 +125,7 @@ object StatsQueries {
 
   def defs: Seq[QueryDef] = Seq(
     QueryDef("q_survey_offset", surveyOffset, Some(surveyOffsetSql)),
-    QueryDef("q_doy_stats", doyStats(None), Some(doySql("")), headline = true),
-    QueryDef(
-      "q_doy_stats_rolling",
-      doyStats(Some(3)),
-      Some(doySql(" AND p.date >= t.date - INTERVAL 3 YEAR")),
-      headline = true
-    )
+    QueryDef("q_doy_stats", doyStats(None), Some(doySql(""))),
+    QueryDef("q_doy_stats_rolling", doyStats(Some(3)), Some(doySql(" AND p.date >= t.date - INTERVAL 3 YEAR")))
   )
 }

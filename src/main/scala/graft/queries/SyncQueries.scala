@@ -724,7 +724,7 @@ object SyncQueries {
     QueryDef("q_locf", locf, Some(locfSql)),
     QueryDef("q_spline_fill", splineFillQ, Some(splineFillSql)),
     QueryDef("q_json_extract", jsonExtract, Some(jsonExtractSql)),
-    QueryDef("q_sync_diff", syncDiff, Some(syncDiffSql), headline = true),
+    QueryDef("q_sync_diff", syncDiff, Some(syncDiffSql)),
     QueryDef("q_discrete_sync", discreteSync, Some(discreteSyncSql))
   )
 }

@@ -1494,14 +1494,14 @@ object TextMlQueries {
     QueryDef("q_corpus_funnel", corpusFunnel, Some(corpusFunnelSql)),
     QueryDef("q_fingerprint", fingerprint, Some(fingerprintSql)),
     QueryDef("q_stream_dedup", streamDedup, Some(streamDedupSql)),
-    QueryDef("q_ngram_jaccard", ngramJaccard, Some(ngramJaccardSql), headline = true),
+    QueryDef("q_ngram_jaccard", ngramJaccard, Some(ngramJaccardSql)),
     QueryDef("q_containment", containment, Some(containmentSql)),
-    QueryDef("q_minhash_lsh", minHashLsh, Some(minHashLshSql), headline = true),
-    QueryDef("q_simhash", simHash, Some(simHashSql), headline = true),
-    QueryDef("q_cosine_topk", cosineTopK, Some(cosineTopKSql), headline = true),
+    QueryDef("q_minhash_lsh", minHashLsh, Some(minHashLshSql)),
+    QueryDef("q_simhash", simHash, Some(simHashSql)),
+    QueryDef("q_cosine_topk", cosineTopK, Some(cosineTopKSql)),
     QueryDef("q_embed_neardup", embedNearDup, Some(embedNearDupSql)),
     QueryDef("q_embed_neardup_blocked", embedNearDupBlocked, Some(embedNearDupBlockedSql)),
-    QueryDef("q_ann_lsh", annLsh, Some(annLshSql), headline = true),
+    QueryDef("q_ann_lsh", annLsh, Some(annLshSql)),
     QueryDef("q_lsh_buckets", lshBuckets, Some(lshBucketsSql)),
     QueryDef("q_ivf_ann", ivfAnn, Some(ivfAnnSql)),
     QueryDef("q_ivf_ann_serve", ivfAnnServe, Some(ivfAnnSql)),

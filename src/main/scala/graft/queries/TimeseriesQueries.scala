@@ -186,8 +186,8 @@ object TimeseriesQueries {
   }
 
   def defs: Seq[QueryDef] = Seq(
-    QueryDef("q_daily_agg", dailyAgg, Some(dailyAggSql), headline = true),
+    QueryDef("q_daily_agg", dailyAgg, Some(dailyAggSql)),
     QueryDef("q_incremental_daily", incrementalDaily, Some(incrementalDailySql)),
-    QueryDef("q_grade_range_join", gradeRangeJoin, Some(gradeRangeJoinSql), headline = true)
+    QueryDef("q_grade_range_join", gradeRangeJoin, Some(gradeRangeJoinSql))
   )
 }

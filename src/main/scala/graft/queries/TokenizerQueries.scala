@@ -265,7 +265,7 @@ object TokenizerQueries {
   def defs: Seq[QueryDef] = Seq(
     QueryDef("q_bpe_train", bpeTrain, Some(bpeTrainSql)),
     QueryDef("q_bpe_encode", bpeEncode, Some(bpeEncodeSql)),
-    QueryDef("q_bm25_search", bm25Search, Some(bm25SearchSql), headline = true),
-    QueryDef("q_classifier_score", classifierScore, Some(classifierScoreSql), headline = true)
+    QueryDef("q_bm25_search", bm25Search, Some(bm25SearchSql)),
+    QueryDef("q_classifier_score", classifierScore, Some(classifierScoreSql))
   )
 }

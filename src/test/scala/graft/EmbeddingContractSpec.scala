@@ -54,7 +54,6 @@ class EmbeddingContractSpec extends SparkSpec {
   }
 
   test("VecNorm2: finite-positive norm² or NULL, across every degenerate class") {
-    VectorOps.register(spark)
     val fin = Seq(Some(3.0), Some(4.0)).map(x => x: Option[Double])
     val df = vecDf(Seq(
       1L -> fin,

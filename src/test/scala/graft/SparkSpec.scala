@@ -10,29 +10,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    TempRoots.initJvmScratch()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Same local-mode heartbeat hardening as Bench (see its scaladoc):
-      // executor and driver share one JVM here, so a heartbeat "timeout"
-      // can only mean the process was busy (host stall / GC pause under
-      // the 928-test suite + concurrent driver load), never a lost node —
-      // yet HeartbeatReceiver removes the sole executor and every later
-      // spec dies with "SparkContext was shut down" (r16: q_dsir_select
-      // spec killed ~5,368 jobs into the suite; r15 saw the same class
-      // under sf10 load).
-      .config("spark.network.timeout", "3600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.warehouse.dir", TempRoots.warehouseDir)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(4)
 }

@@ -8,7 +8,6 @@ class SimHash64Spec extends SparkSpec {
 
   test("simhash64 expression: identical token sets equal; near-dups closer than unrelated") {
     import spark.implicits._
-    SimHash64.register(spark)
     val df = Seq(
       (1L, "the quick brown fox jumps over the lazy dog every day"),
       (2L, "the quick brown fox jumps over the lazy dog every night"),
@@ -30,7 +29,6 @@ class SimHash64Spec extends SparkSpec {
 
   test("simhash64 rejects non-array-of-string input") {
     import spark.implicits._
-    SimHash64.register(spark)
     val e = intercept[Exception] {
       Seq(1L).toDF("x").select(SimHash64.simhash64(col("x"))).collect()
     }

@@ -398,7 +398,6 @@ class MlSpec extends SparkSpec {
 
   test("native vec_dot is bit-identical to the interpreted HOF dot") {
     import spark.implicits._
-    graft.functions.VectorOps.register(spark)
     val vecs = Similarity.hyperplanes(50, 64, seed = 99L)
     val df = vecs.zipWithIndex
       .map { case (v, i) => (i.toLong, v.toSeq) }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.SparkSessionExtensions
 
 class CensoredStatsSpec extends SparkSpec {
 
@@ -28,9 +27,5 @@ class CensoredStatsSpec extends SparkSpec {
     assert(zinc.getAs[Double]("max_dl") == 0.02)
     assert(out("pH").getAs[Long]("n_censored") == 1)
     assert(!out.contains("orphan"))
-  }
-
-  test("GraftExtensions wires the native function injections without error") {
-    new graft.GraftExtensions().apply(new SparkSessionExtensions)
   }
 }

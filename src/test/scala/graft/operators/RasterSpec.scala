@@ -44,7 +44,6 @@ class RasterSpec extends SparkSpec {
 
   test("tile_pack(pos, value) without a slot count fails with a descriptive error") {
     import spark.implicits._
-    graft.functions.TilePack.register(spark)
     Seq((0, 1.0)).toDF("pos", "value").createOrReplaceTempView("tile_pack_arity")
     val e = intercept[Exception](spark.sql("SELECT tile_pack(pos, value) FROM tile_pack_arity").collect())
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
@@ -131,6 +130,18 @@ class RasterSpec extends SparkSpec {
     val b = Raster.zonalStatsPolygon(cells, poly).select("zone_id", "n_cells", "sum_scaled").collect()
     assert(a.sameElements(b))
     assert(a.head.getLong(1) == 8L * 7L)
+  }
+
+  test("zonal stats keeps every cell of its zone beyond 2^53") {
+    import spark.implicits._
+    // ten cells fill a 10-wide zone starting at 2^53 + 18; the bucket
+    // side is 10. The last cell, 2^53 + 27, rounds up to 2^53 + 28 as a
+    // double, which would put it in the bucket after its zone's.
+    val x0 = (1L << 53) + 18
+    val cells = (0L until 10L).map(i => (x0 + i, 5L, 1.0)).toDF("x", "y", "value")
+    val zones = Seq(("z1", x0, x0 + 10, 0L, 10L)).toDF("zone_id", "x_min", "x_max", "y_min", "y_max")
+    val out = Raster.zonalStats(cells, zones).select("zone_id", "n_cells").collect()
+    assert(out.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("z1", 10L)))
   }
 
   test("pyramidLevel means 4x4 blocks; writeTiles lays out by series/valid_date") {

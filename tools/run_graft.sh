@@ -15,8 +15,6 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 MAIN="$1"; shift
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "graft.$MAIN" "$@"
