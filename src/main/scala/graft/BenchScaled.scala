@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * 16 IVF lists, 7x8-bit bands). The library parameterizes all of it;
   * this main MEASURES the parameterized path with geometry derived
   * from the corpus size, at the gate SF and at a rehearsal SF, so the
-  * 100x claim is measured instead of argued (VERDICT r8 item 1).
+  * 100x claim is measured instead of argued.
   *
   * Geometry rules (applied identically at every SF, from corpus
   * counts — never frozen):
@@ -82,9 +82,9 @@ object BenchScaled {
   //
   // Pixels are a splitmix64 mix of the FULL (group, x, y) key: dHash
   // compares neighboring pixels, so any structure shared between
-  // groups (the round-9 fixture's `(x*y*(g+3)) % 97` term collapsed
-  // for groups equal mod 97, and its `g*37` term is a constant
-  // brightness shift dHash is invariant to) makes cross-group images
+  // groups (a `(x*y*(g+3)) % 97` pixel term collapses for groups
+  // equal mod 97, and a `g*37` term is a constant brightness shift
+  // dHash is invariant to) makes cross-group images
   // hash-identical and inflates output ~13x past the designed
   // C(50,2)*groups. Per-(g,x,y) mixing gives each group an
   // independent ~uniform 56-bit dHash: expected cross-group
@@ -169,9 +169,9 @@ object BenchScaled {
       // ANN rows hold the QUERY WORKLOAD CONSTANT across SFs (~200
       // queries at any corpus size): a deployment doesn't issue more
       // queries because the corpus grew, and scaling both at once
-      // conflates corpus growth with workload growth (round 9's x39.8
-      // measured 20 base queries vs 2000 scaled ones). The scaled/base
-      // ratio below therefore isolates corpus growth; per-query
+      // conflates corpus growth with workload growth (a x39.8 ratio
+      // once measured 20 base queries vs 2000 scaled ones). The
+      // scaled/base ratio below therefore isolates corpus growth; per-query
       // throughput is reported separately as queries/sec.
       "q_ivf_ann" -> (() =>
         Similarity
@@ -263,7 +263,7 @@ object BenchScaled {
     require(!maxRow.isNullAt(0), s"scaled stream screen: no incoming docs under $d")
     val midVal = maxRow.getLong(0) / 2
     new java.io.File(src).mkdirs()
-    // q_stream_screen's round-10 shape: ONE AvailableNow run, three
+    // q_stream_screen's shape: ONE AvailableNow run, three
     // pre-landed file batches as sequential micro-batches via
     // maxFilesPerTrigger — the re-crawl still arrives after the first
     // copy, so state suppression is exercised without a second query
@@ -294,22 +294,8 @@ object BenchScaled {
     incoming.filter(col("doc_id") <= midVal).coalesce(1).write.mode("append").parquet(src)
     drain()
     val n = s.read.parquet(sink).count()
-    rmTree(base)
+    TempRoots.rmTree(base)
     n
-  }
-
-  private def rmTree(path: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      val all = scala.util.Using
-        .resource(java.nio.file.Files.walk(root))(_.iterator().asScala.toSeq)
-        .reverse
-      all.foreach(p =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: Throwable => () }
-      )
-    }
   }
 
   // ---- recall measurements ----------------------------------------
@@ -341,7 +327,7 @@ object BenchScaled {
         .select(col("query_id"), col("neighbor_id"))
         .localCheckpoint(true)
       // untimed warm-up per level (mirrors Bench.timeQuery): without it
-      // the FIRST level absorbs JIT/scan warm-up (round 9's base curve
+      // the FIRST level absorbs JIT/scan warm-up (a base curve once
       // read 13.1 s at nProbe 4 vs 0.9 s at 9) and levels aren't
       // comparable; min-of-2 then damps the residual cross-level
       // JIT drift a single warm-up leaves behind
@@ -431,30 +417,16 @@ object BenchScaled {
 
   private def fmt(d: Double): String = f"$d%.3f"
 
-  def main(args: Array[String]): Unit =
-    try run()
-    catch {
-      case e: Throwable =>
-        val chain = Iterator
-          .iterate(e)(_.getCause)
-          .takeWhile(_ != null)
-          .map(t => s"${t.getClass.getName}: ${t.getMessage}")
-          .toSeq
-        // bracket the trace with the chain (Bench.main's discipline):
-        // harness captures truncate from either end
-        System.err.println("BENCH-SCALED FAILED — root cause chain (innermost last):")
-        chain.foreach(m => System.err.println(s"  $m"))
-        e.printStackTrace()
-        System.err.println("BENCH-SCALED FAILED — root cause chain (innermost last):")
-        chain.foreach(m => System.err.println(s"  $m"))
-        sys.exit(1)
-    }
+  /** Timed repetitions per row, after one untimed warm-up. */
+  private val Reps = 2
+
+  def main(args: Array[String]): Unit = Bench.reportingFailure("BENCH-SCALED")(run())
 
   private def run(): Unit = {
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/bench-tmp/sf10")
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_BASE_SF_DIR", "/root/testdata/sf0.1")
-    // a filled disk killed two round-8 rehearsal attempts undiagnosed:
-    // refuse to start without headroom for shuffle spill + checkpoints
+    // a filled disk kills a rehearsal undiagnosed: refuse to start
+    // without headroom for shuffle spill + checkpoints
     val freeGb = TempRoots.freeBytes / (1L << 30)
     require(freeGb >= 15, s"scaled rehearsal needs >=15 GB free, have $freeGb GB")
     val spark = Session.local(Session.cores)
@@ -569,16 +541,15 @@ object BenchScaled {
       // warm-up then median of reps. Single-shot timings made the
       // BASE leg (0.3-1 s rows) swing with JIT/session state, and a
       // deflated denominator inflates the scaled/base ratio more than
-      // any real scaling effect (the round-10 clean rerun measured
+      // any real scaling effect (a clean rerun measured
       // q_semdedup_incr base 2.78 s -> 0.57 s on identical code).
-      val reps = sys.env.getOrElse("SPARK_GRAFT_SCALED_REPS", "2").toInt.max(1)
       val times = scala.collection.mutable.LinkedHashMap[String, (Double, Long)]()
       scaledQueries(spark, dir, g, ruleProbe, codebook, annQueryMod, ivfIndex, ivfPqIndex)
         .foreach {
         case (name, run) =>
           Bench.resetSession(spark)
           run() // untimed warm-up
-          val (timings, ns) = (1 to reps).map { _ =>
+          val (timings, ns) = (1 to Reps).map { _ =>
             val t0 = System.nanoTime()
             val n = run()
             ((System.nanoTime() - t0) / 1e9, n)
@@ -640,8 +611,8 @@ object BenchScaled {
     )
     // the excluded build rows' per-unit factors, emitted on their own
     // so a regression in the inline-ANN build path stays
-    // machine-visible even though criterion_met doesn't bar it
-    // (ADVICE r11: an exemption without its own number is a blind spot)
+    // machine-visible even though criterion_met doesn't bar it (an
+    // exemption without its own number is a blind spot)
     out("inline_ann_build_per_unit") = ratios
       .filter(r => inlineAnn(r._1))
       .map { case (q, r) => s""""$q": ${fmt(r / dataRatio)}""" }

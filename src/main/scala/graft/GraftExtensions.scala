@@ -8,7 +8,7 @@ import graft.functions._
 /** Makes the engine's native expressions callable from SQL.
   * [[Session.local]] installs it; any other session gets it with
   * `spark.sql.extensions=graft.GraftExtensions`. The Column APIs
-  * (`VectorOps.dot`, `SimHash64.simhash64`, ...) build their
+  * (`VectorOps.dot`, `PortableSimHash.of`, ...) build their
   * expressions directly and need no extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -39,7 +39,6 @@ object GraftExtensions {
   }
 
   val functions: Seq[NativeFunction] = Seq(
-    NativeFunction("simhash64", classOf[SimHash64], Seq("tokens"), a => SimHash64(a(0))),
     NativeFunction("portable_simhash", classOf[PortableSimHash], Seq("tokens"), a => PortableSimHash(a(0))),
     NativeFunction("unicode_tokens", classOf[UnicodeTokens], Seq("text"), a => UnicodeTokens(a(0))),
     NativeFunction("distinct_shingles", classOf[DistinctShingles], Seq("tokens", "n"), a => DistinctShingles(a(0), a(1))),

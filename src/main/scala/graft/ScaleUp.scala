@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** Scale-rehearsal data generator: replicate an sf directory by an
   * integer factor into consistent, non-degenerate shards so the bench
   * can be run one order of magnitude above the gate SF (the sf1
-  * rehearsal — VERDICT r5 item 4). NOT part of the engine — a dev
-  * tool, like Bench/Verify.
+  * rehearsal). NOT part of the engine — a dev tool, like Bench/Verify.
   *
   * Replica k (k=0 is the identity copy) is an independent consistent
   * shard: every key column shifts by k*(max+1) so foreign-key joins
@@ -44,27 +43,22 @@ import org.apache.spark.sql.functions._
   *     stays CONSTANT as the factor grows. Token boundaries, lengths
   *     and counts are preserved exactly like caesar. This is the
   *     constant-density leg that separates "output got quadratically
-  *     bigger" from "the engine scaled superlinearly" (VERDICT r11
-  *     item 3).
-  *   - `perm-ml`: `perm` plus a deterministic MULTILINGUAL slice
-  *     (VERDICT r14 item 5): 20% of docs (by xxhash64(doc_id) mod 20)
-  *     transliterate letter-for-letter into a non-Latin script — 10%
-  *     CJK, 5% Cyrillic, 5% Arabic. Char counts are preserved 1:1,
-  *     but the CJK slice's token count becomes ~ its character count
+  *     bigger" from "the engine scaled superlinearly".
+  *   - `perm-ml`: `perm` plus a deterministic MULTILINGUAL slice:
+  *     20% of docs (by xxhash64(doc_id) mod 20) transliterate
+  *     letter-for-letter into a non-Latin script — 10% CJK, 5%
+  *     Cyrillic, 5% Arabic. Char counts are preserved 1:1, but the CJK
+  *     slice's token count becomes ~ its character count
   *     (char-fallback) and its shingle volume grows accordingly — the
   *     real cost profile of a mixed-language crawl, which the ASCII
   *     corpora never measured.
   *
-  * STANDING PROTOCOL for the sf10 rehearsal (round 13, from VERDICT
-  * r12 item 6): every sf10 refresh runs BOTH legs — `caesar` (the
-  * duplicate-density workload: planted exact replicas stress the
-  * dedup/pair family's output path) AND `perm` (the constant-density
-  * workload: the engine-scaling measurement) — and `BENCH_SF10.json`
-  * reports the pair-family rows under both, so the >30x pair-row tail
-  * never has to be re-attributed. Headlines additionally quote the
-  * calibration-normalized ratio (subtotal ÷ cpu_calibration
-  * single-thread seconds, VERDICT r12 item 3) next to the raw one, so
-  * a host-speed swing between sessions is self-explaining.
+  * The sf10 rehearsal runs BOTH legs — `caesar` (the duplicate-density
+  * workload: planted exact replicas stress the dedup/pair family's
+  * output path) AND `perm` (the constant-density workload: the
+  * engine-scaling measurement) — and `BENCH_SF10.json` reports the
+  * pair-family rows under both, so the >30x pair-row tail is
+  * attributed to output volume, not engine scaling.
   *
   * Usage: runMain graft.ScaleUp <srcSfDir> <outDir> <factor> [caesar|perm|perm-ml]
   */

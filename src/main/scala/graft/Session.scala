@@ -38,7 +38,10 @@ object Session {
       .config("spark.executor.heartbeatInterval", "60s")
       // ContextCleaner frees shuffle files only when the driver GCs; with
       // a large heap GC may never run, and a long multi-query session
-      // keeps every query's shuffle spill on disk until it fills.
+      // keeps every query's shuffle spill on disk until it fills. Side
+      // effect: DAGScheduler may log non-fatal "Failed to update
+      // accumulator" ERRORs when a GC reclaims a finished query's
+      // SQLMetric accumulators before its late task-end events arrive.
       .config("spark.cleaner.periodicGC.interval", "5min")
       .config("spark.sql.warehouse.dir", TempRoots.warehouseDir)
       .withExtensions(new GraftExtensions)

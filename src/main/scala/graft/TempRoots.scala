@@ -6,9 +6,8 @@ package graft
   * checkpoints, persisted band indexes, scaled-rehearsal streams)
   * historically lived under `/tmp` via `Files.createTempDirectory`.
   * `/tmp` is shared with the host session and subject to external
-  * reapers — the rounds 8–9 SWOB bench transient (the fixture
-  * vanishing mid-session after its existence was positively
-  * `require`d) had `/tmp` as the prime suspect. Rooting scratch under
+  * reapers — a SWOB fixture once vanished mid-session after its
+  * existence was positively `require`d. Rooting scratch under
   * the repo's own `target/bench-tmp` removes that entire failure
   * class: nothing outside this JVM touches the tree, and `sbt clean`
   * reclaims it.
@@ -31,6 +30,19 @@ object TempRoots {
   def newDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(root, prefix)
 
+  /** Recursive best-effort delete of a scratch tree, deepest paths
+    * first; a missing `path` is a no-op.
+    */
+  def rmTree(path: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val top = Paths.get(path)
+    if (Files.exists(top)) {
+      val all = scala.util.Using.resource(Files.walk(top))(_.iterator().asScala.toSeq).reverse
+      all.foreach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
+    }
+  }
+
   /** Where every engine-owned SparkSession points
     * `spark.sql.warehouse.dir` — by default Spark creates
     * `spark-warehouse/` in user.dir (the repo root), outside the
@@ -43,15 +55,15 @@ object TempRoots {
     * unless `derby.stream.error.file` says otherwise. State
     * accumulating outside [[root]] is invisible to `sbt clean` and is
     * exactly the slow systemic cost the bench-noise postmortems go
-    * looking for (VERDICT r11 item 5).
+    * looking for.
     */
   def initJvmScratch(): Unit =
     if (!sys.props.contains("derby.stream.error.file"))
       sys.props("derby.stream.error.file") = root.resolve("derby.log").toString
 
   /** Free bytes on the filesystem holding [[root]] — rehearsal-scale
-    * runs check this before generating multi-GB fixtures (round 8's
-    * sf10 attempts died twice to a filled disk with no diagnosis).
+    * runs check this before generating multi-GB fixtures (a filled
+    * disk otherwise kills an sf10 run with no diagnosis).
     */
   def freeBytes: Long =
     try root.toFile.getUsableSpace

@@ -24,8 +24,7 @@ object Verify {
       }
     }
     // A failed dump silently VANISHES from the driver's correctness
-    // artifact (round 6 lost 10 queries this way and the round still
-    // read "all pass"). Make the loss impossible to miss with a
+    // artifact, which then still reads "all pass". Make the loss impossible to miss with a
     // summary line the driver's log capture keeps. No extra files in
     // outDir: the driver treats its contents as query dumps.
     if (failures.nonEmpty) {

@@ -34,10 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * with zero tokens — callers must `.filter(isNotNull)` to keep that
   * contract (Dedup.simHash does).
   *
-  * The existing [[SimHash64]] is the production (xxhash-family)
-  * one-pass kernel; this is its oracle-portable twin — DuckDB
-  * recomputes the same value from md5, so hash-checked queries keep
-  * passing.
+  * Portable: DuckDB recomputes the same value from md5, so
+  * hash-checked queries keep passing.
   */
 case class PortableSimHash(child: Expression) extends UnaryExpression {
 

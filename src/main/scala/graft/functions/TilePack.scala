@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 
 /** Fixed-slot positional tile aggregate: `tile_pack(pos, value, slots)`
   * assembles the dense row-major `values` array of one raster tile in a
-  * single aggregate, replacing the r16 formulation
+  * single aggregate, replacing the formulation
   * {{{
   *   array_sort(collect_list(struct(pos, value)))            // __p
   *   when(size(__p) === w*h, transform(__p, _.value))

@@ -90,8 +90,8 @@ object AddDiscrete {
 
     // ---- id assignment above the existing max: range-partitioned
     // rank (SeqIds), not a single-task global window ----------------
-    // smallBatch (skip globalRank's range-repartition + checkpoint;
-    // round 9 measured it costing ~0.4 s per CRUD chain) is only safe
+    // smallBatch (skip globalRank's range-repartition + checkpoint,
+    // measured at ~0.4 s per CRUD chain) is only safe
     // when the batch truly is dimension-sized — addACDiscrete is a
     // manual upload in the reference, but nothing here enforces that,
     // so gate the hatch on the MEASURED batch size instead of the

@@ -38,9 +38,9 @@ object Dedup {
     * repartition by the doc id so the projection runs at full width.
     * At real scale the scan already has more partitions than cores and
     * this is a NO-OP — no Exchange enters the plan (guide §2.5: fix
-    * input under-parallelism right after the read, and §2.4: the r16
-    * kernels removed the .distinct()/groupBy Exchanges that used to
-    * re-spread the stream as a side effect; this restores the width
+    * input under-parallelism right after the read, and §2.4: the
+    * one-pass kernels removed the .distinct()/groupBy Exchanges that
+    * used to re-spread the stream as a side effect; this restores the width
     * without re-shuffling the exploded stream). Keyed repartition (not
     * round-robin) so a downstream groupBy(idCol) can reuse the
     * partitioning, and no sort-before-repartition cost.
@@ -51,10 +51,10 @@ object Dedup {
       val target = df.sparkSession.sparkContext.defaultParallelism
       // physical planning only — no job: these inputs are scans
       val cur = df.queryExecution.toRdd.getNumPartitions
-      // pin=true uses an EXPLICIT partition count (r17): repartition(key)
+      // pin=true uses an EXPLICIT partition count: repartition(key)
       // without a count is REPARTITION_BY_COL, which AQE's coalescing is
       // allowed to fold back down — and does, because the raw-docs
-      // shuffle is tiny in BYTES (the r16 q_containment regression: the
+      // shuffle is tiny in BYTES (the q_containment regression: the
       // tokenize+shingle kernel and everything under jaccardPairs'
       // localCheckpoint ran at parallelism ~1, run_s ~= wall). With a
       // count the origin is REPARTITION_BY_NUM, which AQE must preserve.
@@ -83,7 +83,7 @@ object Dedup {
     * One native projection (`distinct_shingles`, codegen) + explode:
     * distinctness is a per-document property, established inside the
     * row — no `.distinct()` Exchange over the shingle stream, which
-    * was the widest shuffle of every dedup pipeline (r16; the old HOF
+    * was the widest shuffle of every dedup pipeline (the old HOF
     * chain + cross-row distinct lives in the expression's scaladoc).
     * Requires unique doc ids (every corpus table and caller has them);
     * with duplicate ids the old form also deduped across copies.
@@ -92,7 +92,7 @@ object Dedup {
     // pinned: everything downstream (the df cap, the a×b inverted-index
     // join, the sizes aggregate — all under jaccardPairs'/
     // containmentPairs' localCheckpoint) inherits this width, and the
-    // serial collapse of exactly that chain was the r16 q_containment
+    // serial collapse of exactly that chain was the q_containment
     // regression
     spread(docs, col(idCol), pin = true).select(
       col(idCol),
@@ -134,7 +134,7 @@ object Dedup {
     // co-occur on a shingle without being a candidate PAIR). At 100 TB
     // this is the difference between scoring every co-shingle pair
     // under the df cap and scoring only what LSH already shortlisted.
-    // The sizes aggregate gets the same restriction (r16): n_sh is
+    // The sizes aggregate gets the same restriction: n_sh is
     // only ever read through the inner join on pair endpoints, which
     // are all candidate ids — so count only candidate docs' shingles
     // instead of aggregating the whole corpus stream (uncapped counts,
@@ -245,7 +245,7 @@ object Dedup {
       .distinct()
 
     // ---- exact verification over candidate pairs only ----------------
-    // same discipline as jaccardPairs (round-5 verdict): restrict the
+    // same discipline as jaccardPairs: restrict the
     // SHINGLE FRAME to candidate doc ids BEFORE the a x b join — docs
     // outside every candidate pair contribute no join rows at all; the
     // pair-level semi-join stays as the final filter
@@ -343,7 +343,7 @@ object Dedup {
   /** [[minHashSignatures]] (PortableMd5 family) computed straight from
     * the documents frame by the one-pass [[graft.functions.MinHashSig]]
     * kernel — a pure scan-side projection, no explode and no
-    * groupBy(doc) Exchange carrying the shingle stream (r16; the
+    * groupBy(doc) Exchange carrying the shingle stream (the
     * signature is a per-document property). Output schema matches the
     * aggregate form exactly: (idCol, mh0..mh{numPerm-1}), and a doc
     * with zero shingles has NO row in either form (the kernel returns
@@ -386,7 +386,7 @@ object Dedup {
     val r = numPerm / bands
     // band key = the r signature values themselves (array<long>), not
     // a concat_ws string: joining on 2 longs instead of building and
-    // hashing a ~20-char string per banded row (r16). Array equality
+    // hashing a ~20-char string per banded row. Array equality
     // is element-wise, so the candidate set is IDENTICAL to the
     // string form (concat_ws was injective over digit groups anyway).
     val bandStructs = (0 until bands).map { b =>
@@ -418,10 +418,10 @@ object Dedup {
       family: HashFamily = Xx64
   ): DataFrame = family match {
     case PortableMd5 =>
-      // signatures are a scan-side kernel projection (r16): the
-      // exploded shingle frame now feeds ONLY the verification join,
-      // so the outer localCheckpoint (a full extra write+read of the
-      // widest frame, on top of the one jaccardPairs takes) is gone
+      // signatures are a scan-side kernel projection: the exploded
+      // shingle frame feeds ONLY the verification join, so there is no
+      // outer localCheckpoint (a full extra write+read of the widest
+      // frame, on top of the one jaccardPairs takes)
       val sig = minHashSignaturesFused(docs, idCol, textCol, shingleN, numPerm)
       val cand = lshCandidates(sig, idCol, numPerm, bands)
       jaccardPairs(shingles(docs, idCol, textCol, shingleN), idCol, threshold, Some(cand))
@@ -439,7 +439,7 @@ object Dedup {
     * is positive. Near-dup docs land within small Hamming distance.
     */
   def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    // one-pass native kernel (r16): a doc's SimHash is a function of
+    // one-pass native kernel: a doc's SimHash is a function of
     // its own token multiset, so the old explode -> groupBy(doc, tok)
     // -> groupBy(doc) pipeline paid two hash-aggregate Exchanges (and
     // a ~112-expression aggregate tree per rep of Catalyst work) for
@@ -717,7 +717,7 @@ object Dedup {
     )
     requireGeometry(bandIndex, Seq("band", "ex_h"), nBands.toLong, "band")
     // no materialization: the simhash frame has exactly ONE consumer
-    // here (the banding explode), and since r16 it is a single-pass
+    // here (the banding explode), and it is a single-pass
     // kernel projection — a localCheckpoint would be a pure extra
     // write+read of every signature
     val sims = simHash(incoming, idCol, textCol)
@@ -908,9 +908,9 @@ object Dedup {
     var fp = fingerprint(edges)
     var iter = 0
     var converged = fp._1 == 0L
-    // Per-round localCheckpoint is the measured optimum: round 11
-    // A/B'd an every-2nd-round truncation cadence (skipped rounds'
-    // stars recompute inside the next round's job, saving one
+    // Per-round localCheckpoint is the measured optimum: an A/B of an
+    // every-2nd-round truncation cadence (skipped rounds' stars
+    // recompute inside the next round's job, saving one
     // checkpoint write+read per pair of rounds) in alternating fresh
     // JVMs at 5 reps — 3.76/4.19 s baseline vs 4.82 s variant at
     // sf0.1: the 3 recomputed shuffle stages cost more than the
@@ -940,18 +940,6 @@ object Dedup {
         coalesce(col("cluster_id"), col("node")).as("cluster_id")
       )
     (out, iter)
-  }
-
-  /** Production SimHash: the native one-pass Catalyst expression
-    * (`graft.functions.SimHash64`) — whole signature at scan time, no
-    * explode/shuffle. Semantics match [[simHash]] (different hash
-    * family, same near-dup behavior).
-    */
-  def simHashNative(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    docs.select(
-      col(idCol),
-      graft.functions.SimHash64.simhash64(TextStats.tokens(col(textCol))).as("simhash")
-    )
   }
 
   /** SemDeDup-style embedding near-dedup (Abbas et al. 2023,
@@ -1086,8 +1074,8 @@ object Dedup {
       // Similarity.normalizedVecs; the whole predicate is the one
       // fused VecNorm2 kernel). The scale is the fused NULL-safe
       // VecScaleInv kernel: one per-row guard, one codegen'd divide
-      // per element — no per-element when-branch (the r14 form cost
-      // the cosine/IVF bench family 20–86 %).
+      // per element — no per-element when-branch (the when-branch form
+      // cost the cosine/IVF bench family 20–86 %).
       .filter(VectorOps.norm2(col("v")).isNotNull)
       .withColumn("nv", VectorOps.scaleInv(col("v"), sqrt(VectorOps.norm2(col("v")))))
       .drop("v")

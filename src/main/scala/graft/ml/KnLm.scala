@@ -40,12 +40,11 @@ object KnLm {
     * positions).
     */
   def docBigrams(docs: DataFrame, idCol: String, toksCol: Column): DataFrame =
-    // NO spread here (r17, reverting the r16 addition): measured at
-    // gate SF, the repartition made every KN row SLOWER — the
-    // tokenize+explode this path pays is ~0.5 task-CPU-s, far below the
+    // NO spread here: measured at gate SF, a repartition made every
+    // KN row SLOWER — the tokenize+explode this path pays is ~0.5 task-CPU-s, far below the
     // cost of the extra Exchange plus the 32-wide downstream stages the
-    // spread drags in (q_kn_perplexity 1.04 -> 1.39-2.31 s across r16's
-    // two windows and this round's A/B; both KN consumers call this
+    // spread drags in (q_kn_perplexity 1.04 -> 1.39-2.31 s across
+    // three measurement windows; both KN consumers call this
     // once or twice per evaluation and groupBy re-spreads right after).
     // At real scale the scan is already wide and the spread would be a
     // no-op anyway, so removing it costs nothing there either.

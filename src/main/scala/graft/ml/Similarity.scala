@@ -42,7 +42,7 @@ object Similarity {
     * `when(sqrt(dot(a,a)*dot(b,b)) > 0, dot(a,b)/denom)`, inlined the
     * denominator twice and codegen CSE does not merge conditional
     * branch values — five walks per compared pair, which cost the
-    * cosine/IVF bench family 20–86 % in round 14.
+    * cosine/IVF bench family 20–86 %.
     */
   private def nativeCosine(a: Column, b: Column): Column =
     VectorOps.cosine(a, b)
@@ -618,7 +618,7 @@ object Similarity {
       // normalize or poison a ranking. The whole contract is the ONE
       // fused VecNorm2 kernel — `norm2(v).isNotNull` — so predicate
       // pushdown duplicates a single cheap walk, not a multi-conjunct
-      // norm recompute (the r14 lesson: codegen CSE does not merge
+      // norm recompute (codegen CSE does not merge
       // conditionally-evaluated copies). The scale is the fused
       // NULL-safe VecScaleInv kernel: one per-row guard, one codegen'd
       // divide per element.

@@ -45,7 +45,7 @@ object Raster {
       cells.schema.find(_.name == "value").map(_.dataType).contains(org.apache.spark.sql.types.DoubleType)
     val packed =
       if (valueIsDouble)
-        // Fixed-slot positional aggregate (r17, guide §5): one primitive
+        // Fixed-slot positional aggregate (guide §5): one primitive
         // double buffer per tile instead of collect_list(struct) +
         // array_sort + the per-position map-padding transform on edge
         // tiles — identical output (slot = cell value, padding NULL),
@@ -153,8 +153,8 @@ object Raster {
     val m = math.pow(10, scale)
     val boxPred = col("x") >= col("x_min") && col("x") < col("x_max") &&
       col("y") >= col("y_min") && col("y") < col("y_max")
-    // Grid-bucket equi-join instead of a pure-theta broadcast join
-    // (r16): the box predicate alone plans as BroadcastNestedLoopJoin,
+    // Grid-bucket equi-join instead of a pure-theta broadcast join:
+    // the box predicate alone plans as BroadcastNestedLoopJoin,
     // which evaluates the 4-comparison condition INTERPRETED for every
     // (cell, zone) pair — n_cells x n_zones evals, the dominant CPU of
     // the zonal row (~10 task-CPU-seconds at gate SF). Exploding each
@@ -230,13 +230,13 @@ object Raster {
     val joined =
       if (integralExtents) {
         // The bucket index is built DRIVER-SIDE from the rows the bucket
-        // sizing already collected (r17): zones is scanned exactly once
+        // sizing already collected: zones is scanned exactly once
         // per evaluation, the exploded-sequence projection disappears,
         // and the broadcast side is a LocalTableScan — built in the
         // driver without a job, so the plan the probe sees is the same
-        // every rep (the r16 form re-derived the bucket side from a
-        // second zones scan + two explodes per call, and the driver's
-        // gate run measured one 62.8 s / ~126 CPU-s outlier rep on it).
+        // every rep (re-deriving the bucket side from a second zones
+        // scan + two explodes per call measured one 62.8 s / ~126
+        // CPU-s outlier rep at gate SF).
         // With integral extents the long-cast residual predicate below
         // is value-identical to the original-column box predicate.
         val bucketRowsLocal = nonEmpty.toSeq.flatMap { r =>

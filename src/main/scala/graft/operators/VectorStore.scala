@@ -37,7 +37,6 @@ object VectorStore {
     val withExisting = typed.join(
       // distinct: existence is a fact, not a count — a repeated triple
       // in the store must not fan the incoming row out per store copy
-      // (the DocumentIngest round-13 fan-out class)
       existing
         .select(col("layer_name"), col("feature_name"), col("geom_type"))
         .distinct()

@@ -637,8 +637,8 @@ object CorpusQueries {
       .select(TextStats.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 1)
       // two chained generators instead of one concat of three
-      // array-of-struct lambdas: the concat shape was flagged (round 7)
-      // as a codegen-fallout suspect, and the nested explode keeps the
+      // array-of-struct lambdas: the concat shape was flagged as a
+      // codegen-fallout suspect, and the nested explode keeps the
       // same one-scan / one-(order,gram)-shuffle plan with a simpler
       // projection per row
       .select(col("toks"), explode(expr("sequence(1, least(3, size(toks)))")).as("order_n"))
@@ -1327,7 +1327,7 @@ object CorpusQueries {
     // copy within the batch — output identical to the multi-batch
     // shape (oracle-verified both ways). A micro-batch costs ~a query
     // startup (replan + state/sink commits, ~1.2 s at gate SF;
-    // round-11 A/B: 4.00-4.10 s at 2 batches vs 3.34-3.53 s at 1), so
+    // A/B: 4.00-4.10 s at 2 batches vs 3.34-3.53 s at 1), so
     // the row times the screen itself; CROSS-batch suppression and
     // checkpoint restart are StreamingSpec's job, not this row's.
     def drain(): Unit = {
@@ -1398,7 +1398,7 @@ object CorpusQueries {
       )
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
-    TextMlQueries.rmTree(base)
+    graft.TempRoots.rmTree(base)
     out
   }
 

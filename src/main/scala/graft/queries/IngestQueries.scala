@@ -760,8 +760,8 @@ object IngestQueries {
     * arithmetically from the same formulas — the closed-form-fixture
     * discipline the media decode rows use.
     */
-  /** Session-stable SWOB XML fixture tree, one per (JVM, sf dir). The
-    * round-8 bench lost an attempt to a transient `DataFrameReader.load`
+  /** Session-stable SWOB XML fixture tree, one per (JVM, sf dir). A
+    * bench run once lost an attempt to a transient `DataFrameReader.load`
     * failure when the per-invocation temp tree was deleted between reps
     * while a glob was still live — so the fixture is now created once
     * per JVM session and NEVER deleted between reps (the harness

@@ -318,7 +318,7 @@ object LifecycleQueries {
     // MATERIALIZED on every CTE the recursive scans join: DuckDB
     // otherwise re-inlines (and re-evaluates) the full window pipeline
     // on EVERY recursion step — the un-hinted form never finished at
-    // sf0.01 and zeroed round 2's whole correctness run.
+    // sf0.01 and zeroed the whole correctness run.
     s"""WITH RECURSIVE rows0 AS MATERIALIZED (
        |  SELECT * FROM (
        |    SELECT CAST(user_id AS BIGINT) AS user_id, ts,

@@ -399,19 +399,8 @@ object TextMlQueries {
       .select(col("doc_id"), col("fingerprint"))
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
-    rmTree(base)
+    graft.TempRoots.rmTree(base)
     out
-  }
-
-  /** Recursive delete for the streaming queries' temp trees. */
-  private[queries] def rmTree(path: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(path)
-    if (Files.exists(root)) {
-      val all = scala.util.Using.resource(Files.walk(root))(_.iterator().asScala.toSeq).reverse
-      all.foreach(p => try Files.deleteIfExists(p) catch { case _: Throwable => () })
-    }
   }
 
   private lazy val streamDedupSql =
@@ -438,7 +427,7 @@ object TextMlQueries {
     // the REGISTERED form runs fully guarded (df cap + LSH candidate
     // restriction) — the scale path; the exhaustive unguarded join is
     // kept as the spec-only recall baseline (MlSpec). Signatures are
-    // the one-pass MinHashSig kernel projection (r16), so the exploded
+    // the one-pass MinHashSig kernel projection, so the exploded
     // shingle frame feeds ONLY the verification join (which pins it
     // itself) — the outer localCheckpoint is gone.
     val sig = Dedup.minHashSignaturesFused(docs, "doc_id", "text", 3, MinHashPerms)
@@ -953,7 +942,7 @@ object TextMlQueries {
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
       .orderBy(col("query_id"), col("rank"))
       .localCheckpoint(true)
-    rmTree(dir)
+    graft.TempRoots.rmTree(dir)
     out
   }
 
@@ -1251,7 +1240,7 @@ object TextMlQueries {
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("adc"), 4).as("adc"))
       .orderBy(col("query_id"), col("rank"))
       .localCheckpoint(true)
-    rmTree(dir)
+    graft.TempRoots.rmTree(dir)
     out
   }
 
@@ -1556,7 +1545,7 @@ object TextMlQueries {
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
       .orderBy(col("query_id"), col("rank"))
       .localCheckpoint(true)
-    rmTree(dir)
+    graft.TempRoots.rmTree(dir)
     out
   }
 
@@ -1604,7 +1593,7 @@ object TextMlQueries {
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("adc"), 4).as("adc"))
       .orderBy(col("query_id"), col("rank"))
       .localCheckpoint(true)
-    rmTree(dir)
+    graft.TempRoots.rmTree(dir)
     out
   }
 

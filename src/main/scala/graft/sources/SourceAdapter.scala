@@ -125,9 +125,9 @@ object FileTransport extends Transport {
       // the literal glob's discovery scope is preserved exactly — no
       // descent into nested subdirectories the way a
       // load(dir)+pathGlobFilter listing would, no partition-column
-      // inference surprises — and an empty match stays LOUD (the
-      // round-11 pathGlobFilter rewrite returned silently-empty under
-      // a user-supplied schema where the literal glob had failed).
+      // inference surprises — and an empty match stays LOUD (a
+      // pathGlobFilter form returns silently-empty under a
+      // user-supplied schema where the literal glob fails).
       def hasGlob(s: String) = s.exists(c => c == '*' || c == '?' || c == '[' || c == '{')
       // The expansion lists via java.nio, which only speaks the local
       // filesystem: a scheme-qualified locator (hdfs://, s3a://,

@@ -182,9 +182,8 @@ object StreamingIngest {
   }
 
   /** One streamed incoming doc for near-dup screening — the simhash
-    * is computed upstream at scan time (native `SimHash64` in
-    * production; the md5-portable family when parity with the
-    * oracle-checked batch twin matters), same convention as
+    * is computed upstream at scan time ([[graft.ml.Dedup.simHash]],
+    * the family of the oracle-checked batch twin), same convention as
     * [[dedupeByFingerprint]]'s precomputed fingerprint.
     */
   final case class SimDoc(doc_id: Long, simhash: Long)

@@ -9,8 +9,7 @@ import org.apache.spark.sql.types._
   * vectors, so the finite-norm contract — zero-norm, NaN/Inf-component,
   * NULL-element and NULL vectors are DROPPED by both engines before
   * any dot product — would otherwise never be exercised by an oracle
-  * row (the same gap ADVICE r14 flagged for the then-Spark-only
-  * zero-norm drop). One Scala value feeds BOTH engines: [[df]] for
+  * row. One Scala value feeds BOTH engines: [[df]] for
   * Spark and [[embDegCteSql]] (an `emb_deg` CTE unioning the same rows
   * as a VALUES list) for DuckDB, so the fixture can never drift.
   *

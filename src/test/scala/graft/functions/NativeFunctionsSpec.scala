@@ -20,7 +20,6 @@ class NativeFunctionsSpec extends SparkSpec {
 
   /** One well-formed SQL call per table entry. */
   private val sqlCalls = Map(
-    "simhash64" -> "simhash64(array('a', 'b'))",
     "portable_simhash" -> "portable_simhash(array('a', 'b'))",
     "unicode_tokens" -> "unicode_tokens('Two words')",
     "distinct_shingles" -> "distinct_shingles(array('a', 'b', 'a', 'b'), 2)",
@@ -38,7 +37,7 @@ class NativeFunctionsSpec extends SparkSpec {
     spark.sql(s"SELECT $call FROM VALUES (0, 1d) AS t(pos, value)").collect()
 
   test("every native function resolves through spark.sql") {
-    assert(names.size == 12 && names.toSet == sqlCalls.keySet)
+    assert(names.size == 11 && names.toSet == sqlCalls.keySet)
     names.foreach { n =>
       val rows = viaSql(sqlCalls(n))
       assert(rows.length == 1 && !rows.head.isNullAt(0), n)
@@ -68,7 +67,7 @@ class NativeFunctionsSpec extends SparkSpec {
     val df = Seq((0, 1.0, "alpha beta", Seq(1.0, 0.0))).toDF("pos", "value", "text", "v")
     val row = df
       .select(
-        SimHash64.simhash64(UnicodeTokens.tokens(col("text"))).as("sh"),
+        PortableSimHash.of(UnicodeTokens.tokens(col("text"))).as("sh"),
         VectorOps.cosine(col("v"), col("v")).as("cos"),
         UnicodeTokens.tokens(col("text")).as("toks")
       )
@@ -97,7 +96,7 @@ class NativeFunctionsSpec extends SparkSpec {
       val emb = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.9f, 0.1f)), (2L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
       // twice each: a per-call registration warns from its second call on
       for (_ <- 1 to 2) {
-        assert(Dedup.simHashNative(docs, "doc_id", "text").collect().length == 2)
+        assert(Dedup.simHash(docs, "doc_id", "text").collect().length == 2)
         assert(Similarity.cosineTopK(emb, "vec_id", "embedding", col("vec_id") === 0, k = 2).collect().length == 2)
       }
     } finally {

@@ -2,7 +2,7 @@
 # Dev-only: run a graft main against the sbt-compiled classes without
 # paying sbt JVM startup. Usage: tools/run_graft.sh <MainClass> [args...]
 # Env: SPARK_DRIVER_MEM (default 8g) plus whatever the main reads
-# (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_REPS, ...).
+# (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_ONLY, ...).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
