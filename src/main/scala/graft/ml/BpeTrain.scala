@@ -1,6 +1,10 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed byte-pair-encoding tokenizer training (Sennrich et al.
@@ -10,16 +14,21 @@ import org.apache.spark.sql.functions._
   * Shape at scale — the classic trick is that BPE never iterates over
   * the corpus, only over the WORD-FREQUENCY DICT:
   *   1. one corpus pass builds `(word, freq)` (map-side combined;
-  *      vocab-sized output, orders of magnitude below corpus size);
-  *   2. each of the K merge rounds is a pair-count aggregation over
-  *      the dict (vocab-sized shuffle) followed by a 1-row argmax
-  *      collect — the only driver round-trip, K rows total;
-  *   3. the merge is applied to the dict with a codegen'd array fold,
-  *      no shuffle at all.
+  *      vocab-sized output, orders of magnitude below corpus size),
+  *      checkpointed and counted by the same job;
+  *   2. a dict of at most [[DriverMaxDictRows]] rows is collected and
+  *      all K merges are learned on the driver (pair counts, argmax,
+  *      greedy fold), then the merged dict comes back as an RDD-backed
+  *      frame — two jobs in all, whatever K is;
+  *   3. a larger dict stays distributed: each of the K merge rounds is
+  *      a pair-count aggregation over the dict (vocab-sized shuffle)
+  *      followed by a 1-row argmax collect, and the merge is applied
+  *      to the dict with a codegen'd array fold, no shuffle at all.
   * At 100 TB the dict is still ~10^6-10^7 rows; K rounds of a
   * dict-sized aggregation is how production BPE trainers distribute
   * (and why they all keep the dict, not the corpus, as the loop
-  * state).
+  * state). A corpus whose vocabulary fits the driver pays K jobs for
+  * nothing, which is what step 2 removes.
   *
   * Everything is integer/string arithmetic — pair counts are exact
   * longs, the argmax tie-break is (count DESC, left, right) on binary
@@ -89,6 +98,16 @@ object BpeTrain {
         ).otherwise(concat(acc, array(x)))
     )
 
+  /** Largest word-dict row count [[learnMerges]] learns on the
+    * driver. A dict row costs about 1 KB of driver heap at the peak:
+    * the collected row with its word and an ~8-symbol `syms` array of
+    * short strings (~600 B), the merged copy of that array (~200 B)
+    * and its share of one round's pair-count map (~200 B). 2^17 rows
+    * is thus about 130 MB, an eighth of Spark's default 1 GB driver
+    * heap.
+    */
+  private[ml] val DriverMaxDictRows: Long = 1L << 17
+
   /** Learn `numMerges` merges. Returns the merge table in learned
     * order plus the dict with all merges applied (for downstream
     * vocab extraction / encoding).
@@ -97,8 +116,32 @@ object BpeTrain {
       docs: DataFrame,
       textCol: String,
       numMerges: Int
+  ): (Seq[Merge], DataFrame) =
+    learnMergesWith(docs, textCol, numMerges, DriverMaxDictRows)
+
+  /** [[learnMerges]] with the driver dict-size limit as a parameter,
+    * so specs can run the distributed rounds on small corpora (a
+    * negative limit never learns on the driver).
+    */
+  private[ml] def learnMergesWith(
+      docs: DataFrame,
+      textCol: String,
+      numMerges: Int,
+      driverMaxRows: Long
   ): (Seq[Merge], DataFrame) = {
-    var dict = wordDict(docs, textCol).localCheckpoint(true)
+    val dict = wordDict(docs, textCol).localCheckpoint(false)
+    // one job: builds the dict, materializes its checkpoint, sizes it
+    if (dict.count() <= driverMaxRows) {
+      val rows = dict.collect()
+      val (ms, merged) = mergeLocally(rows.map(_.getLong(1)), rows.map(_.getSeq[String](2).toArray), numMerges)
+      val out = rows.indices.map(i => Row(rows(i).getString(0), rows(i).getLong(1), merged(i).toSeq))
+      val s = dict.sparkSession
+      (ms, s.createDataFrame(s.sparkContext.parallelize(out), dict.schema))
+    } else learnDistributed(dict, numMerges)
+  }
+
+  private def learnDistributed(dict0: DataFrame, numMerges: Int): (Seq[Merge], DataFrame) = {
+    var dict = dict0
     val merges = Seq.newBuilder[Merge]
     var rank = 1
     var exhausted = false
@@ -120,6 +163,66 @@ object BpeTrain {
       }
     }
     (merges.result(), dict)
+  }
+
+  /** The distributed rounds' semantics on driver arrays: pair counts
+    * weighted by `freqs`, argmax by (count DESC, left, right) in
+    * Spark's binary string order, greedy left-to-right application.
+    * Returns the merges and every word's merged symbols.
+    */
+  private def mergeLocally(
+      freqs: Array[Long],
+      words: Array[Array[String]],
+      numMerges: Int
+  ): (Seq[Merge], Array[Array[String]]) = {
+    var syms = words
+    val merges = Seq.newBuilder[Merge]
+    var rank = 1
+    var exhausted = false
+    while (rank <= numMerges && !exhausted) {
+      val counts = mutable.HashMap.empty[(String, String), Long]
+      syms.indices.foreach { i =>
+        val w = syms(i)
+        (0 until w.length - 1).foreach { j =>
+          val p = (w(j), w(j + 1))
+          counts(p) = counts.getOrElse(p, 0L) + freqs(i)
+        }
+      }
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((a, b), c) = counts.reduce { (x, y) =>
+          val byCount = java.lang.Long.compare(y._2, x._2)
+          val order =
+            if (byCount != 0) byCount
+            else {
+              val byLeft = binaryCompare(x._1._1, y._1._1)
+              if (byLeft != 0) byLeft else binaryCompare(x._1._2, y._1._2)
+            }
+          if (order <= 0) x else y
+        }
+        merges += Merge(rank, a, b, c)
+        syms = syms.map(mergeWord(_, a, b))
+        rank += 1
+      }
+    }
+    (merges.result(), syms)
+  }
+
+  /** Spark's default string order: unsigned UTF-8 bytes, i.e. code
+    * points. `String.compareTo` compares UTF-16 units and puts a
+    * supplementary character below U+E000–U+FFFF.
+    */
+  private def binaryCompare(x: String, y: String): Int =
+    java.util.Arrays.compareUnsigned(x.getBytes(UTF_8), y.getBytes(UTF_8))
+
+  /** [[applyMerge]] on one word. */
+  private def mergeWord(syms: Array[String], left: String, right: String): Array[String] = {
+    val acc = mutable.ArrayBuffer.empty[String]
+    syms.foreach { x =>
+      if (acc.nonEmpty && acc.last == left && x == right) acc(acc.length - 1) = left + right
+      else acc += x
+    }
+    acc.toArray
   }
 
   /** Merge table as a DataFrame: `(merge_rank, left, right, pair_count)`. */

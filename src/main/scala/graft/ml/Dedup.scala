@@ -1,7 +1,8 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.PortableHash
 
 /** Document deduplication family: exact (hash-groupBy), n-gram
@@ -807,7 +808,22 @@ object Dedup {
     * canonical representative — standard corpus-dedup clustering after
     * MinHash/SimHash pair generation).
     *
-    * Algorithm: alternating large-star / small-star (Kiveris et al.,
+    * Algorithm: contract until the graph fits on one machine, then
+    * finish there (the MPC pattern of "Approximation Algorithms for
+    * Large Scale Data Analysis", PODS 2021). The distinct canonical
+    * edges are checkpointed and counted by one job. A graph of at most
+    * [[DriverFinishMaxEdges]] edges with integral ids is collected and
+    * finished by a union-find on the driver whose roots are the
+    * component minima; its labels come back as an RDD-backed frame and
+    * the reported round count is 0. Corpus near-dup graphs are tiny
+    * next to their documents (25 verified pairs over 500 docs), so this
+    * is the common path: two jobs instead of two per star round. On a
+    * cluster the edges cross the network to the driver once and the
+    * labels travel back in the task payloads, so the constant bounds
+    * both the driver's heap and that transfer.
+    *
+    * Above the constant (or for non-integral ids) the graph stays
+    * distributed: alternating large-star / small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) —
     * converges in O(log n) rounds on ANY graph shape, including
     * adversarial long chains where plain min-label propagation needs
@@ -839,8 +855,19 @@ object Dedup {
   ): DataFrame =
     connectedComponentsWithStats(nodes, idCol, pairs, maxIter, srcCol, dstCol)._1
 
+  /** Largest distinct-edge count [[connectedComponents]] finishes on
+    * the driver. An edge costs about 200 bytes of driver heap at the
+    * peak: the collected `(Long, Long)` tuple (~40 B), the two id
+    * arrays (16 B), up to two sorted node ids and parent slots (24 B)
+    * and up to two `(node, cluster_id)` label tuples held for the
+    * parallelized result (~80 B), plus headroom. 2^20 edges is thus
+    * about 200 MB, a fifth of Spark's default 1 GB driver heap.
+    */
+  private[ml] val DriverFinishMaxEdges: Long = 1L << 20
+
   /** [[connectedComponents]] plus the number of large/small-star
-    * rounds executed — lets specs assert the O(log n) bound.
+    * rounds executed (0 when the graph was finished on the driver) —
+    * lets specs assert the O(log n) bound.
     */
   def connectedComponentsWithStats(
       nodes: DataFrame,
@@ -849,6 +876,21 @@ object Dedup {
       maxIter: Int = 50,
       srcCol: String = "d1",
       dstCol: String = "d2"
+  ): (DataFrame, Int) =
+    componentsWithStats(nodes, idCol, pairs, maxIter, srcCol, dstCol, DriverFinishMaxEdges)
+
+  /** [[connectedComponentsWithStats]] with the driver-finish edge limit
+    * as a parameter, so specs can run the star loop on small graphs
+    * (a negative limit never finishes on the driver).
+    */
+  private[ml] def componentsWithStats(
+      nodes: DataFrame,
+      idCol: String,
+      pairs: DataFrame,
+      maxIter: Int,
+      srcCol: String,
+      dstCol: String,
+      driverMaxEdges: Long
   ): (DataFrame, Int) = {
     // canonical orientation (u > v), self-loops dropped; stars point
     // from each node DOWN to the component minimum at the fixpoint
@@ -906,32 +948,53 @@ object Dedup {
     }
 
     var fp = fingerprint(edges)
-    var iter = 0
-    var converged = fp._1 == 0L
-    // Per-round localCheckpoint is the measured optimum: an A/B of an
-    // every-2nd-round truncation cadence (skipped rounds' stars
-    // recompute inside the next round's job, saving one
-    // checkpoint write+read per pair of rounds) in alternating fresh
-    // JVMs at 5 reps — 3.76/4.19 s baseline vs 4.82 s variant at
-    // sf0.1: the 3 recomputed shuffle stages cost more than the
-    // checkpoint cycle they avoid. Do not re-try.
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      edges = next
-      fp = nfp
-      iter += 1
+    val idType = edges.schema("u").dataType
+    val integral = idType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _                                             => false
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter large/small-star rounds " +
-          "(O(log n) expected); refusing to return partially-propagated labels"
-      )
+    val (labels, rounds) =
+      if (integral && fp._1 <= driverMaxEdges) {
+        val s = edges.sparkSession
+        val collected =
+          if (fp._1 == 0L) Array.empty[(Long, Long)]
+          else
+            edges
+              .select(col("u").cast(LongType), col("v").cast(LongType))
+              .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+              .collect()
+        val found = s
+          .createDataFrame(s.sparkContext.parallelize(unionFindMinRoots(collected).toSeq))
+          .select(col("_1").cast(idType).as("node"), col("_2").cast(idType).as("cluster_id"))
+        (found, 0)
+      } else {
+        var iter = 0
+        var converged = fp._1 == 0L
+        // Per-round localCheckpoint is the measured optimum: an A/B of an
+        // every-2nd-round truncation cadence (skipped rounds' stars
+        // recompute inside the next round's job, saving one
+        // checkpoint write+read per pair of rounds) in alternating fresh
+        // JVMs at 5 reps — 3.76/4.19 s baseline vs 4.82 s variant at
+        // sf0.1: the 3 recomputed shuffle stages cost more than the
+        // checkpoint cycle they avoid. Do not re-try.
+        while (!converged && iter < maxIter) {
+          val next = smallStar(largeStar(edges)).localCheckpoint(false)
+          val nfp = fingerprint(next)
+          converged = nfp == fp
+          edges = next
+          fp = nfp
+          iter += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"connectedComponents did not converge in $maxIter large/small-star rounds " +
+              "(O(log n) expected); refusing to return partially-propagated labels"
+          )
+        // fixpoint edges are stars (node -> component min)
+        (edges.select(col("u").as("node"), col("v").as("cluster_id")), iter)
+      }
 
-    // fixpoint edges are stars (node -> component min); roots and
-    // singletons label themselves via the coalesce
-    val labels = edges.select(col("u").as("node"), col("v").as("cluster_id"))
+    // roots and singletons label themselves via the coalesce
     val out = nodes
       .select(col(idCol).as("node"))
       .join(labels, Seq("node"), "left")
@@ -939,7 +1002,36 @@ object Dedup {
         col("node").as(idCol),
         coalesce(col("cluster_id"), col("node")).as("cluster_id")
       )
-    (out, iter)
+    (out, rounds)
+  }
+
+  /** Union-find over undirected edges, each root kept at its
+    * component's minimum id: `(node, min reachable id)` for every
+    * node that is not its component's minimum.
+    */
+  private def unionFindMinRoots(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val ids = new Array[Long](edges.length * 2)
+    var k = 0
+    edges.foreach { case (u, v) => ids(k) = u; ids(k + 1) = v; k += 2 }
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.indices.foreach { i => if (i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 } }
+    // node index order == id order, so linking the larger root under
+    // the smaller keeps every root at its component minimum
+    val parent = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val up = parent(j); parent(j) = r; j = up }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    edges.foreach { case (u, v) =>
+      val (a, b) = (find(index(u)), find(index(v)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    (0 until n).iterator.filter(i => find(i) != i).map(i => (ids(i), ids(find(i)))).toArray
   }
 
   /** SemDeDup-style embedding near-dedup (Abbas et al. 2023,

@@ -697,7 +697,9 @@ object CorpusQueries {
       .docBigrams(docs, "doc_id", TextStats.tokens(col("text")))
       .localCheckpoint(false) // trains the model AND is scored by it
     val model = KnLm.bigramLogProbs(bigrams)
-    val scored = KnLm.perplexity(bigrams, model, "doc_id")
+    // probed for the thresholds AND joined back: the probe's job
+    // materializes the scores and the join reads them
+    val scored = KnLm.perplexity(bigrams, model, "doc_id").localCheckpoint(false)
     val thr = scored
       .agg(expr("percentile(ppl, array(0.3333333333333333d, 0.6666666666666666d))").as("t"))
       .head()
@@ -1318,8 +1320,9 @@ object CorpusQueries {
     // max(doc_id) is NULL when the incoming slice has no simhash rows
     // (every doc token-less): skip the drains entirely — the sink stays
     // empty and the left join below still surfaces every doc as
-    // is_dup=false, matching the batch twin.
-    val maxRow = incoming.agg(max(col("doc_id"))).head()
+    // is_dup=false, matching the batch twin. The same job counts the
+    // slice for the stream's partition sizing.
+    val maxRow = incoming.agg(max(col("doc_id")), count(lit(1))).head()
     new java.io.File(src).mkdirs()
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
     // ONE AvailableNow run, ONE micro-batch over both pre-landed files
@@ -1363,7 +1366,7 @@ object CorpusQueries {
         // incoming docs, clamped to [4, 32] — the production knob is
         // (state size / store budget) on one side and join width on
         // the other.
-        val nIncoming = incoming.count()
+        val nIncoming = maxRow.getLong(1)
         val streamParts = math.min(32L, math.max(4L, nIncoming / 1000L)).toString
         try {
           s.conf.set("spark.sql.shuffle.partitions", streamParts)

@@ -59,10 +59,14 @@ class CorpusSpec extends SparkSpec {
     // adversarial diameter-999 chain: min-label propagation would need
     // ~999 rounds; large/small-star must finish in O(log n)
     val n = 1000L
-    val (out, rounds) = Dedup.connectedComponentsWithStats(
+    val (out, rounds) = Dedup.componentsWithStats(
       (1L to n).toDF("doc_id"),
       "doc_id",
-      (1L until n).map(i => (i, i + 1)).toDF("d1", "d2")
+      (1L until n).map(i => (i, i + 1)).toDF("d1", "d2"),
+      maxIter = 50,
+      srcCol = "d1",
+      dstCol = "d2",
+      driverMaxEdges = -1L
     )
     assert(rounds <= 20, s"expected O(log2(1000)) ≈ 10 rounds, got $rounds")
     val cc = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -86,13 +90,62 @@ class CorpusSpec extends SparkSpec {
 
   test("connectedComponents: non-convergence throws instead of returning partial labels") {
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(
+      Dedup.componentsWithStats(
         (1L to 40L).toDF("doc_id"),
         "doc_id",
         (1L until 40L).map(i => (i, i + 1)).toDF("d1", "d2"),
-        maxIter = 1
+        maxIter = 1,
+        srcCol = "d1",
+        dstCol = "d2",
+        driverMaxEdges = -1L
       )
     }
+  }
+
+  test("property: driver union-find and the star loop give the same min-reachable labels") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // small ids, ids past 2^53 (where neighbours collapse as doubles)
+    // and both ends of the long range
+    val big = 1L << 53
+    val idPool = (0L to 40L) ++ Seq(big - 1, big, big + 1, big + 2, Long.MaxValue - 1, Long.MaxValue, -3L)
+    def shape(ids: Seq[Long]): Gen[Seq[(Long, Long)]] = Gen.oneOf(
+      ids.zip(ids.drop(1)), // chain
+      ids.drop(1).map(ids.head -> _), // star
+      for (i <- ids; j <- ids if i < j) yield (i, j), // clique
+      Seq.empty[(Long, Long)] // isolated nodes
+    )
+    val graph = for {
+      sizes <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, Gen.choose(1, 7)))
+      picked <- Gen.pick(math.min(sizes.sum, idPool.size), idPool)
+      seed <- Gen.long
+      ids = new scala.util.Random(seed).shuffle(picked.toSeq)
+      comps = sizes.scanLeft(0)(_ + _).zip(sizes).map { case (o, n) => ids.slice(o, o + n) }.filter(_.nonEmpty)
+      edges <- comps.foldLeft(Gen.const(Seq.empty[(Long, Long)]))((acc, c) => acc.flatMap(a => shape(c).map(a ++ _)))
+      dups <- Gen.someOf(edges)
+      loops <- Gen.someOf(ids)
+    } yield (ids, new scala.util.Random(seed).shuffle(edges ++ dups.map(_.swap) ++ loops.map(i => (i, i))))
+    def reference(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val adj = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+      nodes.map { n =>
+        var seen = Set(n); var frontier = Set(n)
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen
+          seen ++= frontier
+        }
+        n -> seen.min
+      }.toMap
+    }
+    val p = Prop.forAll(graph) { case (nodes, edges) =>
+      def run(limit: Long) =
+        Dedup.componentsWithStats(nodes.toDF("doc_id"), "doc_id", edges.toDF("d1", "d2"), 50, "d1", "d2", limit)
+      val (driver, driverRounds) = run(Dedup.DriverFinishMaxEdges)
+      val (star, _) = run(-1L)
+      def labels(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      driverRounds == 0 && driver.schema == star.schema &&
+      labels(driver) == labels(star) && labels(driver) == reference(nodes, edges)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), p)
+    assert(res.passed, res.status.toString)
   }
 
   test("leakage-safe splits: every member of a cluster lands in the same split") {

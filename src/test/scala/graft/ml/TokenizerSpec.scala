@@ -71,6 +71,30 @@ class TokenizerSpec extends SparkSpec {
     )
   }
 
+  test("learnMerges: the driver and distributed paths learn the same merges and dict") {
+    import spark.implicits._
+    // 'ａ' (U+FF41) and '𐐨' (U+10428) tie: Spark's UTF-8 byte order puts
+    // 'ａ' first, UTF-16 order (String.compareTo) puts '𐐨' first
+    val corpora = Seq(
+      Seq("ａ 𐐨"),
+      Seq("ａｂ 𐐨ｂ 𐐨ａ", "ａｂ 𐐨ｂ x𐐨 xａ 𝐚𝐚𝐚", "𝐚𝐚𝐚𝐚 ｂｂ ａａａ"),
+      Seq("zz xyx", "zz xyx", "zz", "aaa aaaa abab", "ab ba")
+    )
+    def dict(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).sortBy(_._1).toSeq
+    corpora.foreach { texts =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val (onDriver, driverDict) = BpeTrain.learnMergesWith(docs, "text", 12, BpeTrain.DriverMaxDictRows)
+      val (distributed, distDict) = BpeTrain.learnMergesWith(docs, "text", 12, -1L)
+      assert(onDriver == distributed, texts)
+      def columns(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType.catalogString)
+      assert(columns(driverDict) == columns(distDict))
+      assert(dict(driverDict) == dict(distDict), texts)
+    }
+    val (first, _) = BpeTrain.learnMerges(Seq((1L, "ａ 𐐨")).toDF("doc_id", "text"), "text", 1)
+    assert(first == Seq(BpeTrain.Merge(1, "ａ", "</w>", 1)))
+  }
+
   // ---- BM25 --------------------------------------------------------
 
   test("bm25 scoreMicro is monotone in tf and penalizes long docs") {
