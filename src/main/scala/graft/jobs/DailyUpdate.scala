@@ -13,18 +13,26 @@ import graft.sources.{AdapterRegistry, IncrementalIngest, SeriesConfig}
   * changed ranges.
   *
   * Execution shape: `run` itself runs the jobs that touch the
-  * sources, and materializes three small frames with eager
-  * `localCheckpoint`s: the fetched and guarded batch (`appended`, one
-  * night's rows), its changed ranges (one row per touched series),
-  * and the daily rows of exactly the changed local days, aggregated
-  * from the upserted store. Every `Result` frame is built on those:
-  * `measurements` is the stored rows upserted with `appended`, and
-  * `daily` is the daily base with the recomputed days merged in. So
-  * the store write, the daily write and [[refreshDoyStats]] scan the
-  * stores and the checkpoints, never a source, and all of them see the
-  * one batch `run` fetched. Step 3 is map-side (broadcast
-  * corrections); steps 4-5 scan only what the changed ranges cover.
-  * Nothing recomputes full history.
+  * sources. It reads each series' last stored point once (see
+  * [[IncrementalIngest.getNewContinuous]]), and materializes three
+  * small frames with eager `localCheckpoint`s: the fetched, guarded
+  * and key-deduplicated batch (`appended`, one night's rows), its
+  * changed ranges (one row per touched series), and the daily rows of
+  * exactly the changed local days, aggregated from the upserted store.
+  * Every `Result` frame is built on those: `measurements` is the stored
+  * rows upserted with `appended`, and `daily` is the daily base with
+  * the recomputed days merged in. So the store write, the daily write
+  * and [[refreshDoyStats]] scan the stores and the checkpoints, never a
+  * source, and all of them see the one batch `run` fetched. Step 3 is
+  * map-side (a broadcast of the correction table, which is read once).
+  * Step 4 scans the whole measurement store once: the changed ranges
+  * reach it as joined columns, not as a filter the parquet scan can
+  * prune with, and the rows outside the changed local days are dropped
+  * after the join. Nothing aggregates beyond the changed days.
+  *
+  * Every job `run` launches, AQE stage jobs included, is described as
+  * `DailyUpdate › fetch` (step 1) or `DailyUpdate › refresh` (steps
+  * 2-4), and the caller's job description is restored on return.
   *
   * The checkpoint blocks live in the executors' block managers until
   * the `Result` frames become unreachable, when Spark's
@@ -70,36 +78,56 @@ object DailyUpdate {
         */
       qcSegments: Option[DataFrame] = None
   ): Result = {
-    // 1. incremental fetch (last-point watermark per series), read
-    // from the sources exactly once
-    val appended = IncrementalIngest
-      .getNewContinuous(spark, catalog, measurements, registry)
-      .select("timeseries_id", "datetime", "value", "period_seconds", "grade", "approval")
-      .localCheckpoint()
+    val keys = Seq("timeseries_id", "datetime")
+    // 1. incremental fetch (one last-point read per cycle), read from
+    // the sources exactly once and deduplicated on the store key, so
+    // nothing downstream shuffles the batch again
+    val appended = phase(spark, "fetch") {
+      Upsert
+        .dedupe(
+          IncrementalIngest
+            .getNewContinuous(spark, catalog, measurements, registry)
+            .select("timeseries_id", "datetime", "value", "period_seconds", "grade", "approval"),
+          keys
+        )
+        .localCheckpoint()
+    }
 
-    // 2. upsert into the store (conflict on (series, datetime): new wins)
-    val merged = Upsert(
-      measurements.select("timeseries_id", "datetime", "value", "period_seconds"),
-      appended.select("timeseries_id", "datetime", "value", "period_seconds"),
-      keys = Seq("timeseries_id", "datetime"),
-      mode = Upsert.DoUpdate
-    )
+    phase(spark, "refresh") {
+      // 2. upsert into the store (conflict on (series, datetime): new wins)
+      val merged = Upsert.merge(
+        measurements.select("timeseries_id", "datetime", "value", "period_seconds"),
+        appended,
+        keys,
+        Upsert.DoUpdate
+      )
 
-    // 2b. QC segment adjustment (`R/getNewContinuous.R:577-593`): the
-    // batch's grade/approval observations become RLE segments and
-    // reconcile against the store per (series, stream)
-    val qcChanges = qcSegments.map(store => adjustQcFromBatch(appended, store))
+      // 2b. QC segment adjustment (`R/getNewContinuous.R:577-593`): the
+      // batch's grade/approval observations become RLE segments and
+      // reconcile against the store per (series, stream)
+      val qcChanges = qcSegments.map(store => adjustQcFromBatch(appended, store))
 
-    // 3. corrected values (broadcast fold; pass-through when empty)
-    val corrected =
-      if (corrections.isEmpty) merged.withColumn("corrected", col("value"))
-      else Corrections(merged, corrections)
+      // 3. corrected values (broadcast fold; pass-through when empty)
+      val corrected = Corrections(merged, corrections)
 
-    // 4. changed ranges -> bounded daily recompute
-    val (changes, daily) =
-      refreshDaily(corrected.withColumn("value", col("corrected")), appended, dailyBase, aggTypes)
+      // 4. changed ranges -> bounded daily recompute
+      val (changes, daily) =
+        refreshDaily(corrected.withColumn("value", col("corrected")), appended, dailyBase, aggTypes)
 
-    Result(appended, merged, corrected, daily, changes, qcChanges)
+      Result(appended, merged, corrected, daily, changes, qcChanges)
+    }
+  }
+
+  /** Runs `body` with every Spark job it launches, AQE stage jobs
+    * included, described as `DailyUpdate › <name>`; the caller's job
+    * description is restored afterwards.
+    */
+  private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description") // what setJobDescription sets
+    sc.setJobDescription(s"DailyUpdate › $name")
+    try body
+    finally sc.setJobDescription(caller)
   }
 
   /** The bounded daily refresh after a batch lands in `store`: the

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import graft.functions.ExpressionSandbox
 
 /** The value-correction engine: priority-ordered fold of correction
@@ -28,12 +31,13 @@ import graft.functions.ExpressionSandbox
   *                                $2 = elapsed seconds
   *
   * Spark-first design: corrections are per-series METADATA (thousands
-  * of rows against billions of points), so they are collected into a
-  * priority-sorted array per series — one metadata-sized shuffle — and
-  * broadcast-joined to the fact table. The fold itself is a single
-  * `aggregate()` higher-order function over the filtered array: the
-  * whole operator is one map-side, whole-stage-codegen'd projection
-  * with NO shuffle of the fact table and no per-point grouping.
+  * of rows against billions of points), so the table is collected to
+  * the driver once, grouped there into a priority-sorted array per
+  * series, and broadcast-joined to the fact table. The fold itself is
+  * a single `aggregate()` higher-order function over the filtered
+  * array: the whole operator is one map-side, whole-stage-codegen'd
+  * projection with NO shuffle of the fact table and no per-point
+  * grouping.
   * Stored drift equations pass the `ExpressionSandbox` lexer and are
   * spliced directly into the lambda as SQL text (the reference's
   * validator plays the same role before its dynamic SQL,
@@ -41,10 +45,18 @@ import graft.functions.ExpressionSandbox
   */
 object Corrections {
 
+  /** The fields of one correction, in fold order: `sort_array` orders
+    * by priority, then correction_id.
+    */
+  private val Fields =
+    Seq("priority", "correction_id", "start_dt", "end_dt", "ctype", "value1", "value2", "window_seconds", "equation")
+
   /** Expected `corrections` columns: correction_id (long), seriesId
     * (same name as in `points`), start_dt, end_dt (timestamp),
     * ctype (string, one of the six above), value1, value2 (double),
     * window_seconds (long), equation (string), priority (int).
+    * The table is read once, on the driver, when this is called; an
+    * empty table gives the pass-through without a join.
     */
   def apply(
       points: DataFrame,
@@ -54,15 +66,36 @@ object Corrections {
       valueCol: String = "value",
       outCol: String = "corrected"
   ): DataFrame = {
-    val spark = points.sparkSession
+    // The one read of the correction table: every row, on the driver.
+    val table = corrections.select((seriesId +: Fields).map(col): _*)
+    val rows = table.collect()
+    if (rows.isEmpty)
+      // no correction applies: the fold's pass-through, in the join's
+      // column order (series column first)
+      points
+        .select(points.columns.sortBy(_ != seriesId).map(col).toIndexedSeq: _*)
+        .withColumn(outCol, col(valueCol).cast("double"))
+    else fold(points, table.schema, rows, seriesId, dtCol, valueCol, outCol)
+  }
 
-    // 1. Validate every stored equation before splicing (sandbox gate).
-    val equations: Map[Long, String] = corrections
-      .filter(col("ctype") === "drift_equation" && col("equation").isNotNull)
-      .select(col("correction_id"), col("equation"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getString(1))
-      .toMap
+  /** @param rows the correction table's (seriesId +: [[Fields]]) rows */
+  private def fold(
+      points: DataFrame,
+      schema: StructType,
+      rows: Array[Row],
+      seriesId: String,
+      dtCol: String,
+      valueCol: String,
+      outCol: String
+  ): DataFrame = {
+    val spark = points.sparkSession
+    val field = (name: String) => 1 + Fields.indexOf(name)
+
+    // Validate every stored equation before splicing (sandbox gate).
+    val equations: Map[Long, String] = rows.collect {
+      case r if r.getString(field("ctype")) == "drift_equation" && !r.isNullAt(field("equation")) =>
+        r.getLong(field("correction_id")) -> r.getString(field("equation"))
+    }.toMap
     equations.foreach { case (id, eq) =>
       ExpressionSandbox.validate(eq) match {
         case Left(err) =>
@@ -75,30 +108,23 @@ object Corrections {
       }
     }
 
-    // 2. Per-series sorted correction array (priority, correction_id
-    //    first so sort_array gives deterministic fold order).
-    val corrArr = corrections
-      .groupBy(col(seriesId))
-      .agg(
-        sort_array(
-          collect_list(
-            struct(
-              col("priority"),
-              col("correction_id"),
-              col("start_dt"),
-              col("end_dt"),
-              col("ctype"),
-              col("value1"),
-              col("value2"),
-              col("window_seconds"),
-              col("equation")
-            )
-          )
-        ).as("corr_arr")
+    // Per-series correction array, grouped on the driver (a NULL series
+    // joins nothing). Its rows become a local relation, so `sort_array`
+    // runs at optimization and the broadcast below is the only job it
+    // costs: no shuffle and no second read of the table.
+    val element = StructType(schema.fields.tail)
+    val perSeries = rows.filterNot(_.isNullAt(0)).groupBy(_.get(0)).toSeq.map { case (key, rs) =>
+      Row(key, rs.map(r => Row.fromSeq(r.toSeq.tail)).toSeq)
+    }
+    val corrArr = spark
+      .createDataFrame(
+        perSeries.asJava,
+        StructType(Seq(schema.fields.head, StructField("corr_arr", ArrayType(element, containsNull = false))))
       )
+      .select(col(seriesId), sort_array(col("corr_arr")).as("corr_arr"))
 
-    // 3. Fold lambda as SQL text. elapsed/frac use fractional epoch
-    //    seconds (cast timestamp -> double).
+    // Fold lambda as SQL text. elapsed/frac use fractional epoch
+    // seconds (cast timestamp -> double).
     val equationCase =
       if (equations.isEmpty) "CAST(NULL AS DOUBLE)"
       else

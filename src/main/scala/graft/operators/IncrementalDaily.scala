@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   * `:2734-2748`.
   *
   * Scale: `changes` is tiny (one row per touched series) and is
-  * broadcast; the measurement scan prunes to the changed ranges
-  * (partition pruning when the table is laid out by series/month);
-  * the DOY stats recompute only shuffles rows of AFFECTED (series,
-  * doy) groups.
+  * broadcast. [[recompute]] scans every row of `measurements`: the
+  * range bounds are columns of the broadcast side, so they reach the
+  * rows after the join and never become a filter a parquet scan could
+  * prune files or row groups with. Only the rows of the changed local
+  * days are aggregated, and the DOY stats recompute only shuffles rows
+  * of AFFECTED (series, doy) groups.
   */
 object IncrementalDaily {
 
@@ -45,7 +47,7 @@ object IncrementalDaily {
     val c = changes
       // coarse datetime pre-filter, ±2 days: wide enough to contain
       // every row of any local day touched by the range for any
-      // |offset_hours| <= 24 (this is what partition pruning sees)
+      // |offset_hours| <= 24 (applied after the join, not in the scan)
       .select(
         col("timeseries_id"),
         col("range_start"),

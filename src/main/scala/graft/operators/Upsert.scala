@@ -22,7 +22,21 @@ object Upsert {
   case object DoNothing extends ConflictMode
   case object DoUpdate extends ConflictMode
 
-  /** @param orderCol when updates contain several rows per key, the
+  /** [[merge]] of [[dedupe]]: one row per key of `updates`, merged
+    * into `target`.
+    */
+  def apply(
+      target: DataFrame,
+      updates: DataFrame,
+      keys: Seq[String],
+      mode: ConflictMode,
+      orderCol: Option[String] = None
+  ): DataFrame =
+    merge(target, dedupe(updates, keys, orderCol), keys, mode)
+
+  /** One row per key of `updates`, with every column of `updates`.
+    *
+    * @param orderCol when updates contain several rows per key, the
     *                 row with the highest orderCol wins (deterministic
     *                 batch semantics)
     *
@@ -36,32 +50,30 @@ object Upsert {
     * columns must be orderable (no MapType) — true of every store
     * schema here.
     */
-  def apply(
-      target: DataFrame,
-      updates: DataFrame,
-      keys: Seq[String],
-      mode: ConflictMode,
-      orderCol: Option[String] = None
-  ): DataFrame = {
+  def dedupe(updates: DataFrame, keys: Seq[String], orderCol: Option[String] = None): DataFrame = {
     val restNames = updates.columns.filterNot(keys.contains)
     val pickNames = orderCol match {
       case Some(oc) => oc +: restNames.filterNot(_ == oc).toSeq
       case None     => restNames.toSeq
     }
-    val deduped0 =
-      if (pickNames.isEmpty) updates.dropDuplicates(keys) // key-only frame: rows within a key are identical
-      else
-        updates
-          .groupBy(keys.map(col): _*)
-          .agg(max(struct(pickNames.map(col): _*)).as("__p"))
-          .select(keys.map(col) ++ pickNames.map(n => col(s"__p.$n").as(n)): _*)
-    // stage onto the target's column set (orderCol and any extras drop)
-    val deduped = deduped0.select(target.columns.map(col): _*)
+    if (pickNames.isEmpty) updates.dropDuplicates(keys) // key-only frame: rows within a key are identical
+    else
+      updates
+        .groupBy(keys.map(col): _*)
+        .agg(max(struct(pickNames.map(col): _*)).as("__p"))
+        .select(keys.map(col) ++ pickNames.map(n => col(s"__p.$n").as(n)): _*)
+  }
+
+  /** Merge `deduped` (at most one row per key, e.g. from [[dedupe]])
+    * into `target`, staged onto the target's column set.
+    */
+  def merge(target: DataFrame, deduped: DataFrame, keys: Seq[String], mode: ConflictMode): DataFrame = {
+    val staged = deduped.select(target.columns.map(col): _*)
     mode match {
       case DoNothing =>
-        target.unionByName(deduped.join(target.select(keys.map(col): _*), keys, "left_anti"))
+        target.unionByName(staged.join(target.select(keys.map(col): _*), keys, "left_anti"))
       case DoUpdate =>
-        target.join(deduped.select(keys.map(col): _*), keys, "left_anti").unionByName(deduped)
+        target.join(staged.select(keys.map(col): _*), keys, "left_anti").unionByName(staged)
     }
   }
 }

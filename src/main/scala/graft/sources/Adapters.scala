@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Concrete adapters. Remote HTTP/API sources are represented by
   * file-based equivalents (zero-egress environment): the parsing,
@@ -51,46 +52,50 @@ object SyntheticAdapter extends SourceAdapter {
 
 /** WSC-realtime-shaped CSV adapter: reads a CSV of
   * (datetime, value, qualifier_code, approval_code) and maps source
-  * codes to canonical labels through broadcast mapping joins — the
-  * shape of `R/downloadWSC.R:105-201` (qualifier map :120-162,
-  * bilingual approval map :164-201). `args`: "path".
+  * codes to canonical labels through literal map lookups — the shape
+  * of `R/downloadWSC.R:105-201` (qualifier map :120-162, bilingual
+  * approval map :164-201). `args`: "path".
+  *
+  * The file's four columns are declared as strings, so reading it
+  * infers nothing; `enforceSchema=false` makes Spark check each file's
+  * header against them, so a file whose columns are renamed or
+  * reordered fails instead of landing values in the wrong columns.
   */
 class CsvStationAdapter(transport: Transport) extends SourceAdapter {
   override val name = "downloadCsvStation"
 
   /** WSC-style numeric qualifier codes -> canonical labels. */
-  val QualifierMap: Seq[(Int, String)] =
-    Seq(-1 -> "UNS", 10 -> "ICE", 20 -> "EST", 30 -> "PRT", 40 -> "REV", 50 -> "DRY")
+  val QualifierMap: Map[Int, String] =
+    Map(-1 -> "UNS", 10 -> "ICE", 20 -> "EST", 30 -> "PRT", 40 -> "REV", 50 -> "DRY")
 
   /** Bilingual approval labels -> canonical codes. */
-  val ApprovalMap: Seq[(String, String)] = Seq(
+  val ApprovalMap: Map[String, String] = Map(
     "final" -> "A", "finales" -> "A",
     "provisional" -> "P", "provisoire" -> "P"
   )
 
+  /** The landing file's header, every column read as a string. */
+  val FileSchema: StructType =
+    StructType(Seq("datetime", "value", "qualifier_code", "approval_label").map(StructField(_, StringType)))
+
   override def fetch(spark: SparkSession, cfg: SeriesConfig, startTs: java.sql.Timestamp): DataFrame = {
-    import spark.implicits._
     val path = cfg.args.getOrElse("path", throw new IllegalArgumentException("path required"))
-    val raw = transport
-      .rows(spark, path, "csv", Map("header" -> "true"))
-      .select(
-        to_timestamp(col("datetime")).as("datetime"),
-        col("value").cast("double").as("value"),
-        col("qualifier_code").cast("int").as("qualifier_code"),
-        lower(col("approval_label")).as("approval_label")
-      )
-    val qmap = QualifierMap.toDF("qualifier_code", "qualifier")
-    val amap = ApprovalMap.toDF("approval_label", "approval")
+    val raw = transport.rows(spark, path, "csv", Map("header" -> "true", "enforceSchema" -> "false"), Some(FileSchema))
     // optional imperial->metric conversion (the NWIS pattern),
     // args: "convert" in ft_to_m | cfs_to_cms | f_to_c
     val converted = UnitConvert.convert(cfg.args.getOrElse("convert", "none"), col("value"))
+    val qualifiers = typedLit(QualifierMap)
+    val approvals = typedLit(ApprovalMap)
     SourceAdapter.normalize(
       raw
-        .join(broadcast(qmap), Seq("qualifier_code"), "left")
-        .join(broadcast(amap), Seq("approval_label"), "left")
+        .select(
+          to_timestamp(col("datetime")).as("datetime"),
+          col("value").cast("double").as("value"),
+          qualifiers(col("qualifier_code").cast("int")).as("qualifier"),
+          approvals(lower(col("approval_label"))).as("approval")
+        )
         .filter(col("datetime") >= lit(startTs))
         .withColumn("value", converted)
-        .select("datetime", "value", "qualifier", "approval")
     )
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,26 +21,29 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalIngest {
 
-  private val Epoch = java.sql.Timestamp.valueOf("1970-01-01 00:00:00")
+  private val Epoch = Timestamp.valueOf("1970-01-01 00:00:00")
 
   /** @return the new measurement rows to append (canonical schema +
     *         timeseries_id), strictly after each series' last point
     *
-    * Scale notes: the dispatch worklist is a DATAFRAME — catalog ids
-    * joined to the last-point aggregate with the start timestamp
-    * (`last + 1s`) computed distributed. Driver-side collection is
-    * demoted to ONE collect at the Transport-seam fetch boundary,
-    * where a scalar start genuinely must exist to parameterize the
-    * remote call:
-    * ONE ROW PER FETCH GROUP for cache-sharing adapters (the scale
-    * path — a million ECCC series at a thousand stations collects a
-    * thousand rows), and one row per series only for adapters whose
-    * protocol is inherently per-series (that driver loop is then
-    * bounded by the number of remote calls, not by the catalog). The
-    * correctness-critical "never re-append at-or-before the last
-    * point" guard is NOT driver state — it is a distributed broadcast
-    * join against the last-point frame, so a fetched batch of any
-    * size is filtered executor-side.
+    * Scale notes: the last stored point of every cataloged series is
+    * read ONCE, as one groupBy(max) over the fact table collected to
+    * the driver: one row per series, the same order of size as the
+    * `catalog` the driver already holds. Everything per series is then
+    * a driver value taken from that one snapshot:
+    *  - a per-series adapter fetches from its own last point + 1 s;
+    *  - a cache-sharing adapter fetches ONCE per group from the
+    *    group's earliest start (`R/getNewContinuous.R:286-316`), so a
+    *    million ECCC series at a thousand stations make a thousand
+    *    remote calls, not a million;
+    *  - the "never re-append at-or-before the last point" guard is a
+    *    literal `datetime > last` filter in each series' own branch,
+    *    next to its literal `timeseries_id`. It runs on the executors,
+    *    so a fetched batch of any size is filtered without a join, a
+    *    broadcast or a second read of the store.
+    * Starts and guards come from the same collected snapshot, so a
+    * store that changes while the batch is fetched cannot give a series
+    * a start from one state and a guard from another.
     */
   def getNewContinuous(
       spark: SparkSession,
@@ -48,55 +53,26 @@ object IncrementalIngest {
   ): DataFrame = {
     import spark.implicits._
     val known = catalog.filter(c => registry.contains(c.sourceFx))
-    val catalogIds = known.map(_.timeseriesId)
-    // bounded by |worklist|: prune the fact scan to cataloged series
-    // (partition/bucket-pruned under TableLayout) before aggregating
-    val lastPointsDf = measurements
-      .filter(col("timeseries_id").isin(catalogIds: _*))
+    // prune the fact scan to cataloged series (partition/bucket-pruned
+    // under TableLayout) before aggregating
+    val lastPoints: Map[Long, Timestamp] = measurements
+      .filter(col("timeseries_id").isin(known.map(_.timeseriesId): _*))
       .groupBy(col("timeseries_id"))
-      .agg(max(col("datetime")).as("last_dt"))
-
-    // the worklist frame: (series, fx, fetch group) x start timestamp.
-    // cache_key is NULL for per-series adapters; the group key of a
-    // shared adapter is computed from catalog metadata (driver data
-    // already — no fact-table access).
-    val worklist = known
-      .map { c =>
-        val key = registry(c.sourceFx) match {
-          case sa: SharedFetchAdapter => sa.cacheKey(c)
-          case _                      => null
-        }
-        (c.timeseriesId, c.sourceFx, key)
-      }
-      .toDF("timeseries_id", "source_fx", "cache_key")
-      .join(lastPointsDf, Seq("timeseries_id"), "left")
-      .withColumn(
-        "start_ts",
-        coalesce(timestamp_millis(unix_millis(col("last_dt")) + 1000L), lit(Epoch))
-      )
-
-    // the ONE fetch-boundary collect: a row per shared GROUP (its
-    // earliest start), and a row per series only where the protocol is
-    // per-series (NULL cache_key keeps the series id in the key)
-    val starts = worklist
-      .groupBy(
-        col("source_fx"),
-        col("cache_key"),
-        when(col("cache_key").isNull, col("timeseries_id")).as("timeseries_id")
-      )
-      .agg(min(col("start_ts")).as("start_ts"))
-      .as[(String, Option[String], Option[Long], java.sql.Timestamp)]
+      .agg(max(col("datetime")))
+      .as[(Long, Option[Timestamp])]
       .collect()
-    val groupStarts: Map[(String, String), java.sql.Timestamp] =
-      starts.collect { case (fx, Some(key), _, ts) => (fx, key) -> ts }.toMap
-    val seriesStarts: Map[Long, java.sql.Timestamp] =
-      starts.collect { case (_, None, Some(id), ts) => id -> ts }.toMap
+      .collect { case (id, Some(last)) => id -> last }
+      .toMap
 
-    def startOf(cfg: SeriesConfig): java.sql.Timestamp =
-      seriesStarts.getOrElse(cfg.timeseriesId, Epoch)
+    // the reference's `last + 1 s` (`R/getNewContinuous.R:132-136`),
+    // truncated to the millisecond; a series with no stored point
+    // backfills from the epoch
+    def startOf(cfg: SeriesConfig): Timestamp =
+      lastPoints.get(cfg.timeseriesId).fold(Epoch)(last => new Timestamp(last.getTime + 1000L))
 
-    def normalize(fetched: DataFrame, cfg: SeriesConfig): DataFrame =
-      fetched
+    def normalize(fetched: DataFrame, cfg: SeriesConfig): DataFrame = {
+      val guarded = lastPoints.get(cfg.timeseriesId).fold(fetched)(last => fetched.filter(col("datetime") > lit(last)))
+      guarded
         .withColumn("timeseries_id", lit(cfg.timeseriesId))
         .withColumn("grade", coalesce(col("grade"), lit(cfg.defaultGrade.orNull)))
         .withColumn("approval", coalesce(col("approval"), lit(cfg.defaultApproval.orNull)))
@@ -104,17 +80,16 @@ object IncrementalIngest {
           "period_seconds",
           coalesce(col("period_seconds"), lit(cfg.recordRateSeconds.map(Long.box).orNull))
         )
+    }
 
-    // cache-sharing task groups (`R/getNewContinuous.R:286-316`):
     // series of a SharedFetchAdapter with equal cache keys share ONE
     // fetch from the earliest start; everything else fetches per series
     val frames = known.groupBy(_.sourceFx).toSeq.sortBy(_._1).flatMap {
       case (fx, cfgs) =>
         registry(fx) match {
           case sa: SharedFetchAdapter =>
-            cfgs.groupBy(sa.cacheKey).toSeq.sortBy(_._1).flatMap { case (key, group) =>
-              val earliest = groupStarts.getOrElse((fx, key), Epoch)
-              val shared0 = sa.fetchShared(spark, group, earliest)
+            cfgs.groupBy(sa.cacheKey).toSeq.sortBy(_._1).flatMap { case (_, group) =>
+              val shared0 = sa.fetchShared(spark, group, group.map(startOf).minBy(_.getTime))
               // barrier: N extracts must not re-run the fetch
               val shared = if (group.size > 1) shared0.localCheckpoint(false) else shared0
               group.map(cfg => normalize(sa.extract(shared, cfg), cfg))
@@ -123,17 +98,7 @@ object IncrementalIngest {
             cfgs.map(cfg => normalize(adapter.fetch(spark, cfg, startOf(cfg)), cfg))
         }
     }
-    if (frames.isEmpty)
-      spark.emptyDataFrame
-    else {
-      // re-check under the "lock" as a distributed join: never
-      // re-append a row at-or-before the series' stored last point
-      frames
-        .reduce(_.unionByName(_))
-        .join(broadcast(lastPointsDf), Seq("timeseries_id"), "left")
-        .filter(col("last_dt").isNull || col("datetime") > col("last_dt"))
-        .drop("last_dt")
-    }
+    if (frames.isEmpty) spark.emptyDataFrame else frames.reduce(_.unionByName(_))
   }
 
   /** Changed ranges per series from an appended batch — the input of

@@ -84,13 +84,16 @@ trait Transport extends Serializable {
     * ("csv" | "json" | "text" | "jdbc" | ...) — how a recorded
     * response file, paged API response, or remote table surfaces as
     * a DataFrame. For "jdbc" the locator is the connection URL and
-    * `options` carry dbtable/driver/partitioning.
+    * `options` carry dbtable/driver/partitioning. A declared `schema`
+    * replaces the format's inference, which for a headed CSV is a
+    * Spark job per call.
     */
   def rows(
       spark: SparkSession,
       locator: String,
       format: String,
-      options: Map[String, String] = Map.empty
+      options: Map[String, String] = Map.empty,
+      schema: Option[StructType] = None
   ): DataFrame
 }
 
@@ -106,9 +109,11 @@ object FileTransport extends Transport {
       spark: SparkSession,
       locator: String,
       format: String,
-      options: Map[String, String]
+      options: Map[String, String],
+      schema: Option[StructType]
   ): DataFrame = {
-    val reader = spark.read.format(format).options(options)
+    val unschemed = spark.read.format(format).options(options)
+    val reader = schema.fold(unschemed)(s => unschemed.schema(s))
     if (format == "jdbc") reader.option("url", locator).load()
     else {
       // `load("<dir>/*.xml")` makes Spark's FileStreamSink.hasMetadata

@@ -7,15 +7,21 @@ import graft.operators.DailyAggregate
 import graft.sources.{AdapterRegistry, Adapters, CsvStationAdapter, FileTransport, SeriesConfig, Transport}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.util.LongAccumulator
+
+import scala.jdk.CollectionConverters._
 
 /** The fixture file transport, counting every record it hands out. */
 final class CountingTransport(records: LongAccumulator) extends Transport {
   override def bytes(url: String): Array[Byte] = FileTransport.bytes(url)
 
-  override def rows(spark: SparkSession, locator: String, format: String, options: Map[String, String]): DataFrame = {
+  override def rows(spark: SparkSession, locator: String, format: String, options: Map[String, String],
+      schema: Option[StructType]): DataFrame = {
     val seen = udf(() => { records.add(1L); true }).asNondeterministic()
-    FileTransport.rows(spark, locator, format, options).filter(seen())
+    FileTransport.rows(spark, locator, format, options, schema).filter(seen())
   }
 }
 
@@ -153,6 +159,76 @@ class DailyUpdateSpec extends SparkSpec {
     assert(doy.nonEmpty)
     assert(doy == DailyUpdate.refreshDoyStats(daily, r.changedRanges).collect().toSet,
       "the DOY statistics must come from the written daily table")
+  }
+
+  /** Jobs one nightly run may launch: measured 12 on a 4-core host.
+    * The previous shape (two lazy last-point aggregates, CSV header
+    * inference, broadcast code maps, a correction table read three
+    * times) launched 23 over 2 CSV series and 30 over 8.
+    */
+  private val RunJobBudget = 12
+
+  /** The description of every job one `DailyUpdate.run` over `n` CSV
+    * series launches, with the store, the daily table and the
+    * corrections read from parquet (their schema reads come first and
+    * are not counted).
+    */
+  private def runJobDescriptions(n: Int): Seq[String] = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory(s"daily-update-jobs-$n")
+    val ids = (1 to n).map(_.toLong)
+    ids.foreach(id => writeCsv(dir.resolve(s"series_$id.csv"), hourly))
+    val store = ids
+      .flatMap(id => (0 until 24).map(i => (id, hour(i), hourly(i), 3600L)))
+      .toDF("timeseries_id", "datetime", "value", "period_seconds")
+      .withColumn("datetime", to_timestamp(col("datetime")))
+    store.write.parquet(dir.resolve("store").toString)
+    DailyAggregate(store.withColumn("agg_type", lit("mean")).withColumn("offset_hours", lit(0)))
+      .write.parquet(dir.resolve("daily").toString)
+    Seq((1L, 1L, java.sql.Timestamp.valueOf("2023-01-01 00:00:00"), java.sql.Timestamp.valueOf("2100-01-01 00:00:00"),
+      "offset_linear", Option(0.25), Option.empty[Double], Option.empty[Long], Option.empty[String], 1))
+      .toDF("correction_id", "timeseries_id", "start_dt", "end_dt", "ctype", "value1", "value2", "window_seconds",
+        "equation", "priority")
+      .write.parquet(dir.resolve("corrections").toString)
+    def read(name: String) = spark.read.parquet(dir.resolve(name).toString)
+    val (measurements, dailyBase, corrections) = (read("store"), read("daily"), read("corrections"))
+    val catalog = ids.map(id => SeriesConfig(id, CsvStationAdapter.name,
+      Map("path" -> dir.resolve(s"series_$id.csv").toString), defaultGrade = Some("A"), recordRateSeconds = Some(3600L)))
+
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("?"))
+    }
+    val sc = spark.sparkContext
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    val result =
+      try {
+        val r = DailyUpdate.run(spark, catalog, measurements, dailyBase, corrections, Adapters.default,
+          aggTypes = ids.map(_ -> ("mean", 0)).toMap)
+        ListenerBusAccess.drain(sc)
+        assert(sc.getLocalProperty("spark.job.description") == "caller", "run must restore the caller's description")
+        r
+      } finally {
+        sc.removeSparkListener(listener)
+        sc.setJobDescription(null)
+      }
+    assert(result.appended.count() == 48L * n)
+    assert(result.corrected.filter(col("corrected") =!= col("value")).count() == 72L, "series 1 is corrected")
+    descriptions.asScala.toSeq
+  }
+
+  test("job budget: one run launches a fixed number of labelled jobs, whatever the number of series") {
+    val two = runJobDescriptions(2)
+    val eight = runJobDescriptions(8)
+    info(s"2 CSV series: ${two.size} jobs ${two.groupBy(identity).view.mapValues(_.size).toMap}; 8: ${eight.size} jobs")
+    assert(two.size == eight.size, s"jobs grow with the series: ${two.size} for 2, ${eight.size} for 8")
+    assert(eight.size <= RunJobBudget, s"one run launched ${eight.size} jobs, budget $RunJobBudget")
+    val phases = Set("DailyUpdate › fetch", "DailyUpdate › refresh")
+    assert((two ++ eight).forall(phases), s"every job carries its phase: ${(two ++ eight).filterNot(phases).distinct}")
+    assert(phases.forall(eight.contains), "both phases launch jobs")
   }
 
   test("QC adjust step: batch grades become reconciled segments in the store") {

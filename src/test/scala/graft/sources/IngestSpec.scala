@@ -4,6 +4,8 @@ import graft.SparkSpec
 import graft.operators.{DailyAggregate, IncrementalDaily}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 class IngestSpec extends SparkSpec {
 
   private val synthCfg = SeriesConfig(
@@ -80,6 +82,73 @@ class IngestSpec extends SparkSpec {
     // station A's three series carry the same datetimes, different values
     val a = out.filter(col("timeseries_id").isin(11L, 12L, 13L))
     assert(a.select("datetime").distinct().count() == 24)
+  }
+
+  test("shared fetch: one fetch from the earliest last point, each member guarded by its own") {
+    import spark.implicits._
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[java.sql.Timestamp]
+    object RecordingWeather extends SharedFetchAdapter {
+      override val name = StationWeatherAdapter.name
+      override def cacheKey(cfg: SeriesConfig) = StationWeatherAdapter.cacheKey(cfg)
+      override def fetchShared(s: org.apache.spark.sql.SparkSession, g: Seq[SeriesConfig], t: java.sql.Timestamp) = {
+        starts.add(t)
+        StationWeatherAdapter.fetchShared(s, g, t)
+      }
+      override def extract(shared: org.apache.spark.sql.DataFrame, cfg: SeriesConfig) =
+        StationWeatherAdapter.extract(shared, cfg)
+    }
+    def cfg(id: Long, param: String) = SeriesConfig(id, StationWeatherAdapter.name,
+      Map("station" -> "A", "parameter" -> param, "from" -> "2023-01-01 00:00:00", "to" -> "2023-01-02 00:00:00"))
+    // hourly points; the earliest last point carries sub-second microseconds
+    val lastPoints = Seq(
+      (11L, "2023-01-01 03:00:00.123456"),
+      (12L, "2023-01-01 10:00:00"),
+      (13L, "2023-01-01 20:00:00")
+    )
+    val store = lastPoints.toDF("timeseries_id", "datetime").withColumn("datetime", to_timestamp(col("datetime")))
+    val out = IncrementalIngest
+      .getNewContinuous(spark, Seq(cfg(11L, "temp_c"), cfg(12L, "rh_pct"), cfg(13L, "wind_kmh")), store,
+        new AdapterRegistry(Seq(RecordingWeather)))
+      .groupBy("timeseries_id")
+      .agg(min("datetime"), count(lit(1)))
+      .as[(Long, java.sql.Timestamp, Long)]
+      .collect()
+      .sortBy(_._1)
+      .toSeq
+    val hour = (h: Int) => java.sql.Timestamp.valueOf(f"2023-01-01 $h%02d:00:00")
+    assert(out == Seq((11L, hour(4), 20L), (12L, hour(11), 13L), (13L, hour(21), 3L)),
+      "each member gets exactly its rows after its own last point")
+    assert(starts.asScala.toSeq == Seq(java.sql.Timestamp.valueOf("2023-01-01 03:00:01.123")),
+      "one group fetch from the earliest last point, truncated to ms, plus 1 s")
+  }
+
+  /** A station CSV with the given header line and two records. */
+  private def stationCsv(header: String): String = {
+    val path = java.nio.file.Files.createTempDirectory("csvschema").resolve("station.csv")
+    java.nio.file.Files.write(path, Seq(header, "2023-01-01 00:00:00,1.5,,final", "2023-01-01 01:00:00,2.5,77,provisional")
+      .mkString("\n").getBytes("UTF-8"))
+    path.toString
+  }
+
+  private def fetchCsv(path: String) =
+    CsvStationAdapter
+      .fetch(spark, SeriesConfig(2L, CsvStationAdapter.name, Map("path" -> path)), java.sql.Timestamp.valueOf("2023-01-01 00:00:00"))
+      .orderBy("datetime")
+      .collect()
+
+  test("CsvStationAdapter: empty and unmapped qualifier codes give NULL") {
+    val out = fetchCsv(stationCsv("datetime,value,qualifier_code,approval_label"))
+    assert(out.map(_.getAs[Double]("value")).toSeq == Seq(1.5, 2.5))
+    assert(out.map(_.getAs[String]("qualifier")).toSeq == Seq(null, null))
+    assert(out.map(_.getAs[String]("approval")).toSeq == Seq("A", "P"))
+  }
+
+  test("CsvStationAdapter: a header with swapped or renamed columns fails instead of misplacing values") {
+    Seq("datetime,value,approval_label,qualifier_code", "datetime,level,qualifier_code,approval_label").foreach { header =>
+      val e = intercept[Exception](fetchCsv(stationCsv(header)))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(messages.exists(_.contains("CSV header does not conform to the schema")), s"$header: $e")
+    }
   }
 
   test("CsvStationAdapter maps WSC-style qualifier and bilingual approval codes") {

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The transport seam: an adapter body must be transport-agnostic —
   * swapping the fixture [[FileTransport]] for any other
@@ -25,10 +26,11 @@ class TransportSpec extends SparkSpec {
         spark: SparkSession,
         locator: String,
         format: String,
-        options: Map[String, String]
+        options: Map[String, String],
+        schema: Option[StructType]
     ): DataFrame = {
       calls += ((format, locator))
-      FileTransport.rows(spark, locator, format, options)
+      FileTransport.rows(spark, locator, format, options, schema)
     }
   }
 
