@@ -68,15 +68,12 @@ object Bench {
 
   /** Task-end events are posted async on the listener bus; drain it so
     * a snapshot delta attributes every task to the query that ran it.
-    * `listenerBus` is private[spark] — reflection, best-effort (a
-    * missed late task skews one query's bytes, never the timings).
+    * Best-effort: a drain that times out is ignored (a missed late task
+    * skews one query's bytes, never the timings).
     */
   private def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(50) }
+    try org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted

@@ -7,11 +7,8 @@ import org.apache.spark.sql.functions._
   * DuckDB: the first 14 hex digits of md5, read as an integer. Used
   * wherever a hash participates in ORACLE-CHECKED results (MinHash,
   * SimHash, fingerprints). 56 bits always fit a positive BIGINT in
-  * both engines.
-  *
-  * Production swap-in: `xxhash64(seed, col)` (Spark-native, codegen,
-  * no hex round-trip) — same operator shapes, different hash family;
-  * see graft.ml.Dedup.HashFamily.
+  * both engines. It is the one hash family these operators use: the
+  * results they produce are the results the oracle checks.
   */
 object PortableHash {
 

@@ -22,15 +22,15 @@ import graft.functions.PortableHash
   */
 object Dedup {
 
-  /** Hash family for MinHash permutations. */
+  /** Hash family for MinHash permutations; one member (see
+    * [[minHashNearDups]]).
+    */
   sealed trait HashFamily
   /** One md5-derived 28-bit base hash per shingle + affine
     * permutations `(a_i*h + b_i) mod p` — bit-identical in DuckDB
     * (oracle checks) and 8x cheaper than salted re-hashing.
     */
   case object PortableMd5 extends HashFamily
-  /** xxhash64(seed=i) — Spark-native codegen path for production. */
-  case object Xx64 extends HashFamily
 
   /** Scale-adaptive input spreading for the heavy scan-side text
     * kernels (tokenize / shingle / hash): when the upstream scan has
@@ -69,14 +69,6 @@ object Dedup {
       if (cur < target) {
         if (pin) df.repartition(target, key) else df.repartition(key)
       } else df
-    }
-
-  private def permHash(family: HashFamily, perm: Int, shingle: Column): Column =
-    family match {
-      case PortableMd5 =>
-        (PortableHash.md5num28(shingle) * PortableHash.minHashA(perm) +
-          PortableHash.minHashB(perm)) % PortableHash.MinHashP
-      case Xx64 => xxhash64(lit(perm), shingle)
     }
 
   /** Distinct word n-gram shingles per doc: (idCol, shingle).
@@ -167,107 +159,23 @@ object Dedup {
         val p = a.join(b, Seq("shingle")).filter(col("d1") < col("d2"))
         (p, shM.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh")))
     }
-    pairs
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col(idCol).as("d1"), col("n_sh").as("n1")), Seq("d1"))
-      .join(sizes.select(col(idCol).as("d2"), col("n_sh").as("n2")), Seq("d2"))
+    pairOverlap(pairs, sizes, idCol)
       .withColumn("union_sh", col("n1") + col("n2") - col("inter"))
       .withColumn("jaccard", col("inter").cast("double") / col("union_sh"))
       .filter(col("jaccard") >= threshold)
   }
 
-  /** [[containmentPairs]] variant with an AllPairs/PPJoin prefix
-    * filter in front of the verification join — for the HIGH-df-cap
-    * regime only. With the default tight cap the plain df-capped join
-    * wins outright (measured, 3 warm reps each: 1.76 s vs 4.07 s at
-    * sf0.1, 5.68 s vs 13.98 s at sf1 — the per-doc rarest-first
-    * ranking pass costs more than the capped pair join it prunes,
-    * because Σ df² with df ≤ 50 is already linear-ish in corpus size).
-    * When containment must be found through COMMON text (boilerplate-
-    * heavy corpora where a tight cap destroys recall and the cap must
-    * rise to 10³-10⁴), posting lists go quadratic and this prefix
-    * filter is the standard answer — candidates come from
-    * prefix(smaller) × all(larger) instead of all × all. MlSpec
-    * asserts it reproduces [[containmentPairs]] exactly on real data
-    * (the filter is provably lossless).
+  /** Pair overlap shared by the pair scorers: per `(d1, d2)` row the
+    * number of co-occurring shingles (`inter`), joined with both
+    * endpoints' shingle counts from `sizes` (`idCol`, `n_sh`) as `n1`
+    * and `n2`.
     */
-  def containmentPairsPrefix(
-      sh: DataFrame,
-      idCol: String,
-      threshold: Double,
-      maxShingleDocFreq: Int
-  ): DataFrame = {
-    val shM = sh.localCheckpoint(false) // feeds sizes + df + both join sides
-    val sizes = shM.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val dfTab = shM
-      .groupBy(col("shingle"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleDocFreq)
-    val filtered = shM
-      .join(dfTab, Seq("shingle"))
-      .localCheckpoint(false) // feeds the prefix ranking AND verification
-
-    // ---- AllPairs/PPJoin prefix filter (lossless) --------------------
-    // A qualifying pair overlaps on >= ceil(t * min(n1, n2)) capped
-    // shingles. Order each doc's capped shingles rarest-first (df,
-    // shingle); if the SMALLER-side doc's first
-    //   L = m - ceil(t * n) + 1
-    // shingles (m = capped size, n = uncapped size) all missed the
-    // other doc, the overlap is at most m - L = ceil(t*n) - 1 < the
-    // required ceil(t * min) — so every qualifying pair co-occurs on a
-    // smaller-side PREFIX shingle. Candidates therefore come from
-    // prefix(smaller) x all(larger) instead of all x all: posting
-    // lists contribute |prefix hits| * df instead of df^2, which is
-    // what keeps the join alive when the df cap admits hot-ish
-    // shingles at corpus scale. Verification below recomputes the
-    // exact intersection, so the filter cannot change the result.
-    val docW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol))
-      .orderBy(col("df"), col("shingle"))
-    val ranked = filtered
-      .join(sizes, Seq(idCol))
-      .withColumn("r", row_number().over(docW))
-      .withColumn("m", count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))))
-      .withColumn("pref_len", col("m") - ceil(lit(threshold) * col("n_sh")).cast("long") + 1L)
-    val prefix = ranked
-      .filter(col("r") <= col("pref_len"))
-      .select(col(idCol).as("pa"), col("shingle"), col("n_sh").as("na"))
-    val full = filtered
-      .join(sizes, Seq(idCol))
-      .select(col(idCol).as("pb"), col("shingle"), col("n_sh").as("nb"))
-    val cand = prefix
-      .join(full, Seq("shingle"))
-      .filter(
-        col("pa") =!= col("pb") &&
-          (col("na") < col("nb") || (col("na") === col("nb") && col("pa") < col("pb")))
-      )
-      .select(least(col("pa"), col("pb")).as("d1"), greatest(col("pa"), col("pb")).as("d2"))
-      .distinct()
-
-    // ---- exact verification over candidate pairs only ----------------
-    // same discipline as jaccardPairs: restrict the
-    // SHINGLE FRAME to candidate doc ids BEFORE the a x b join — docs
-    // outside every candidate pair contribute no join rows at all; the
-    // pair-level semi-join stays as the final filter
-    val candM = cand.localCheckpoint(false) // feeds two id sets + the pair filter
-    val candIds = candM
-      .select(col("d1").as(idCol))
-      .union(candM.select(col("d2").as(idCol)))
-      .distinct()
-    val restricted = filtered.join(candIds, Seq(idCol), "left_semi")
-    val a = restricted.select(col(idCol).as("d1"), col("shingle"))
-    val b = restricted.select(col(idCol).as("d2"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("d1") < col("d2"))
-      .join(candM, Seq("d1", "d2"), "left_semi")
+  private def pairOverlap(pairs: DataFrame, sizes: DataFrame, idCol: String): DataFrame =
+    pairs
       .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("inter"))
       .join(sizes.select(col(idCol).as("d1"), col("n_sh").as("n1")), Seq("d1"))
       .join(sizes.select(col(idCol).as("d2"), col("n_sh").as("n2")), Seq("d2"))
-      .withColumn("containment", col("inter").cast("double") / least(col("n1"), col("n2")))
-      .filter(col("containment") >= threshold)
-  }
 
   /** Asymmetric containment pairs: |A∩B| / min(|A|, |B|) ≥ threshold
     * over distinct shingle sets — the quote/subset detector symmetric
@@ -277,10 +185,12 @@ object Dedup {
     * inverted-index pair join IS the honest scale path at the default
     * cap: posting lists are bounded, so pair production is bounded by
     * Σ df² over kept shingles — linear-ish in corpus size, never
-    * corpus². (A PPJoin-style prefix filter was built and measured
-    * SLOWER at this cap on both sf0.1 and sf1 — see
-    * [[containmentPairsPrefix]] for the numbers and the regime where
-    * it does win.)
+    * corpus². (An AllPairs/PPJoin prefix filter in front of the pair
+    * join was measured SLOWER at this cap, 4.07 vs 1.76 s at sf0.1 and
+    * 13.98 vs 5.68 s at sf1: the per-doc rarest-first ranking pass
+    * cost more than the capped join it pruned. It pays off only when
+    * the cap rises to 10³-10⁴ and posting lists go quadratic, a regime
+    * no query runs.)
     *
     * Output keeps both sizes and the intersection so the caller can
     * re-derive either directional containment (inter/n1, inter/n2);
@@ -302,43 +212,29 @@ object Dedup {
     val filtered = shM.join(rare, Seq("shingle"), "left_semi")
     val a = filtered.select(col(idCol).as("d1"), col("shingle"))
     val b = filtered.select(col(idCol).as("d2"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .filter(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col(idCol).as("d1"), col("n_sh").as("n1")), Seq("d1"))
-      .join(sizes.select(col(idCol).as("d2"), col("n_sh").as("n2")), Seq("d2"))
+    pairOverlap(a.join(b, Seq("shingle")).filter(col("d1") < col("d2")), sizes, idCol)
       .withColumn("containment", col("inter").cast("double") / least(col("n1"), col("n2")))
       .filter(col("containment") >= threshold)
   }
 
-  /** Per-doc MinHash signature columns mh0..mh{k-1}. For the md5
-    * family the base hash is materialized as ONE column before the
-    * aggregate, so the digest runs once per shingle and the k
-    * permutations are pure integer affine maps — not k digests.
+  /** Per-doc MinHash signature columns mh0..mh{k-1} (PortableMd5
+    * family) as an aggregate over the shingle frame. The base hash is
+    * materialized as ONE column before the aggregate, so the digest
+    * runs once per shingle and the k permutations are pure integer
+    * affine maps — not k digests. The pipeline runs the fused
+    * [[minHashSignaturesFused]] kernel; this form is the reference it
+    * is checked against.
     */
-  def minHashSignatures(
-      sh: DataFrame,
-      idCol: String,
-      numPerm: Int,
-      family: HashFamily = Xx64
-  ): DataFrame = family match {
-    case PortableMd5 =>
-      val base = sh.withColumn("__h", PortableHash.md5num28(col("shingle")))
-      def perm(i: Int) =
-        (col("__h") * PortableHash.minHashA(i) + PortableHash.minHashB(i)) % PortableHash.MinHashP
-      base
-        .groupBy(col(idCol))
-        .agg(
-          min(perm(0)).as("mh0"),
-          (1 until numPerm).map(i => min(perm(i)).as(s"mh$i")): _*
-        )
-    case Xx64 =>
-      sh.groupBy(col(idCol))
-        .agg(
-          min(permHash(family, 0, col("shingle"))).as("mh0"),
-          (1 until numPerm).map(i => min(permHash(family, i, col("shingle"))).as(s"mh$i")): _*
-        )
+  def minHashSignatures(sh: DataFrame, idCol: String, numPerm: Int): DataFrame = {
+    val base = sh.withColumn("__h", PortableHash.md5num28(col("shingle")))
+    def perm(i: Int) =
+      (col("__h") * PortableHash.minHashA(i) + PortableHash.minHashB(i)) % PortableHash.MinHashP
+    base
+      .groupBy(col(idCol))
+      .agg(
+        min(perm(0)).as("mh0"),
+        (1 until numPerm).map(i => min(perm(i)).as(s"mh$i")): _*
+      )
   }
 
   /** [[minHashSignatures]] (PortableMd5 family) computed straight from
@@ -407,6 +303,10 @@ object Dedup {
 
   /** Full MinHash-LSH near-dup pipeline: shingle -> sign -> band ->
     * candidate -> verify true Jaccard >= threshold.
+    *
+    * `family` selects nothing: [[HashFamily]] has the one member
+    * [[PortableMd5]]. The parameter stays so that callers passing it
+    * positionally keep compiling.
     */
   def minHashNearDups(
       docs: DataFrame,
@@ -416,23 +316,15 @@ object Dedup {
       numPerm: Int,
       bands: Int,
       threshold: Double,
-      family: HashFamily = Xx64
-  ): DataFrame = family match {
-    case PortableMd5 =>
-      // signatures are a scan-side kernel projection: the exploded
-      // shingle frame feeds ONLY the verification join, so there is no
-      // outer localCheckpoint (a full extra write+read of the widest
-      // frame, on top of the one jaccardPairs takes)
-      val sig = minHashSignaturesFused(docs, idCol, textCol, shingleN, numPerm)
-      val cand = lshCandidates(sig, idCol, numPerm, bands)
-      jaccardPairs(shingles(docs, idCol, textCol, shingleN), idCol, threshold, Some(cand))
-    case Xx64 =>
-      // one materialization: the shingle projection feeds both the
-      // signature aggregate and the verification pair join
-      val sh = shingles(docs, idCol, textCol, shingleN).localCheckpoint(false)
-      val sig = minHashSignatures(sh, idCol, numPerm, family)
-      val cand = lshCandidates(sig, idCol, numPerm, bands)
-      jaccardPairs(sh, idCol, threshold, candidates = Some(cand))
+      family: HashFamily = PortableMd5
+  ): DataFrame = {
+    // signatures are a scan-side kernel projection: the exploded
+    // shingle frame feeds ONLY the verification join, so there is no
+    // outer localCheckpoint (a full extra write+read of the widest
+    // frame, on top of the one jaccardPairs takes)
+    val sig = minHashSignaturesFused(docs, idCol, textCol, shingleN, numPerm)
+    val cand = lshCandidates(sig, idCol, numPerm, bands)
+    jaccardPairs(shingles(docs, idCol, textCol, shingleN), idCol, threshold, Some(cand))
   }
 
   /** 56-bit SimHash over the doc's token multiset: bit j of the hash

@@ -18,35 +18,6 @@ import graft.functions.VectorOps
   */
 object Similarity {
 
-  /** Cosine similarity between two double-array columns (dot/norms).
-    * Session-free portable form via zip_with + aggregate; the DataFrame
-    * entry points below use the codegen'd `vec_dot` native expression
-    * instead (same sequential summation → bit-identical results).
-    */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = sqrt(hofDot(a, a) * hofDot(b, b))
-    when(denom > 0, hofDot(a, b) / denom)
-  }
-
-  private def hofDot(x: Column, y: Column): Column =
-    aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-
-  /** Native-expression cosine. Zero-norm and NULL vectors have no
-    * direction, so their cosine is NULL (matches DuckDB's x/0 = NULL)
-    * instead of an ANSI divide-by-zero crash — a 100 TB corpus WILL
-    * contain failed-embedder zero vectors, and one of them must not
-    * kill the stage.
-    *
-    * The fused [[graft.functions.VecCosine]] kernel accumulates
-    * xy/xx/yy in ONE array pass. Its predecessor,
-    * `when(sqrt(dot(a,a)*dot(b,b)) > 0, dot(a,b)/denom)`, inlined the
-    * denominator twice and codegen CSE does not merge conditional
-    * branch values — five walks per compared pair, which cost the
-    * cosine/IVF bench family 20–86 %.
-    */
-  private def nativeCosine(a: Column, b: Column): Column =
-    VectorOps.cosine(a, b)
-
   private def toDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
   /** Exact brute-force top-k neighbors for each query vector.
@@ -75,7 +46,7 @@ object Similarity {
       .filter(VectorOps.norm2(col("q")).isNotNull)
     val scored = corpus
       .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", nativeCosine(col("q"), col("v")))
+      .withColumn("cos", VectorOps.cosine(col("q"), col("v")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
     scored
       .withColumn("rank", row_number().over(w))
@@ -743,7 +714,7 @@ object Similarity {
     val scored = candidates
       .join(broadcast(queryVecs), Seq("query_id"))
       .join(corpus.select(col("neighbor_id"), col("v")), Seq("neighbor_id"))
-      .withColumn("cos", nativeCosine(col("q"), col("v")))
+      .withColumn("cos", VectorOps.cosine(col("q"), col("v")))
       .select("query_id", "neighbor_id", "cos")
     // deterministic-margin ranking (see ivfTopK): rank on the
     // 4-decimal quantized score with id tie-break so the top-k set

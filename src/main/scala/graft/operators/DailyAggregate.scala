@@ -25,9 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object DailyAggregate {
 
-  val SupportedTypes: Set[String] =
-    Set("instantaneous", "mean", "median", "min", "max", "sum", "min_max_mean")
-
   /** Local-day bucket: date of (datetime shifted by per-row offset hours). */
   def localDay(datetime: Column, offsetHours: Column): Column =
     to_date(datetime + offsetHours * expr("INTERVAL '1' HOUR"))

@@ -38,8 +38,7 @@ object CorpusQueries {
       shingleN = 3,
       numPerm = MinHashPerms,
       bands = MinHashBands,
-      threshold = 0.6,
-      family = Dedup.PortableMd5
+      threshold = 0.6
     )
     val cc = Dedup.connectedComponents(docs.select("doc_id"), "doc_id", pairs.select("d1", "d2"))
     cc.withColumn("cluster_size", count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
@@ -169,8 +168,7 @@ object CorpusQueries {
       shingleN = 3,
       numPerm = MinHashPerms,
       bands = MinHashBands,
-      threshold = 0.6,
-      family = Dedup.PortableMd5
+      threshold = 0.6
     )
     val cc = Dedup.connectedComponents(docs.select("doc_id"), "doc_id", pairs.select("d1", "d2"))
     Sampling
@@ -206,7 +204,7 @@ object CorpusQueries {
         val pairs = Dedup.minHashNearDups(
           docs, "doc_id", "text",
           shingleN = 3, numPerm = MinHashPerms, bands = MinHashBands,
-          threshold = 0.6, family = Dedup.PortableMd5
+          threshold = 0.6
         )
         Dedup
           .connectedComponents(docs.select("doc_id"), "doc_id", pairs.select("d1", "d2"))

@@ -574,8 +574,7 @@ object TextMlQueries {
         shingleN = 3,
         numPerm = MinHashPerms,
         bands = MinHashBands,
-        threshold = 0.6,
-        family = Dedup.PortableMd5
+        threshold = 0.6
       )
       .select(
         col("d1"),

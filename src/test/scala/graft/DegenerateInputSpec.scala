@@ -4,7 +4,7 @@ import graft.queries.Registry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Degenerate-input robustness net — the round-13 empty-corpus net
+/** Degenerate-input robustness net — the empty-corpus net
   * caught 5 real crashes at zero rows; this is the next-cheapest input
   * family a 100 TB pipeline actually produces:
   *
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    (single-point series per key as a side effect of limit(1));
   *  - zero-norm and NULL embeddings (cosine's division, IVF argmax
   *    over NaN scores, dim inference from a row whose vector is NULL);
-  *  - (r15) NaN/Inf-component, NULL-element and truncated-dimension
+  *  - NaN/Inf-component, NULL-element and truncated-dimension
   *    embeddings — NaN orders above +Inf in BOTH engines so a bare
   *    `norm > 0` guard keeps it, a NULL element hard-errors DuckDB's
   *    list_dot_product, and a truncated vector probes min-length

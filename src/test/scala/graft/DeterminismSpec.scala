@@ -17,7 +17,7 @@ class DeterminismSpec extends SparkSpec {
 
   // queries whose shapes are most at risk of layout dependence; the
   // rest of the registry shares these operators and the oracle's
-  // per-round hash check
+  // hash check
   private val sweep = Seq(
     "q_stratified_sample", // hash-rank windows
     "q_weighted_mix",      // apportionment + rank
@@ -39,23 +39,23 @@ class DeterminismSpec extends SparkSpec {
     "q_kn_counts",         // count-of-counts aggregation
     "q_video_phash",       // container decode + per-frame hashing
     "q_filter_decision",   // content-hash window + reason precedence
-    "q_simhash_screen",    // persisted band-index probe (round 7)
-    "q_semdedup_screen",   // persisted cluster-index probe (round 7)
-    "q_shard_manifest",    // prefix-sum pack plan aggregate (round 7)
-    "q_embed_neardup_blocked", // multiprobe bucket pair join (round 7)
-    "q_model_raster_insert", // first()-aggregated index join + distributed id rank (round 7)
-    "q_kn_perplexity",     // self-trained LM scoring + percentile tercile thresholds (round 7)
-    "q_kn_screen",         // persisted-LM-index probe with backoff chain (round 7)
-    "q_containment",       // df-capped inverted-index pair join, asymmetric score (round 7)
-    "q_epoch_shuffle",     // seeded hash permutation + per-shard rank windows (round 7)
-    "q_temperature_mix",   // sqrt-weight apportionment + hash-rank fill (round 7)
-    "q_qualifier_ranks",   // composite-stream flatMapGroups kernel (round 11)
-    "q_bounds_maintenance", // null-safe extrema merge + broadcast catalog join (round 11)
-    "q_corrected_read_e2e", // compound resolve + correction fold + resample composition (round 12)
-    "q_ivf_serve_scaled",  // count-derived geometry + quantized-margin rank over probe join (round 12)
-    "q_ivf_pq_serve_scaled", // count-derived geometry + ADC rank over probe join (round 12)
-    "q_ann_lsh_scaled",    // count-derived plane count + multiprobe bucket join (round 12)
-    "q_spline_fill"        // per-series tridiagonal-solve kernel over a window fixture (round 13)
+    "q_simhash_screen",    // persisted band-index probe
+    "q_semdedup_screen",   // persisted cluster-index probe
+    "q_shard_manifest",    // prefix-sum pack plan aggregate
+    "q_embed_neardup_blocked", // multiprobe bucket pair join
+    "q_model_raster_insert", // first()-aggregated index join + distributed id rank
+    "q_kn_perplexity",     // self-trained LM scoring + percentile tercile thresholds
+    "q_kn_screen",         // persisted-LM-index probe with backoff chain
+    "q_containment",       // df-capped inverted-index pair join, asymmetric score
+    "q_epoch_shuffle",     // seeded hash permutation + per-shard rank windows
+    "q_temperature_mix",   // sqrt-weight apportionment + hash-rank fill
+    "q_qualifier_ranks",   // composite-stream flatMapGroups kernel
+    "q_bounds_maintenance", // null-safe extrema merge + broadcast catalog join
+    "q_corrected_read_e2e", // compound resolve + correction fold + resample composition
+    "q_ivf_serve_scaled",  // count-derived geometry + quantized-margin rank over probe join
+    "q_ivf_pq_serve_scaled", // count-derived geometry + ADC rank over probe join
+    "q_ann_lsh_scaled",    // count-derived plane count + multiprobe bucket join
+    "q_spline_fill"        // per-series tridiagonal-solve kernel over a window fixture
   )
 
   private def rows(name: String): Seq[String] =

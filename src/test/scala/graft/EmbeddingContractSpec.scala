@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * DuckDB twin is `Similarity.finiteNormWhere` (coalesce-NULL→NaN
   * inside the dot, then `n2 > 0 AND isfinite(n2)`).
   *
-  * Why a bare `norm² > 0` was NOT enough (the r14 guard): both Spark
+  * Why a bare `norm² > 0` was NOT enough: both Spark
   * SQL and DuckDB order NaN ABOVE every other double — including +Inf
   * — so `NaN > 0` is TRUE in both engines and a NaN-component vector
   * sails through, then ranks cos=NaN FIRST in a DuckDB DESC top-k

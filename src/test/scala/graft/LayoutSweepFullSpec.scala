@@ -2,9 +2,9 @@ package graft
 
 import graft.queries.Registry
 
-/** One-shot FULL-registry layout-invariance sweep (round-14 brief
-  * item 5): every registered query, compared byte-for-byte across
-  * three physical layouts of the same data —
+/** One-shot FULL-registry layout-invariance sweep: every registered
+  * query, compared byte-for-byte across three physical layouts of the
+  * same data —
   *
   *   1. the driver's single-file-per-table corpus as-is (baseline);
   *   2. shredded scans + skewed shuffles (files.maxPartitionBytes=64k,
@@ -16,7 +16,7 @@ import graft.queries.Registry
   * Gated behind GRAFT_FULL_LAYOUT_SWEEP=1 because the full sweep runs
   * every query three times (~8 min): it is a once-per-audit
   * instrument, not a per-commit cost. The standing per-commit net
-  * remains DeterminismSpec's risk-weighted 36. Result of the round-14
+  * remains DeterminismSpec's risk-weighted 36. Result of its first
   * run: 160/160 invariant (see SURVEY §bench notes).
   */
 class LayoutSweepFullSpec extends SparkSpec {

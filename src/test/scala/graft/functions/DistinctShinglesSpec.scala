@@ -6,14 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The fused `distinct_shingles` kernel must reproduce the composable
-  * HOF-chain + cross-row-distinct form it replaced (r16 optimization:
-  * one codegen projection instead of interpreted HOFs + an Exchange).
+  * HOF-chain + cross-row-distinct form it replaced (one codegen
+  * projection instead of interpreted HOFs + an Exchange).
   * Equivalence is checked through the full Dataframe path — tokenizer,
   * explode, and the old `.distinct()` — not just the kernel.
   */
 class DistinctShinglesSpec extends SparkSpec {
 
-  /** The exact pre-r16 formulation of Dedup.shingles. */
+  /** The exact earlier formulation of Dedup.shingles. */
   private def oldShingles(
       docs: org.apache.spark.sql.DataFrame,
       n: Int

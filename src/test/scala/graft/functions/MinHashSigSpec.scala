@@ -7,22 +7,16 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The one-pass `minhash_sig` kernel must be bit-identical to the
   * explode -> md5num28 -> groupBy(doc).agg(k mins) aggregate it
-  * replaced for the PortableMd5 family (r16 optimization: the
-  * signature Exchange carrying the shingle stream removed). Checked
-  * through the full DataFrame path against the pre-r16 formulation —
-  * Dedup.shingles + Dedup.minHashSignatures(PortableMd5).
+  * replaced (the kernel removed the signature Exchange carrying the
+  * shingle stream). Checked through the full DataFrame path against
+  * that aggregate form — Dedup.shingles + Dedup.minHashSignatures.
   */
 class MinHashSigSpec extends SparkSpec {
 
   private val K = 8
 
   private def oldSigs(docs: org.apache.spark.sql.DataFrame, n: Int) =
-    Dedup.minHashSignatures(
-      Dedup.shingles(docs, "doc_id", "text", n),
-      "doc_id",
-      K,
-      Dedup.PortableMd5
-    )
+    Dedup.minHashSignatures(Dedup.shingles(docs, "doc_id", "text", n), "doc_id", K)
 
   private def newSigs(docs: org.apache.spark.sql.DataFrame, n: Int) =
     Dedup.minHashSignaturesFused(docs, "doc_id", "text", n, K)
@@ -70,16 +64,16 @@ class MinHashSigSpec extends SparkSpec {
   test("real data: sf0.001 documents, n=3, full minHashNearDups pair parity") {
     val d = spark.read.parquet(s"$sf001/documents.parquet").select("doc_id", "text")
     assert(rows(newSigs(d, 3)) == rows(oldSigs(d, 3)))
-    // end-to-end: the fused pipeline's pair set must equal the pre-r16
+    // end-to-end: the fused pipeline's pair set must equal the older
     // checkpointed-aggregate pipeline's (identical sig + cand + verify)
     val fused = Dedup
-      .minHashNearDups(d, "doc_id", "text", 3, K, 4, 0.6, Dedup.PortableMd5)
+      .minHashNearDups(d, "doc_id", "text", 3, K, 4, 0.6)
       .select("d1", "d2")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .toSet
     val sh = Dedup.shingles(d, "doc_id", "text", 3).localCheckpoint(false)
-    val sig = Dedup.minHashSignatures(sh, "doc_id", K, Dedup.PortableMd5)
+    val sig = Dedup.minHashSignatures(sh, "doc_id", K)
     val cand = Dedup.lshCandidates(sig, "doc_id", K, 4)
     val old = Dedup
       .jaccardPairs(sh, "doc_id", 0.6, candidates = Some(cand))

@@ -7,13 +7,13 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The one-pass `portable_simhash` kernel must be bit-identical to the
   * explode -> groupBy(doc, tok) -> 56-vote aggregate pipeline it
-  * replaced in Dedup.simHash (r16 optimization: two hash-aggregate
-  * Exchanges removed). Checked through the full DataFrame path —
-  * tokenizer included — against the exact pre-r16 formulation.
+  * replaced in Dedup.simHash (the kernel removed two hash-aggregate
+  * Exchanges). Checked through the full DataFrame path — tokenizer
+  * included — against that exact earlier formulation.
   */
 class PortableSimHashSpec extends SparkSpec {
 
-  /** The exact pre-r16 Dedup.simHash formulation. */
+  /** The exact earlier Dedup.simHash formulation. */
   private def oldSimHash(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val toksDf = docs
       .select(col("doc_id"), explode(TextStats.tokens(col("text"))).as("tok"))

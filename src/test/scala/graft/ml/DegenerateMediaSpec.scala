@@ -3,7 +3,7 @@ package graft.ml
 import graft.SparkSpec
 import graft.operators.Imputation
 
-/** Degenerate-input net for the two input classes the r14
+/** Degenerate-input net for the two input classes the
   * DegenerateInputSpec mutation table skips: truncated/garbage
   * (non-NULL) binary payloads into the real-codec paths, and
   * sub-minimum knot counts into the spline family.

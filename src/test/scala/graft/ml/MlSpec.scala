@@ -48,7 +48,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("Dedup.spread keeps full width under AQE (REPARTITION_BY_NUM, not BY_COL)") {
-    // the r16 q_containment regression: repartition(key) without a count
+    // the q_containment regression: repartition(key) without a count
     // is coalescible by AQE, which folded the tiny-bytes docs shuffle
     // back to ~1 partition and serialized the tokenize/shingle kernels
     // plus everything under the localCheckpoint. The explicit-count form
@@ -97,38 +97,18 @@ class MlSpec extends SparkSpec {
     assert(jac.isEmpty)
   }
 
-  test("containment prefix filter is lossless: equals the exhaustive pair join on real data") {
-    val d = spark.read.parquet(s"$sf001/documents.parquet")
-    val sh = Dedup.shingles(d, "doc_id", "text", 3)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("d1", "d2", "inter", "n1", "n2")
-      .orderBy("d1", "d2")
-      .collect()
-      .map(_.toString)
-      .toSeq
-    // two thresholds: 0.5 (the registered query) and 0.9 (deep prefix cut)
-    Seq(0.5, 0.9).foreach { t =>
-      val pref = rows(Dedup.containmentPairsPrefix(sh, "doc_id", t, maxShingleDocFreq = 50))
-      val plain = rows(Dedup.containmentPairs(sh, "doc_id", t, maxShingleDocFreq = 50))
-      assert(pref == plain, s"prefix filter dropped qualifying pairs at t=$t")
-      assert(pref.nonEmpty, s"fixture produced no containment pairs at t=$t")
-    }
-  }
-
-  test("Dedup.minHashNearDups catches a high-Jaccard pair with both hash families") {
+  test("Dedup.minHashNearDups catches a high-Jaccard pair") {
     val d = docs(
       (1L, "the quick brown fox jumps over the lazy dog again and again today"),
       (2L, "the quick brown fox jumps over the lazy dog again and again tomorrow"),
       (3L, "completely different content about spark catalyst optimizer internals here")
     )
-    for (family <- Seq[Dedup.HashFamily](Dedup.PortableMd5, Dedup.Xx64)) {
-      val pairs = Dedup
-        .minHashNearDups(d, "doc_id", "text", 3, numPerm = 8, bands = 4, threshold = 0.5, family = family)
-        .select("d1", "d2")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(pairs.toList == List((1L, 2L)), s"family $family")
-    }
+    val pairs = Dedup
+      .minHashNearDups(d, "doc_id", "text", 3, numPerm = 8, bands = 4, threshold = 0.5)
+      .select("d1", "d2")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.toList == List((1L, 2L)))
   }
 
   test("Dedup.simHash: identical texts equal; near-dups closer than unrelated") {
@@ -145,7 +125,7 @@ class MlSpec extends SparkSpec {
     assert(ham(h(1L), h(2L)) <= 20)
   }
 
-  test("Similarity.cosine and cosineTopK exact ranking") {
+  test("Similarity.cosineTopK exact ranking") {
     import spark.implicits._
     val emb = Seq(
       (0L, Array(1.0f, 0.0f)),

@@ -50,7 +50,7 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("a repeated feature triple in the existing store rejects the incoming row once") {
-    // the DocumentIngest round-13 fan-out class: membership joins must
+    // the DocumentIngest fan-out class: membership joins must
     // distinct their store side
     import spark.implicits._
     val layers = Seq("basins").toDF("layer_name")

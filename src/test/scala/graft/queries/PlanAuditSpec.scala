@@ -152,7 +152,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("HashAggregate"), s"the weight sum must map-side combine:\n$p")
   }
 
-  // ---- round-12/13 additions, named (VERDICT r12 item 4) ------------
+  // ---- later additions, each named by its query ---------------------
 
   test("corrected-read e2e pushes event_type to the events scan and prunes to the 2 read columns") {
     val p = plan("q_corrected_read_e2e")

@@ -38,7 +38,7 @@ class DocumentIngestSpec extends SparkSpec {
   }
 
   test("a duplicated hash in the existing store marks existence once — no reject fan-out") {
-    // regression (round 13, surfaced at sf0.1): the __exists join ran
+    // regression (surfaced at sf0.1): the __exists join ran
     // without distinct, so every store copy of a hash fanned the
     // matching incoming row into an extra reject row
     import spark.implicits._

@@ -90,7 +90,7 @@ class TransportSpec extends SparkSpec {
       spark, s"$dir/*.csv", "csv", Map("header" -> "true", "inferSchema" -> "true"))
     assert(out.count() == 2, "a trailing-segment glob must not descend into subdirectories")
     // empty match fails loudly even under a user-supplied schema (the
-    // silent-empty case the round-11 pathGlobFilter rewrite introduced)
+    // silent-empty case the pathGlobFilter rewrite introduced)
     val ex = intercept[java.io.FileNotFoundException] {
       FileTransport.rows(spark, s"$dir/*.xml", "csv", Map("schema" -> "a INT, b INT"))
     }

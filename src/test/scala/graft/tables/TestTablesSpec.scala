@@ -5,12 +5,12 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Regression for the round-6 bench failure: the driver regenerates the
-  * testdata between rounds, and `events.ts` has shipped as INT64
+/** Regression for a bench failure: the testdata generator has been
+  * re-run over time, and `events.ts` has shipped as INT64
   * epoch-nanos, as parquet TIMESTAMP_NTZ (isAdjustedToUTC=false), and
   * as a UTC-adjusted TIMESTAMP. `TestTables.events` must normalize all
   * three to the same TimestampType instants — the NTZ shape slipped
-  * through in round 6 and every `unix_micros(ts)`-using query failed
+  * through once and every `unix_micros(ts)`-using query failed
   * analysis at bench time.
   */
 class TestTablesSpec extends SparkSpec {
@@ -44,7 +44,7 @@ class TestTablesSpec extends SparkSpec {
   }
 
   test("events loader output supports unix_micros at analysis time for every physical shape") {
-    // the exact expression that failed in round 6's bench
+    // the exact expression that failed in that bench
     val dir = java.nio.file.Files.createTempDirectory("ttspec-ntz").toString
     micros.map(u => Tuple1(u)).toDF("us")
       .select(timestamp_micros(col("us")).cast(TimestampNTZType).as("ts"))
