@@ -2,7 +2,7 @@ package graft
 
 import graft.ml.{Dedup, Multimodal, ProductQuantize, Similarity}
 import graft.tables.TestTables
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scaled-geometry rehearsal for the screening/ANN family — the rows
@@ -80,7 +80,7 @@ object BenchScaled {
   // the corpus (~50 images per content group at any SF) so output
   // stays linear and the measurement isolates the banded-join shape.
   //
-  // Pixels are a splitmix64 mix of the FULL (group, x, y) key: dHash
+  // Pixels are a splitmix64 mix (ScaleUp.mix64) of the FULL (group, x, y) key: dHash
   // compares neighboring pixels, so any structure shared between
   // groups (a `(x*y*(g+3)) % 97` pixel term collapses for groups
   // equal mod 97, and a `g*37` term is a constant brightness shift
@@ -90,13 +90,6 @@ object BenchScaled {
   // independent ~uniform 56-bit dHash: expected cross-group
   // collisions within Hamming 4 are C(groups,2) * 4e5/2^56 ~ 1e-4 at
   // 10k groups — structurally zero.
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   private def rehearsalImages(s: SparkSession, d: String, nDocs: Long): DataFrame = {
     val groups = math.max(97L, nDocs / 50L)
     val ids = TestTables.documents(s, d).select(col("doc_id").cast("long"))
@@ -113,7 +106,7 @@ object BenchScaled {
             // one-pixel perturbation flips at most 2 of the 56 dHash
             // bits, keeping every intra-group pair within budget 4
             val pert = if (x == 4 && y == 3 && id % 2 == 1) 60 else 0
-            val v = (((mix64(g * 63L + y * 9L + x) & 0xffL) + pert) % 256).toInt
+            val v = (((ScaleUp.mix64(g * 63L + y * 9L + x) & 0xffL) + pert) % 256).toInt
             (v << 16) | (v << 8) | v
           }
         )
@@ -137,6 +130,25 @@ object BenchScaled {
     def docs = TestTables.documents(s, d)
     def emb = TestTables.embeddings(s, d)
     val cb = Some(codebook)
+    // the incremental screens: the incoming slice probes an index
+    // built over the rest, at the rule's geometry
+    def simHashScreened(incoming: Column): Long = {
+      val idx = Dedup.buildBandIndex(docs.filter(!incoming), "doc_id", "text", nBands = g.nBands)
+      Dedup
+        .simHashScreen(
+          docs.filter(incoming), "doc_id", "text", idx,
+          maxHamming = g.maxHamming, nBands = g.nBands)
+        .count()
+    }
+    def semDedupScreened(incoming: Column): Long = {
+      val idx = Dedup.buildClusterIndex(
+        emb.filter(!incoming), "vec_id", "embedding", nCentroids = g.nCentroids, codebook = cb)
+      Dedup
+        .semDedupScreen(
+          emb.filter(incoming), "vec_id", "embedding", idx,
+          threshold = 0.42, nCentroids = g.nCentroids, codebook = cb)
+        .count()
+    }
     Seq(
       "q_embed_neardup_blocked" -> (() =>
         Similarity
@@ -146,26 +158,8 @@ object BenchScaled {
         Dedup
           .semDedup(emb, "vec_id", "embedding", threshold = 0.42, nCentroids = g.nCentroids, codebook = cb)
           .count()),
-      "q_semdedup_incr" -> (() =>
-        Dedup
-          .semDedupIncremental(
-            emb, "vec_id", "embedding",
-            incomingPred = col("vec_id") % 10 < 2,
-            threshold = 0.42,
-            nCentroids = g.nCentroids,
-            codebook = cb
-          )
-          .count()),
-      "q_semdedup_screen" -> (() => {
-        val idx = Dedup.buildClusterIndex(
-          emb.filter(col("vec_id") % 10 < 8), "vec_id", "embedding",
-          nCentroids = g.nCentroids, codebook = cb)
-        Dedup
-          .semDedupScreen(
-            emb.filter(col("vec_id") % 10 >= 8), "vec_id", "embedding", idx,
-            threshold = 0.42, nCentroids = g.nCentroids, codebook = cb)
-          .count()
-      }),
+      "q_semdedup_incr" -> (() => semDedupScreened(col("vec_id") % 10 < 2)),
+      "q_semdedup_screen" -> (() => semDedupScreened(col("vec_id") % 10 >= 8)),
       // ANN rows hold the QUERY WORKLOAD CONSTANT across SFs (~200
       // queries at any corpus size): a deployment doesn't issue more
       // queries because the corpus grew, and scaling both at once
@@ -214,22 +208,8 @@ object BenchScaled {
             nCentroids = g.nCentroids, nProbe = ivfProbe, coarseCodebook = cb,
             multiAssigned = true)
           .count()),
-      "q_simhash_screen" -> (() => {
-        val idx = Dedup.buildBandIndex(
-          docs.filter(col("doc_id") % 3 =!= 1), "doc_id", "text", nBands = g.nBands)
-        Dedup
-          .simHashScreen(
-            docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", idx,
-            maxHamming = g.maxHamming, nBands = g.nBands)
-          .count()
-      }),
-      "q_incremental_dedup" -> (() =>
-        Dedup
-          .simHashIncremental(
-            docs, "doc_id", "text",
-            incomingPred = col("doc_id") % 3 === 0,
-            maxHamming = g.maxHamming, nBands = g.nBands)
-          .count()),
+      "q_simhash_screen" -> (() => simHashScreened(col("doc_id") % 3 === 1)),
+      "q_incremental_dedup" -> (() => simHashScreened(col("doc_id") % 3 === 0)),
       "q_stream_screen" -> (() => streamScreenScaled(s, d, g)),
       "q_image_neardup" -> (() => {
         val h = Multimodal

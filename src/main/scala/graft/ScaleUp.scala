@@ -71,7 +71,10 @@ object ScaleUp {
   private def span(df: DataFrame, c: String): Long =
     df.agg(coalesce(max(col(c)), lit(0L))).head().getLong(0) + 1L
 
-  private def mix64(z0: Long): Long = {
+  /** The splitmix64 finalizer: a bijective 64-bit mix, each output
+    * bit depending on every input bit.
+    */
+  private[graft] def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL

@@ -357,19 +357,6 @@ object Dedup {
   /** Hamming distance between two 56-bit SimHashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Incremental near-dup screening: flag each INCOMING doc that sits
-    * within `maxHamming` SimHash bits of any EXISTING doc, reporting
-    * the closest existing match (ties toward the lower id).
-    *
-    * Band-indexed lookup, the production shape for "dedup a new crawl
-    * batch against the corpus": the 56-bit signature splits into 7
-    * 8-bit bands; two hashes within Hamming distance 6 must agree on
-    * at least one band (pigeonhole), so the equi-join on (band, value)
-    * is a recall-guaranteed candidate filter. At 100 TB the existing
-    * side's band index is precomputed and stored bucketed by
-    * (band, value) — each new batch shuffles only itself; nothing
-    * rescans the corpus.
-    */
   /** Band layout for a 56-bit hash split into `nBands` contiguous
     * near-equal bands: Seq of (bit offset, width). The first
     * `56 % nBands` bands take the extra bit. Pigeonhole: two hashes
@@ -445,8 +432,8 @@ object Dedup {
       .select(col("id1"), col("id2"), col("hamming"))
   }
 
-  /** Corpus-side SimHash band index — the persistable half of
-    * [[simHashIncremental]], built ONCE per corpus generation and
+  /** Corpus-side SimHash band index — the persistable half of the
+    * incremental screen, built ONCE per corpus generation and
     * written out (partition by `band`, bucket/sort by `bv` for a
     * shuffle-free probe side); each subsequent batch then joins the
     * stored index via [[simHashScreen]] without re-reading or
@@ -589,11 +576,14 @@ object Dedup {
       .saveAsTable(tableName)
 
   /** Screen an incoming batch against a prebuilt (typically
-    * parquet-persisted) [[buildBandIndex]] index. Output contract is
-    * [[simHashIncremental]]'s: one row per incoming doc —
-    * (idCol, is_dup, dup_of, hamming), closest corpus match wins,
-    * ties toward the lower id, token-less docs surface with
-    * is_dup=false.
+    * parquet-persisted) [[buildBandIndex]] index — the one SimHash
+    * incremental screen: a one-shot "new batch vs corpus" run is
+    * `simHashScreen(docs.filter(p), …, buildBandIndex(docs.filter(!p), …))`.
+    * Output: one row per incoming doc — (idCol, is_dup, dup_of,
+    * hamming), closest corpus match within `maxHamming` wins, ties
+    * toward the lower id, token-less docs surface with is_dup=false.
+    * Recall is complete for `maxHamming < nBands` ([[bandSpec]]'s
+    * pigeonhole), so the result equals an exhaustive Hamming scan.
     */
   def simHashScreen(
       incoming: DataFrame,
@@ -616,6 +606,8 @@ object Dedup {
     val sims = simHash(incoming, idCol, textCol)
     val inc = bandRows(sims, idCol, nBands)
       .select(col(idCol).as("in_id"), col("simhash").as("in_h"), col("band"), col("bv"))
+    // hamming is a cheap xor+popcount projection: filter BEFORE the
+    // pair distinct so only true near-dups ride that shuffle
     val cand = inc
       .join(bandIndex, Seq("band", "bv"))
       .withColumn("hamming", hamming(col("in_h"), col("ex_h")))
@@ -629,61 +621,9 @@ object Dedup {
       )
       .filter(col("rk") === 1)
       .select(col("in_id").as(idCol), col("ex_id").as("dup_of"), col("hamming"))
-    incoming
-      .select(col(idCol))
-      .join(best, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        col("dup_of").isNotNull.as("is_dup"),
-        col("dup_of"),
-        col("hamming")
-      )
-  }
-
-  def simHashIncremental(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      incomingPred: Column,
-      maxHamming: Int = 6,
-      nBands: Int = 7
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(
-      maxHamming < nBands,
-      s"$nBands-band banding guarantees recall only to Hamming ${nBands - 1}"
-    )
-    // one row per doc — small enough to materialize once for both legs
-    val sims = simHash(docs, idCol, textCol).localCheckpoint(false)
-    val banded = bandRows(sims, idCol, nBands)
-    val inc = banded
-      .filter(incomingPred)
-      .select(col(idCol).as("in_id"), col("simhash").as("in_h"), col("band"), col("bv"))
-    val ex = banded
-      .filter(!incomingPred)
-      .select(col(idCol).as("ex_id"), col("simhash").as("ex_h"), col("band"), col("bv"))
-    // hamming is a cheap xor+popcount projection: filter BEFORE the
-    // pair distinct so only true near-dups ride that shuffle (docs
-    // sharing several bands are exactly the near-dups, so the
-    // pre-distinct stream is where the duplication concentrates)
-    val cand = inc
-      .join(ex, Seq("band", "bv"))
-      .withColumn("hamming", hamming(col("in_h"), col("ex_h")))
-      .filter(col("hamming") <= maxHamming)
-      .select("in_id", "ex_id", "hamming")
-      .distinct()
-    val best = cand
-      .withColumn(
-        "rk",
-        row_number().over(Window.partitionBy(col("in_id")).orderBy(col("hamming"), col("ex_id")))
-      )
-      .filter(col("rk") === 1)
-      .select(col("in_id").as(idCol), col("ex_id").as("dup_of"), col("hamming"))
     // left-join from the FULL incoming doc set, not the simhash frame:
-    // a doc whose text tokenizes to empty has no simhash rows (the
-    // explode emits nothing) but must still surface with is_dup=false
-    docs
-      .filter(incomingPred)
+    // a token-less doc has no simhash rows but must still surface
+    incoming
       .select(col(idCol))
       .join(best, Seq(idCol), "left")
       .select(
@@ -974,64 +914,11 @@ object Dedup {
       .select(col("id").as(idCol), col("cluster"), col("dup").isNull.as("kept"))
   }
 
-  /** Incremental [[semDedup]]: flag each INCOMING embedding that is a
-    * semantic near-dup (cosine >= threshold) of any CORPUS embedding
-    * in the same cluster — the new-crawl-vs-corpus screening shape of
-    * [[simHashIncremental]], for embeddings instead of token hashes.
-    * Output: (idCol, cluster, is_dup) for EVERY incoming row,
-    * including rows whose cluster holds no corpus vectors.
-    *
-    * Scale: the corpus side's (id, normalized vec, cluster) is a
-    * precomputable projection — at 100 TB it is written once,
-    * bucketed by cluster, and only the new batch (orders of magnitude
-    * smaller) is normalized and assigned per run; the join touches
-    * only the incoming batch's clusters (cluster-key equi join, so
-    * partition pruning on a cluster-bucketed corpus table applies).
-    * Incoming-vs-incoming pairs are NOT flagged here — run
-    * [[semDedup]] on the accepted batch afterwards, exactly like the
-    * SimHash incremental path.
-    */
-  def semDedupIncremental(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      incomingPred: Column,
-      threshold: Double,
-      nCentroids: Int = 16,
-      seed: Long = 7L,
-      dim: Int = 64,
-      codebook: Option[Array[Array[Double]]] = None
-  ): DataFrame = {
-    import graft.functions.VectorOps
-    val assigned = assignedVecs(
-      emb, idCol, vecCol, nCentroids, seed, dim,
-      keep = Seq("__incoming" -> incomingPred),
-      codebook = codebook
-    ).localCheckpoint(false)
-    val incoming = assigned.filter(col("__incoming"))
-    val corpus = assigned
-      .filter(!col("__incoming"))
-      .select(col("cluster"), col("nv").as("cv"))
-    val dupIds = incoming
-      .select(col("cluster"), col("id"), col("nv"))
-      .join(corpus, Seq("cluster"))
-      .filter(VectorOps.dot(col("nv"), col("cv")) >= threshold)
-      .select("id")
-      .distinct()
-    incoming
-      .select(col("id"), col("cluster"))
-      .join(dupIds.withColumn("dup", lit(true)), Seq("id"), "left")
-      .select(col("id").as(idCol), col("cluster"), col("dup").isNotNull.as("is_dup"))
-  }
-
-  /** Normalize + nearest-centroid assignment:
-    * (id, [keep...], nv, cluster) — THE one copy of the codebook
-    * assignment projection under [[semDedup]], [[semDedupIncremental]],
-    * [[buildClusterIndex]] and [[semDedupScreen]]: a tie-break or
-    * normalization change here changes all four together, which the
-    * oracle parity depends on. `keep` columns are evaluated against
-    * the ORIGINAL frame (so predicates over source columns survive
-    * the projection).
+  /** Normalize + nearest-centroid assignment: (id, nv, cluster) —
+    * THE one copy of the codebook assignment projection under
+    * [[semDedup]], [[buildClusterIndex]] and [[semDedupScreen]]: a
+    * tie-break or normalization change here changes all three
+    * together, which the oracle parity depends on.
     */
   private def assignedVecs(
       emb: DataFrame,
@@ -1040,7 +927,6 @@ object Dedup {
       nCentroids: Int,
       seed: Long,
       dim: Int,
-      keep: Seq[(String, Column)] = Nil,
       codebook: Option[Array[Array[Double]]] = None
   ): DataFrame = {
     import graft.functions.VectorOps
@@ -1048,10 +934,8 @@ object Dedup {
     // a fitted codebook (Similarity.fitCentroids), the production path
     val centroids = codebook.getOrElse(Similarity.normalizedCentroids(nCentroids, dim, seed))
     require(codebook.forall(_.length == nCentroids), "codebook size must equal nCentroids")
-    val cols = (col(idCol).as("id") +: keep.map { case (n, c) => c.as(n) }) :+
-      transform(col(vecCol), x => x.cast("double")).as("v")
     val normalized = emb
-      .select(cols: _*)
+      .select(col(idCol).as("id"), transform(col(vecCol), x => x.cast("double")).as("v"))
       // degenerate vectors (zero-norm, NaN/Inf component, NULL
       // element) can't be assigned a direction-based cluster — drop
       // rather than crash or NaN-poison the argmax (same contract as
@@ -1077,8 +961,8 @@ object Dedup {
       )
   }
 
-  /** Corpus-side SemDeDup cluster index — the persistable half of
-    * [[semDedupIncremental]], and the embedding-path counterpart of
+  /** Corpus-side SemDeDup cluster index — the persistable half of the
+    * incremental screen, and the embedding-path counterpart of
     * [[buildBandIndex]]: every corpus embedding is normalized and
     * assigned to its coarse centroid ONCE per corpus generation, then
     * written out partitioned by `cluster` (one inverted list per
@@ -1118,13 +1002,16 @@ object Dedup {
       .saveAsTable(tableName)
 
   /** Screen an incoming batch against a prebuilt (typically
-    * parquet-persisted) [[buildClusterIndex]] index. Output contract
-    * is [[semDedupIncremental]]'s: one row per incoming doc —
-    * (idCol, cluster, is_dup), is_dup iff some corpus vector in the
-    * same coarse cluster has cosine >= threshold. The join shuffles
-    * only the (small) incoming batch when the index is
-    * cluster-partitioned — corpus vectors stay where they were
-    * written.
+    * parquet-persisted) [[buildClusterIndex]] index — the one SemDeDup
+    * incremental screen, [[simHashScreen]]'s embedding twin: a one-shot
+    * "new batch vs corpus" run is
+    * `semDedupScreen(emb.filter(p), …, buildClusterIndex(emb.filter(!p), …))`.
+    * Output: one row per incoming doc — (idCol, cluster, is_dup),
+    * is_dup iff some corpus vector in the same coarse cluster has
+    * cosine >= threshold. The join shuffles only the (small) incoming
+    * batch when the index is cluster-partitioned — corpus vectors stay
+    * where they were written. Incoming-vs-incoming pairs are NOT
+    * flagged here — run [[semDedup]] on the accepted batch afterwards.
     */
   def semDedupScreen(
       incoming: DataFrame,

@@ -147,23 +147,22 @@ object KnLm {
     big.unionByName(lam).unionByName(pc).unionByName(meta)
   }
 
-  /** Score an incoming batch against a prebuilt [[buildLmIndex]] —
-    * the CCNet deployment shape (pretrained LM, new crawl). Full KN
-    * backoff chain for material the corpus never saw:
+  /** The KN backoff chain over a [[buildLmIndex]], per bigram
+    * occurrence — the one copy both screens apply (batch
+    * [[screenPerplexity]] and the streaming
+    * [[graft.streaming.StreamingIngest.screenPerplexityStream]]):
     * seen bigram → λ(w1)·Pcont(w2) → Pcont(w2) → uniform floor.
-    * Output: (idCol, n_bigrams, n_unseen, ppl).
-    *
-    * Scale: the big table joins (w1, w2)-keyed (batch side small —
-    * AQE broadcasts it); λ/Pcont are vocabulary-sized broadcasts; the
-    * floor is one collected double. The index never rebuilds between
-    * batches.
+    * Adds `logp_hit` (NULL iff the corpus never saw the bigram) and
+    * `logp` to the (…, w1, w2) rows. The big table joins
+    * (w1, w2)-keyed; λ/Pcont are vocabulary-sized broadcasts; the
+    * floor is one collected double.
     */
-  def screenPerplexity(batchBigrams: DataFrame, index: DataFrame, idCol: String): DataFrame = {
+  private[graft] def backoffLogProbs(bigrams: DataFrame, index: DataFrame): DataFrame = {
     val big = index.filter(col("kind") === "big").select(col("w1"), col("w2"), col("v").as("logp_hit"))
     val lam = index.filter(col("kind") === "ctx").select(col("w1"), col("v").as("lam"))
     val pc = index.filter(col("kind") === "cont").select(col("w2"), col("v").as("pcont"))
     val floorP = index.filter(col("kind") === "meta").select(col("v")).head().getDouble(0)
-    batchBigrams
+    bigrams
       .join(big, Seq("w1", "w2"), "left")
       .join(broadcast(lam), Seq("w1"), "left")
       .join(broadcast(pc), Seq("w2"), "left")
@@ -174,13 +173,24 @@ object KnLm {
           .when(col("pcont").isNotNull, log(col("pcont")))
           .otherwise(log(lit(floorP)))
       )
+  }
+
+  /** Score an incoming batch against a prebuilt [[buildLmIndex]] —
+    * the CCNet deployment shape (pretrained LM, new crawl), with the
+    * full [[backoffLogProbs]] chain for material the corpus never saw.
+    * Output: (idCol, n_bigrams, n_unseen, ppl).
+    *
+    * Scale: the batch side of the (w1, w2) join is small (AQE
+    * broadcasts it); the index never rebuilds between batches.
+    */
+  def screenPerplexity(batchBigrams: DataFrame, index: DataFrame, idCol: String): DataFrame =
+    backoffLogProbs(batchBigrams, index)
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("n_bigrams"),
         sum(when(col("logp_hit").isNull, 1L).otherwise(0L)).as("n_unseen"),
         round(exp(-avg(col("logp"))), 4).as("ppl")
       )
-  }
 
   /** Per-doc perplexity over the model: exp(-mean logp), rounded to 4
     * decimals for cross-engine float parity (the rounding also makes

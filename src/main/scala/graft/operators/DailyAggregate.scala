@@ -25,7 +25,10 @@ import org.apache.spark.sql.functions._
   */
 object DailyAggregate {
 
-  /** Local-day bucket: date of (datetime shifted by per-row offset hours). */
+  /** Local-day bucket: date of (datetime shifted by per-row offset
+    * hours) — the `timezone_daily_calc` day shift
+    * (`inst/patches/patch_41.R:2659`).
+    */
   def localDay(datetime: Column, offsetHours: Column): Column =
     to_date(datetime + offsetHours * expr("INTERVAL '1' HOUR"))
 

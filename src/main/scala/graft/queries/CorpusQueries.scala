@@ -1,10 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.PortableHash
 import graft.ml.{Dedup, Dsir, FineDedup, KnLm, Sampling, Similarity, TextStats}
+import graft.streaming.StreamingIngest
 import graft.tables.TestTables
 
 /** Corpus-construction operators a large-scale training-data pipeline
@@ -1185,66 +1187,24 @@ object CorpusQueries {
 
   // ---- incremental batch dedup (SimHash band index) ----------------
 
-  /** New-batch-vs-corpus near-dup screening: incoming docs
-    * (doc_id % 3 == 0) checked against the existing corpus via the
-    * 7x8-bit SimHash band index; closest existing match within
-    * Hamming 6 wins (ties toward the lower id).
+  /** New-batch-vs-corpus near-dup screening, one shape for two slices:
+    * the incoming docs (`doc_id % 3 = residue`) probe a band index
+    * built over the rest ([[Dedup.buildBandIndex]] — the half a 100 TB
+    * pipeline persists between crawls) via [[Dedup.simHashScreen]],
+    * without touching corpus text again; closest existing match within
+    * Hamming 6 wins (ties toward the lower id). q_incremental_dedup
+    * screens residue 0, q_simhash_screen residue 1.
     */
-  private def incrementalDedup(s: SparkSession, d: String): DataFrame =
-    Dedup
-      .simHashIncremental(
-        TestTables.documents(s, d),
-        "doc_id",
-        "text",
-        incomingPred = col("doc_id") % 3 === 0,
-        maxHamming = 6
-      )
-      .orderBy(col("doc_id"))
-
-  private lazy val incrementalDedupSql =
-    s"""WITH $tokCte,
-       |${TextMlQueries.simCte},
-       |banded AS (
-       |  SELECT doc_id, simhash, b AS band, (simhash >> (b * 8)) & 255 AS bv
-       |  FROM sim, LATERAL (SELECT unnest(range(0, 7)) AS b)
-       |), cand AS (
-       |  SELECT DISTINCT i.doc_id AS in_id, i.simhash AS in_h, e.doc_id AS ex_id, e.simhash AS ex_h
-       |  FROM banded i
-       |  JOIN banded e ON i.band = e.band AND i.bv = e.bv
-       |  WHERE i.doc_id % 3 = 0 AND e.doc_id % 3 <> 0
-       |), ham AS (
-       |  SELECT in_id, ex_id, CAST(bit_count(xor(in_h, ex_h)) AS INT) AS hamming
-       |  FROM cand
-       |  WHERE bit_count(xor(in_h, ex_h)) <= 6
-       |), best AS (
-       |  SELECT in_id, ex_id, hamming,
-       |         row_number() OVER (PARTITION BY in_id ORDER BY hamming, ex_id) AS rk
-       |  FROM ham
-       |)
-       |SELECT d.doc_id, b.ex_id IS NOT NULL AS is_dup, b.ex_id AS dup_of, b.hamming
-       |FROM documents d
-       |LEFT JOIN (SELECT in_id, ex_id, hamming FROM best WHERE rk = 1) b
-       |  ON b.in_id = d.doc_id
-       |WHERE d.doc_id % 3 = 0
-       |ORDER BY d.doc_id""".stripMargin
-
-  /** Index-path SimHash screening: the standing corpus
-    * (doc_id % 3 <> 1) is banded ONCE via [[Dedup.buildBandIndex]] —
-    * the half a 100 TB pipeline persists between crawls — and the
-    * incoming batch (doc_id % 3 = 1) probes it via
-    * [[Dedup.simHashScreen]] without touching corpus text again
-    * (IncrementalIndexSpec proves the parquet-persisted round trip
-    * is output-identical to the inline incremental path).
-    */
-  private def simhashScreen(s: SparkSession, d: String): DataFrame = {
+  private def simhashScreen(residue: Int)(s: SparkSession, d: String): DataFrame = {
     val docs = TestTables.documents(s, d)
-    val idx = Dedup.buildBandIndex(docs.filter(col("doc_id") % 3 =!= 1), "doc_id", "text")
+    val incoming = col("doc_id") % 3 === residue
+    val idx = Dedup.buildBandIndex(docs.filter(!incoming), "doc_id", "text")
     Dedup
-      .simHashScreen(docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", idx, maxHamming = 6)
+      .simHashScreen(docs.filter(incoming), "doc_id", "text", idx, maxHamming = 6)
       .orderBy(col("doc_id"))
   }
 
-  private lazy val simhashScreenSql =
+  private def simhashScreenSql(residue: Int): String =
     s"""WITH $tokCte,
        |${TextMlQueries.simCte},
        |banded AS (
@@ -1254,7 +1214,7 @@ object CorpusQueries {
        |  SELECT DISTINCT i.doc_id AS in_id, i.simhash AS in_h, e.doc_id AS ex_id, e.simhash AS ex_h
        |  FROM banded i
        |  JOIN banded e ON i.band = e.band AND i.bv = e.bv
-       |  WHERE i.doc_id % 3 = 1 AND e.doc_id % 3 <> 1
+       |  WHERE i.doc_id % 3 = $residue AND e.doc_id % 3 <> $residue
        |), ham AS (
        |  SELECT in_id, ex_id, CAST(bit_count(xor(in_h, ex_h)) AS INT) AS hamming
        |  FROM cand
@@ -1268,19 +1228,9 @@ object CorpusQueries {
        |FROM documents d
        |LEFT JOIN (SELECT in_id, ex_id, hamming FROM best WHERE rk = 1) b
        |  ON b.in_id = d.doc_id
-       |WHERE d.doc_id % 3 = 1
+       |WHERE d.doc_id % 3 = $residue
        |ORDER BY d.doc_id""".stripMargin
 
-  /** The streaming band-screen twin AS AN ORACLE ROW (sibling of
-    * q_stream_dedup): the corpus band index is PERSISTED to parquet,
-    * the incoming third streams through
-    * [[graft.streaming.StreamingIngest.screenAgainstBandIndex]] in two
-    * AvailableNow drains, and drain 2 re-appends drain 1's docs — the
-    * cross-batch emit-once state must suppress the re-crawl or the
-    * compare fails on duplicate rows. The QUERY OUTPUT IS THE STREAMED
-    * RESULT checked against the SAME oracle SQL as the batch
-    * q_simhash_screen, so stream ≡ batch is driver-verified.
-    */
   /** Session-stable persisted band index per data dir: the corpus side of
     * the screen is immutable within a bench/verify session, so build its
     * parquet band index once per JVM and reuse it across invocations
@@ -1290,6 +1240,16 @@ object CorpusQueries {
     */
   private val bandIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** The streaming band-screen twin AS AN ORACLE ROW (sibling of
+    * q_stream_dedup): the corpus band index is PERSISTED to parquet,
+    * the incoming third lands as two files, the second re-appending
+    * the first's docs, and streams through
+    * [[StreamingIngest.screenAgainstBandIndex]] in one AvailableNow
+    * drain — the emit-once state must suppress the re-crawl or the
+    * compare fails on duplicate rows. The QUERY OUTPUT IS THE STREAMED
+    * RESULT checked against the SAME oracle SQL as the batch
+    * q_simhash_screen, so stream ≡ batch is driver-verified.
+    */
   private def streamScreen(s: SparkSession, d: String): DataFrame = {
     val docs = TestTables.documents(s, d)
     val base = graft.TempRoots.newDir("graft-streamscreen").toString
@@ -1332,28 +1292,17 @@ object CorpusQueries {
     // the row times the screen itself; CROSS-batch suppression and
     // checkpoint restart are StreamingSpec's job, not this row's.
     def drain(): Unit = {
-      val q = graft.streaming.StreamingIngest
-        .screenAgainstBandIndex(
-          s.readStream
-            .schema("doc_id LONG, simhash LONG")
-            .parquet(src),
-          persisted
-        )
-        .writeStream
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = StreamingIngest.ingestAvailableNow(
+        s, src, StructType.fromDDL("doc_id LONG, simhash LONG"), sink, cp,
+        transform = StreamingIngest.screenAgainstBandIndex(_, persisted).toDF()
+      )
       require(q.awaitTermination(120000), "stream drain did not terminate")
     }
     val screened: DataFrame =
       if (maxRow.isNullAt(0)) {
         s.createDataFrame(
           s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType
-            .fromDDL("doc_id LONG, is_dup BOOLEAN, dup_of LONG, hamming INT")
+          StructType.fromDDL("doc_id LONG, is_dup BOOLEAN, dup_of LONG, hamming INT")
         )
       } else {
         val midVal = maxRow.getLong(0) / 2
@@ -1724,58 +1673,29 @@ object CorpusQueries {
        |FROM asg
        |ORDER BY asg.vec_id""".stripMargin
 
-  /** Incremental SemDeDup: vec_id % 10 < 2 plays the incoming crawl,
-    * the rest the standing corpus ([[Dedup.semDedupIncremental]]).
-    * Same 0.42 verified-margin threshold — incoming-vs-corpus pairs
-    * are a subset of the pairs the margin was measured on.
+  /** Incremental SemDeDup, one shape for two slices: the incoming
+    * crawl (`incoming`) probes a cluster index built over the rest
+    * ([[Dedup.buildClusterIndex]] — the two-job shape of a
+    * persisted-index crawl loop) via [[Dedup.semDedupScreen]].
+    * q_semdedup_incr screens vec_id % 10 < 2, q_semdedup_screen
+    * vec_id % 10 >= 8. Same 0.42 verified-margin threshold as
+    * q_semdedup (screened pairs are a subset of the pairs the margin
+    * was measured on).
     */
-  private def semDedupIncr(s: SparkSession, d: String): DataFrame =
-    graft.ml.Dedup
-      .semDedupIncremental(
-        TestTables.embeddings(s, d),
-        "vec_id",
-        "embedding",
-        incomingPred = col("vec_id") % 10 < 2,
-        threshold = 0.42
-      )
-      .orderBy(col("vec_id"))
-
-  private lazy val semDedupIncrSql =
-    s"""WITH $ivfAsgCtes, inc AS (
-       |  SELECT * FROM asg WHERE vec_id % 10 < 2
-       |), corp AS (
-       |  SELECT * FROM asg WHERE vec_id % 10 >= 2
-       |), dups AS (
-       |  SELECT DISTINCT i.vec_id
-       |  FROM inc i JOIN corp c ON i.cluster = c.cluster
-       |  WHERE list_dot_product(i.nv, c.nv) >= 0.42
-       |)
-       |SELECT inc.vec_id, cluster,
-       |       inc.vec_id IN (SELECT vec_id FROM dups) AS is_dup
-       |FROM inc
-       |ORDER BY inc.vec_id""".stripMargin
-
-  /** Index-path incremental SemDeDup: the standing corpus
-    * (vec_id % 10 < 8) is materialized once as a cluster index
-    * ([[Dedup.buildClusterIndex]]) and the incoming batch
-    * (vec_id % 10 >= 8) probes it via [[Dedup.semDedupScreen]] — the
-    * two-job shape of a persisted-index crawl loop. Same 0.42
-    * verified-margin threshold as q_semdedup (screened pairs are a
-    * subset of the pairs the margin was measured on).
-    */
-  private def semDedupScreenQ(s: SparkSession, d: String): DataFrame = {
+  private def semDedupScreenQ(incoming: Column)(s: SparkSession, d: String): DataFrame = {
     val emb = TestTables.embeddings(s, d)
-    val idx = Dedup.buildClusterIndex(emb.filter(col("vec_id") % 10 < 8), "vec_id", "embedding")
+    val idx = Dedup.buildClusterIndex(emb.filter(!incoming), "vec_id", "embedding")
     Dedup
-      .semDedupScreen(emb.filter(col("vec_id") % 10 >= 8), "vec_id", "embedding", idx, threshold = 0.42)
+      .semDedupScreen(emb.filter(incoming), "vec_id", "embedding", idx, threshold = 0.42)
       .orderBy(col("vec_id"))
   }
 
-  private lazy val semDedupScreenSql =
+  /** [[semDedupScreenQ]]'s oracle over the `inc`/`corp` slice bounds. */
+  private def semDedupScreenSql(inc: String, corp: String): String =
     s"""WITH $ivfAsgCtes, inc AS (
-       |  SELECT * FROM asg WHERE vec_id % 10 >= 8
+       |  SELECT * FROM asg WHERE vec_id % 10 $inc
        |), corp AS (
-       |  SELECT * FROM asg WHERE vec_id % 10 < 8
+       |  SELECT * FROM asg WHERE vec_id % 10 $corp
        |), dups AS (
        |  SELECT DISTINCT i.vec_id
        |  FROM inc i JOIN corp c ON i.cluster = c.cluster
@@ -1842,7 +1762,11 @@ object CorpusQueries {
     QueryDef("q_dsir_screen", dsirScreen, Some(dsirScreenSql)),
     QueryDef("q_dedup_clusters", dedupClusters, Some(dedupClustersSql)),
     QueryDef("q_semdedup", semDedup, Some(semDedupSql)),
-    QueryDef("q_semdedup_incr", semDedupIncr, Some(semDedupIncrSql)),
+    QueryDef(
+      "q_semdedup_incr",
+      semDedupScreenQ(col("vec_id") % 10 < 2),
+      Some(semDedupScreenSql("< 2", ">= 2"))
+    ),
     QueryDef("q_oov_score", oovScore, Some(oovScoreSql)),
     QueryDef("q_kn_counts", knCounts, Some(knCountsSql)),
     QueryDef("q_kn_perplexity", knPerplexity, Some(knPerplexitySql)),
@@ -1858,10 +1782,14 @@ object CorpusQueries {
     QueryDef("q_stratified_sample", stratifiedSample, Some(stratifiedSampleSql)),
     QueryDef("q_weighted_mix", weightedMix, Some(weightedMixSql)),
     QueryDef("q_heavy_hitters", heavyHitters, Some(heavyHittersSql)),
-    QueryDef("q_incremental_dedup", incrementalDedup, Some(incrementalDedupSql)),
-    QueryDef("q_simhash_screen", simhashScreen, Some(simhashScreenSql)),
-    QueryDef("q_stream_screen", streamScreen, Some(simhashScreenSql)),
-    QueryDef("q_semdedup_screen", semDedupScreenQ, Some(semDedupScreenSql)),
+    QueryDef("q_incremental_dedup", simhashScreen(0), Some(simhashScreenSql(0))),
+    QueryDef("q_simhash_screen", simhashScreen(1), Some(simhashScreenSql(1))),
+    QueryDef("q_stream_screen", streamScreen, Some(simhashScreenSql(1))),
+    QueryDef(
+      "q_semdedup_screen",
+      semDedupScreenQ(col("vec_id") % 10 >= 8),
+      Some(semDedupScreenSql(">= 8", "< 8"))
+    ),
     QueryDef("q_embed_quantize", embedQuantize, Some(embedQuantizeSql)),
     QueryDef("q_source_profile", sourceProfile, Some(sourceProfileSql)),
     QueryDef("q_tfidf", tfidf, Some(tfidfSql)),

@@ -2,8 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.PortableHash
 import graft.ml.{Dedup, Multimodal, Similarity, TextStats, UrlFilter}
+import graft.streaming.StreamingIngest
 import graft.tables.TestTables
 
 /** Training-data-pipeline operators over `documents` / `embeddings`:
@@ -369,19 +371,10 @@ object TextMlQueries {
     // scale this is the knob you set to (state size / store budget).
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
     def drain(): Unit = {
-      val q = graft.streaming.StreamingIngest
-        .dedupeByFingerprint(
-          s.readStream
-            .schema("doc_id LONG, fingerprint LONG")
-            .parquet(src)
-        )
-        .writeStream
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = StreamingIngest.ingestAvailableNow(
+        s, src, StructType.fromDDL("doc_id LONG, fingerprint LONG"), sink, cp,
+        transform = StreamingIngest.dedupeByFingerprint(_).toDF()
+      )
       require(q.awaitTermination(120000), "stream drain did not terminate")
     }
     try {

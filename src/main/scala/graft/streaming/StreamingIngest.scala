@@ -196,9 +196,10 @@ object StreamingIngest {
   /** Streaming near-dup screen against a PERSISTED corpus band index
     * ([[graft.ml.Dedup.buildBandIndex]]) — the continuous-crawl face
     * of the batch `simHashScreen`: each micro-batch's docs explode
-    * into 7x8-bit band keys map-side and probe the index via a
-    * stream-STATIC left join (stateless — corpus vectors never enter
-    * streaming state), then one emit-once state bit per doc picks the
+    * map-side into the batch band keys ([[graft.ml.Dedup.bandRowsOf]])
+    * and probe the index via a stream-STATIC left join (stateless —
+    * corpus vectors never enter streaming state), then one emit-once
+    * state bit per doc picks the
     * closest match within `maxHamming` (ties toward the lower corpus
     * id) and suppresses re-crawled doc_ids across batches. State is
     * one boolean per doc ever seen; the index side stays where it was
@@ -216,16 +217,8 @@ object StreamingIngest {
       maxHamming < nBands,
       s"$nBands-band banding guarantees recall only to Hamming ${nBands - 1}"
     )
-    // must match the layout the index was built with (Dedup.bandSpec)
-    val bandCols = graft.ml.Dedup.bandSpec(nBands).zipWithIndex.map { case ((off, width), b) =>
-      struct(
-        lit(b).as("band"),
-        shiftright(col("simhash"), off).bitwiseAND((1L << width) - 1L).as("bv")
-      )
-    }
-    val banded = stream
-      .select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.bv").as("bv"))
+    // the index's own layout (Dedup.bandSpec), so stream keys join it
+    val banded = graft.ml.Dedup.bandRowsOf(stream, "doc_id", "simhash", nBands)
     // sentinel-encoded candidates (no Option boxing): misses carry
     // (MaxValue, MaxValue) and lose every min comparison
     val probed = banded
@@ -291,24 +284,10 @@ object StreamingIngest {
   ): org.apache.spark.sql.Dataset[LmScreenResult] = {
     import stream.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val big = lmIndex.filter(col("kind") === "big").select(col("w1"), col("w2"), col("v").as("logp_hit"))
-    val lam = lmIndex.filter(col("kind") === "ctx").select(col("w1"), col("v").as("lam"))
-    val pc = lmIndex.filter(col("kind") === "cont").select(col("w2"), col("v").as("pcont"))
-    val floorP = lmIndex.filter(col("kind") === "meta").select(col("v")).head().getDouble(0)
+    val bigrams = graft.ml.KnLm.docBigrams(stream, "doc_id", graft.ml.TextStats.tokens(col("text")))
     val scored = graft.ml.KnLm
-      .docBigrams(stream, "doc_id", graft.ml.TextStats.tokens(col("text")))
-      .join(big, Seq("w1", "w2"), "left")
-      .join(broadcast(lam), Seq("w1"), "left")
-      .join(broadcast(pc), Seq("w2"), "left")
-      .select(
-        col("doc_id"),
-        when(col("logp_hit").isNotNull, col("logp_hit"))
-          .when(col("lam").isNotNull && col("pcont").isNotNull, log(col("lam") * col("pcont")))
-          .when(col("pcont").isNotNull, log(col("pcont")))
-          .otherwise(log(lit(floorP)))
-          .as("logp"),
-        col("logp_hit").isNull.as("unseen")
-      )
+      .backoffLogProbs(bigrams, lmIndex)
+      .select(col("doc_id"), col("logp"), col("logp_hit").isNull.as("unseen"))
       .as[(Long, Double, Boolean)]
     scored
       .groupByKey(_._1)

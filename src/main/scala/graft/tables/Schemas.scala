@@ -191,11 +191,4 @@ object Schemas {
     timestamp_seconds(
       unix_timestamp(dateCol.cast("timestamp")) + (lit(12) - offsetHours) * 3600L
     )
-
-  /** Local-day bucket under an hour offset — the `timezone_daily_calc`
-    * day shift used by the daily aggregate
-    * (`inst/patches/patch_41.R:2659`).
-    */
-  def localDay(dtCol: Column, offsetHours: Column): Column =
-    to_date(timestamp_seconds(unix_timestamp(dtCol) + offsetHours * 3600L))
 }

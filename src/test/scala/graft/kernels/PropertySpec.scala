@@ -113,8 +113,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------------------------
-  // localDay / era / Feb-29 net (SURVEY §7.4(5)): both localDay column
-  // implementations must agree with pure epoch-day integer arithmetic
+  // localDay / era / Feb-29 net (SURVEY §7.4(5)): the localDay column
+  // the ingest path runs must agree with pure epoch-day integer arithmetic
   // (no leap seconds, proleptic Gregorian) across 1900–2100 — the era
   // edges 1900 (NOT a leap year), 2000 (leap) and 2100 (not) included,
   // with extra density around every Feb 28/29 boundary. One DataFrame
@@ -150,7 +150,7 @@ class PropertySpec extends AnyFunSuite {
     Gen.frequency(1 -> uniform, 1 -> feb29)
   }
 
-  test("localDay (both impls) == epoch-day arithmetic across 1900–2100 incl. Feb 29 & era years") {
+  test("localDay == epoch-day arithmetic, 1900–2100, Feb 29, era years") {
     import org.apache.spark.sql.functions._
     val spark = sparkSession
     import spark.implicits._
@@ -166,21 +166,14 @@ class PropertySpec extends AnyFunSuite {
         col("off_qh"),
         graft.operators.DailyAggregate
           .localDay(timestamp_seconds(col("epoch")), col("off_qh") / 4.0)
-          .as("agg_day"),
-        graft.tables.Schemas
-          .localDay(timestamp_seconds(col("epoch")), col("off_qh") / 4.0)
-          .as("schema_day")
+          .as("agg_day")
       )
       .collect()
     assert(got.length == 1000)
     got.foreach { r =>
       val exp = expectedLocalDay(r.getLong(0), r.getInt(1))
       val a = r.getDate(2).toLocalDate
-      val b = r.getDate(3).toLocalDate
-      assert(
-        a == exp && b == exp,
-        s"epoch=${r.getLong(0)} offQh=${r.getInt(1)}: agg=$a schema=$b expected=$exp"
-      )
+      assert(a == exp, s"epoch=${r.getLong(0)} offQh=${r.getInt(1)}: agg=$a expected=$exp")
     }
   }
 
@@ -201,7 +194,7 @@ class PropertySpec extends AnyFunSuite {
       .toDF("epoch_day", "off_qh")
       .select(
         col("epoch_day"),
-        graft.tables.Schemas
+        graft.operators.DailyAggregate
           .localDay(
             graft.tables.Schemas.localNoonUtc(
               date_add(lit(java.sql.Date.valueOf("1970-01-01")), col("epoch_day").cast("int")),

@@ -227,7 +227,7 @@ class CorpusSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("simHashIncremental: planted near-dup found, disjoint doc clean") {
+  test("SimHash band screen: planted near-dup found, disjoint doc clean") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     val d = Seq(
       (1L, base), // existing
@@ -235,8 +235,10 @@ class CorpusSpec extends SparkSpec {
       (3L, base), // incoming: exact copy of doc 1 (Hamming 0)
       (6L, "completely different unrelated vocabulary entirely elsewhere " * 5) // incoming, clean
     ).toDF("doc_id", "text")
+    val incoming = col("doc_id") % 3 === 0
+    val idx = Dedup.buildBandIndex(d.filter(!incoming), "doc_id", "text")
     val out = Dedup
-      .simHashIncremental(d, "doc_id", "text", col("doc_id") % 3 === 0, maxHamming = 6)
+      .simHashScreen(d.filter(incoming), "doc_id", "text", idx, maxHamming = 6)
       .collect()
       .map(r => r.getLong(0) -> (r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
       .toMap

@@ -2,22 +2,37 @@ package graft.ml
 
 import graft.SparkSpec
 import graft.tables.TestTables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Persisted-index incremental dedup: the corpus half of both
   * screening families ([[Dedup.buildBandIndex]] for SimHash,
   * [[Dedup.buildClusterIndex]] for SemDeDup) is built once, written
   * to parquet, and probed by successive batches — the crawl-loop
-  * shape a 100 TB pipeline runs. Each index path must be
-  * output-identical to the inline incremental path (which re-derives
-  * the corpus side per batch), including after a parquet round trip,
-  * and one stored index must serve multiple batches.
+  * shape a 100 TB pipeline runs. Each screen must equal an
+  * unindexed all-pairs reference computed on the driver, including
+  * after a parquet round trip, and one stored index must serve
+  * multiple batches.
   */
 class IncrementalIndexSpec extends SparkSpec {
 
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** Unbanded SimHash screen: each incoming doc against every corpus
+    * doc by exact Hamming distance; the closest within `maxHamming`
+    * wins, ties toward the lower corpus id; token-less docs are no dup.
+    */
+  private def exhaustiveSimHashScreen(docs: DataFrame, incoming: Column, corpus: Column, maxHamming: Int) = {
+    def ids(slice: Column) = docs.filter(slice).select("doc_id").collect().map(_.getLong(0))
+    val h = Dedup.simHash(docs, "doc_id", "text").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ex = ids(corpus).filter(h.contains)
+    ids(incoming).map { id =>
+      val near = h.get(id).toSeq.flatMap(x => ex.map(e => (java.lang.Long.bitCount(x ^ h(e)), e)))
+      near.filter(_._1 <= maxHamming).minOption
+        .fold(Row(id, false, null, null))(b => Row(id, true, b._2, b._1)).toString
+    }.sorted.toSeq
+  }
 
   private def roundTrip(df: DataFrame, name: String, partitionCol: String): DataFrame = {
     val path = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
@@ -25,47 +40,40 @@ class IncrementalIndexSpec extends SparkSpec {
     spark.read.parquet(path)
   }
 
-  test("simHashScreen over a parquet-persisted band index == simHashIncremental, batch by batch") {
+  test("simHashScreen on a persisted band index == exhaustive Hamming scan") {
     val docs = TestTables.documents(spark, sf001)
-    val idx = roundTrip(
-      Dedup.buildBandIndex(docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text"),
-      "bandidx",
-      "band"
-    )
+    val corpus = col("doc_id") % 3 =!= 0
+    val idx = roundTrip(Dedup.buildBandIndex(docs.filter(corpus), "doc_id", "text"), "bandidx", "band")
     // two successive crawl batches probe the SAME stored index
     for (batchPred <- Seq(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0,
                           col("doc_id") % 3 === 0 && col("doc_id") % 2 === 1)) {
-      val screened = Dedup.simHashScreen(docs.filter(batchPred), "doc_id", "text", idx)
-      val inline = Dedup
-        .simHashIncremental(
-          docs.filter(batchPred || col("doc_id") % 3 =!= 0),
-          "doc_id",
-          "text",
-          incomingPred = col("doc_id") % 3 === 0
-        )
-      assert(sorted(screened) == sorted(inline), "index path must equal inline incremental path")
+      val screened = sorted(Dedup.simHashScreen(docs.filter(batchPred), "doc_id", "text", idx))
+      assert(screened == exhaustiveSimHashScreen(docs, batchPred, corpus, maxHamming = 6))
     }
   }
 
-  test("semDedupScreen over a parquet-persisted cluster index == semDedupIncremental, batch by batch") {
+  test("semDedupScreen on a persisted cluster index == all-pairs cosine") {
     val emb = TestTables.embeddings(spark, sf001)
-    val idx = roundTrip(
-      Dedup.buildClusterIndex(emb.filter(col("vec_id") % 10 < 8), "vec_id", "embedding"),
-      "clusteridx",
-      "cluster"
-    )
+    val corpus = col("vec_id") % 10 < 8
+    val fresh = Dedup.buildClusterIndex(emb.filter(corpus), "vec_id", "embedding")
+    val idx = roundTrip(fresh, "clusteridx", "cluster")
+    // reference: the index's own (cluster, normalized vector) per id,
+    // every incoming vector against every same-cluster corpus vector
+    val assigned = Dedup.buildClusterIndex(emb, "vec_id", "embedding").collect()
+      .map(r => r.getLong(1) -> (r.get(0), r.getSeq[Double](2).toArray)).toMap
+    def dot(a: Array[Double], b: Array[Double]): Double = a.indices.map(i => a(i) * b(i)).sum
     for (batchPred <- Seq(col("vec_id") % 10 === 8, col("vec_id") % 10 === 9)) {
-      val screened =
-        Dedup.semDedupScreen(emb.filter(batchPred), "vec_id", "embedding", idx, threshold = 0.42)
-      val inline = Dedup
-        .semDedupIncremental(
-          emb.filter(batchPred || col("vec_id") % 10 < 8),
-          "vec_id",
-          "embedding",
-          incomingPred = col("vec_id") % 10 >= 8,
-          threshold = 0.42
-        )
-      assert(sorted(screened) == sorted(inline), "index path must equal inline incremental path")
+      val ids = emb.filter(batchPred).select("vec_id").collect().map(_.getLong(0)).toSet
+      val expected = assigned.toSeq.collect { case (id, (c, v)) if ids(id) =>
+        val dup = assigned.exists { case (eid, (ec, ev)) =>
+          eid % 10 < 8 && ec == c && dot(v, ev) >= 0.42
+        }
+        Row(id, c, dup).toString
+      }.sorted
+      def screen(index: DataFrame): Seq[String] =
+        sorted(Dedup.semDedupScreen(emb.filter(batchPred), "vec_id", "embedding", index, threshold = 0.42))
+      assert(screen(idx) == screen(fresh), "persisted index must screen like a freshly built one")
+      assert(screen(idx) == expected, "index screen must equal the all-pairs same-cluster reference")
     }
   }
 
@@ -122,9 +130,9 @@ class IncrementalIndexSpec extends SparkSpec {
         emb.filter(col("vec_id") % 10 >= 8), "vec_id", "embedding",
         spark.table("cluster_idx_tbl"), threshold = 0.42)
       indexNeverShuffles(semScreened, "cluster index probe")
-      // and the bucketed-table path is output-identical to the inline path
-      val inline = Dedup.simHashIncremental(docs, "doc_id", "text", col("doc_id") % 3 === 0)
-      assert(sorted(screened) == sorted(inline))
+      // and the bucketed-table path screens like the exhaustive scan
+      val incoming = col("doc_id") % 3 === 0
+      assert(sorted(screened) == exhaustiveSimHashScreen(docs, incoming, !incoming, 6))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -207,20 +215,15 @@ class IncrementalIndexSpec extends SparkSpec {
     // <=6, 5 bands <=4) — the scaled geometry must find exactly the
     // same near-dups, only through fewer candidates
     val incoming = col("doc_id") % 3 === 0
-    val narrow = Dedup
-      .simHashIncremental(docs, "doc_id", "text", incoming, maxHamming = 4, nBands = 7)
-    val wide = Dedup
-      .simHashIncremental(docs, "doc_id", "text", incoming, maxHamming = 4, nBands = 5)
-    assert(sorted(narrow) == sorted(wide))
     val idx7 = Dedup.buildBandIndex(docs.filter(!incoming), "doc_id", "text", nBands = 7)
     val idx5 = Dedup.buildBandIndex(docs.filter(!incoming), "doc_id", "text", nBands = 5)
-    assert(
-      sorted(Dedup.simHashScreen(docs.filter(incoming), "doc_id", "text", idx7, 4, nBands = 7)) ==
-        sorted(Dedup.simHashScreen(docs.filter(incoming), "doc_id", "text", idx5, 4, nBands = 5))
-    )
+    val narrow = sorted(Dedup.simHashScreen(docs.filter(incoming), "doc_id", "text", idx7, 4, nBands = 7))
+    val wide = sorted(Dedup.simHashScreen(docs.filter(incoming), "doc_id", "text", idx5, 4, nBands = 5))
+    assert(narrow == wide)
+    assert(wide == exhaustiveSimHashScreen(docs, incoming, !incoming, maxHamming = 4))
     // over-budget hamming for the layout is a hard error, not silent recall loss
     intercept[IllegalArgumentException] {
-      Dedup.simHashIncremental(docs, "doc_id", "text", incoming, maxHamming = 5, nBands = 5)
+      Dedup.simHashScreen(docs.filter(incoming), "doc_id", "text", idx5, maxHamming = 5, nBands = 5)
     }
   }
 

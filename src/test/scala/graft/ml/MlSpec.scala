@@ -477,7 +477,7 @@ class MlSpec extends SparkSpec {
     assert(out(4L)._2, "singleton cluster member")
   }
 
-  test("Dedup.semDedupIncremental: incoming flagged only against corpus members") {
+  test("SemDeDup screen: incoming flagged only against corpus members") {
     import spark.implicits._
     def vec(primary: Int, eps: Double): Array[Float] = {
       val v = Array.fill(64)(0.0)
@@ -495,8 +495,10 @@ class MlSpec extends SparkSpec {
       (11L, vec(16, 0.0)),
       (12L, vec(16, 0.01))
     ).toDF("vec_id", "embedding")
+    val incoming = col("vec_id") >= 10
+    val idx = Dedup.buildClusterIndex(df.filter(!incoming), "vec_id", "embedding")
     val out = Dedup
-      .semDedupIncremental(df, "vec_id", "embedding", col("vec_id") >= 10, threshold = 0.99)
+      .semDedupScreen(df.filter(incoming), "vec_id", "embedding", idx, threshold = 0.99)
       .collect()
       .map(r => r.getLong(0) -> r.getBoolean(2))
       .toMap

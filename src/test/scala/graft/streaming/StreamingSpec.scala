@@ -1,10 +1,21 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 class StreamingSpec extends SparkSpec {
+
+  /** One AvailableNow drain of the parquet files under `src` through
+    * `transform` into the parquet `sink`, checkpointed at `cp`.
+    */
+  private def drain(src: String, schema: StructType, sink: String, cp: String, timeoutMs: Long = 60000)(
+      transform: DataFrame => DataFrame
+  ): Unit = {
+    val q = StreamingIngest.ingestAvailableNow(spark, src, schema, sink, cp, transform)
+    assert(q.awaitTermination(timeoutMs), s"stream did not terminate within ${timeoutMs / 1000}s")
+  }
 
   test("AvailableNow file ingest drains the backlog exactly once") {
     import spark.implicits._
@@ -43,17 +54,8 @@ class StreamingSpec extends SparkSpec {
       StructField("value", DoubleType)
     ))
     val sink = s"$base/sink"
-    def run(): Unit = {
-      val q = StreamingIngest
-        .dedupeByLastPoint(spark.readStream.schema(schema).parquet(src))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(60000), "stream did not terminate within 60s")
-    }
+    def run(): Unit =
+      drain(src, schema, sink, cp)(StreamingIngest.dedupeByLastPoint(_).toDF())
     Seq(
       (1L, java.sql.Timestamp.valueOf("2023-01-01 00:00:00"), 1.0),
       (1L, java.sql.Timestamp.valueOf("2023-01-01 02:00:00"), 2.0)
@@ -79,17 +81,8 @@ class StreamingSpec extends SparkSpec {
       StructField("doc_id", LongType),
       StructField("fingerprint", LongType)
     ))
-    def run(): Unit = {
-      val q = StreamingIngest
-        .dedupeByFingerprint(spark.readStream.schema(schema).parquet(src))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(60000), "stream did not terminate within 60s")
-    }
+    def run(): Unit =
+      drain(src, schema, sink, cp)(StreamingIngest.dedupeByFingerprint(_).toDF())
     // batch 1: fp 100 arrives twice in one batch (lower id wins), fp 200 once
     Seq((7L, 100L), (3L, 100L), (4L, 200L)).toDF("doc_id", "fingerprint").write.mode("append").parquet(src)
     run()
@@ -111,17 +104,8 @@ class StreamingSpec extends SparkSpec {
       StructField("doc_id", LongType),
       StructField("line_hash", LongType)
     ))
-    def run(): Unit = {
-      val q = StreamingIngest
-        .detectBoilerplate(spark.readStream.schema(schema).parquet(src), minDocs = 2)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(60000), "stream did not terminate within 60s")
-    }
+    def run(): Unit =
+      drain(src, schema, sink, cp)(StreamingIngest.detectBoilerplate(_, minDocs = 2).toDF())
     // batch 1: hash 100 in docs 1+2 (crosses), hash 200 in doc 1 only
     // (below), hash 300 TWICE in doc 5 (within-doc repeat: df stays 1)
     Seq((1L, 100L), (2L, 100L), (1L, 200L), (5L, 300L), (5L, 300L))
@@ -182,17 +166,8 @@ class StreamingSpec extends SparkSpec {
       StructField("tile_y", IntegerType),
       StructField("issue_ts", TimestampType)
     ))
-    def run(): Unit = {
-      val q = StreamingIngest
-        .supersedeForecastsStream(spark.readStream.schema(schema).parquet(src))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(60000), "stream did not terminate within 60s")
-    }
+    def run(): Unit =
+      drain(src, schema, sink, cp)(StreamingIngest.supersedeForecastsStream(_).toDF())
     // batch 1: two issues for the same (valid, tile) arrive together —
     // only the newer one must come out
     Seq(
@@ -217,63 +192,59 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.ml.Dedup
     import graft.tables.TestTables
-    val base = java.nio.file.Files.createTempDirectory("stream7").toString
-    val src = s"$base/src"; val cp = s"$base/cp"; val sink = s"$base/sink"
-    val idxPath = s"$base/idx"
-    new java.io.File(src).mkdirs()
-
     val docs = TestTables.documents(spark, sf001)
-    // corpus half persisted ONCE, exactly as a crawl loop would
-    Dedup
-      .buildBandIndex(docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
-      .write.partitionBy("band").parquet(idxPath)
-    val bandIndex = spark.read.parquet(idxPath)
-
     val incomingPred = col("doc_id") % 3 === 0
     // stream input: (doc_id, simhash) in the same md5-portable family
     // the batch twin hashes with (token-less docs produce no simhash
     // row and are asserted separately)
     val sims = Dedup.simHash(docs.filter(incomingPred), "doc_id", "text")
-
     val schema = StructType(Seq(StructField("doc_id", LongType), StructField("simhash", LongType)))
-    def run(): Unit = {
-      val q = StreamingIngest
-        .screenAgainstBandIndex(spark.readStream.schema(schema).parquet(src), bandIndex)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(120000), "stream did not terminate within 120s")
+
+    // the default 7x8-bit layout and the 5-band layout the scaled
+    // rehearsal switches to, each at its pigeonhole Hamming budget
+    for ((nBands, maxHamming) <- Seq((7, 6), (5, 4))) {
+      val base = java.nio.file.Files.createTempDirectory(s"stream-bands$nBands").toString
+      val src = s"$base/src"; val cp = s"$base/cp"; val sink = s"$base/sink"
+      val idxPath = s"$base/idx"
+      new java.io.File(src).mkdirs()
+
+      // corpus half persisted ONCE, exactly as a crawl loop would
+      Dedup
+        .buildBandIndex(docs.filter(!incomingPred), "doc_id", "text", nBands = nBands)
+        .write.partitionBy("band").parquet(idxPath)
+      val bandIndex = spark.read.parquet(idxPath)
+
+      def run(): Unit =
+        drain(src, schema, sink, cp, timeoutMs = 120000)(
+          StreamingIngest.screenAgainstBandIndex(_, bandIndex, maxHamming, nBands).toDF())
+
+      // two crawl batches against the same stored index; batch 2 also
+      // RE-CRAWLS part of batch 1 — the emit-once state must suppress
+      // the replayed docs across batches (the q_stream_screen row times
+      // a single batch, so this cross-batch guarantee lives here)
+      sims.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
+      run()
+      sims.filter(col("doc_id") % 2 === 1)
+        .unionByName(sims.filter(col("doc_id") % 4 === 0))
+        .write.mode("append").parquet(src)
+      run()
+
+      def verdicts(df: DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getBoolean(1), Option(r.get(2)), Option(r.get(3)))).toSet
+      val streamed = verdicts(spark.read.parquet(sink))
+      val batch = verdicts(Dedup
+        .simHashScreen(docs.filter(incomingPred), "doc_id", "text", bandIndex, maxHamming, nBands)
+        .join(sims.select("doc_id"), Seq("doc_id"), "left_semi")) // docs that had a simhash
+      val diverged = (streamed diff batch) ++ (batch diff streamed)
+      assert(streamed == batch, s"nBands=$nBands stream/batch divergence: $diverged")
+      assert(batch.exists(_._2), s"nBands=$nBands: the screen must flag some near-dup")
+
+      // re-crawl replay: the same docs again produce NOTHING new
+      sims.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
+      run()
+      val replayed = spark.read.parquet(sink).count()
+      assert(replayed == streamed.size.toLong, s"nBands=$nBands: re-crawled docs must be suppressed")
     }
-
-    // two crawl batches against the same stored index; batch 2 also
-    // RE-CRAWLS part of batch 1 — the emit-once state must suppress
-    // the replayed docs across batches (the q_stream_screen row times
-    // a single batch, so this cross-batch guarantee lives here)
-    sims.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    run()
-    sims.filter(col("doc_id") % 2 === 1)
-      .unionByName(sims.filter(col("doc_id") % 4 === 0))
-      .write.mode("append").parquet(src)
-    run()
-
-    val streamed = spark.read.parquet(sink).collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), Option(r.get(2)), Option(r.get(3))))
-      .toSet
-    val batch = Dedup
-      .simHashScreen(docs.filter(incomingPred), "doc_id", "text", bandIndex)
-      .join(sims.select("doc_id"), Seq("doc_id"), "left_semi") // docs that had a simhash
-      .collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), Option(r.get(2)), Option(r.get(3))))
-      .toSet
-    assert(streamed == batch, s"stream/batch divergence: ${(streamed diff batch) ++ (batch diff streamed)}")
-
-    // re-crawl replay: the same docs again produce NOTHING new
-    sims.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)
-    run()
-    assert(spark.read.parquet(sink).count() == streamed.size.toLong, "re-crawled docs must be suppressed")
   }
 
   test("screenPerplexityStream: stream-static LM probe converges to the batch screen") {
@@ -295,17 +266,9 @@ class StreamingSpec extends SparkSpec {
 
     val incoming = docs.filter(col("doc_id") % 3 === 1).select("doc_id", "text")
     val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
-    def run(): Unit = {
-      val q = StreamingIngest
-        .screenPerplexityStream(spark.readStream.schema(schema).parquet(src), lmIndex)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(120000), "stream did not terminate within 120s")
-    }
+    def run(): Unit =
+      drain(src, schema, sink, cp, timeoutMs = 120000)(
+        StreamingIngest.screenPerplexityStream(_, lmIndex).toDF())
 
     // two crawl batches against the same stored index
     incoming.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(src)

@@ -59,7 +59,7 @@ class SchemasSpec extends SparkSpec {
     assert(noon.toSeq == Seq("2023-06-15 19:00:00.0", "2023-06-15 12:00:00.0"))
     val day = Seq(("2023-06-15 03:00:00", -7))
       .toDF("ts_s", "off")
-      .select(Schemas.localDay(to_timestamp(col("ts_s")), col("off")).as("d"))
+      .select(graft.operators.DailyAggregate.localDay(to_timestamp(col("ts_s")), col("off")).as("d"))
       .head().getDate(0).toString
     assert(day == "2023-06-14") // 03:00 UTC is still the previous local day at UTC-7
   }

@@ -5,6 +5,9 @@
 #   main_public_defs          `def`s at two-space indent (members of
 #                             top-level classes and objects) with no
 #                             private/protected/override modifier, in src/main
+#   main_test_only_defs       main_public_defs names that no *.scala file under
+#                             src/main or perfbench/src mentions outside a
+#                             `def <name>` line: entry points only specs reach
 #   main_env_vars             distinct SPARK_GRAFT_* names in src/main
 #   session_builder_sites     `.builder()` calls (SparkSession builders) in
 #                             src/main + src/test
@@ -20,6 +23,12 @@ round_tags='\b(round[- ]?[0-9]+|rounds [0-9]+|r1[0-9]|r0[0-9])\b'
 echo "main_lines $(scala_lines src/main)"
 echo "test_lines $(scala_lines src/test)"
 echo "main_public_defs $({ grep -rhE '^  ((final|implicit) )*def ' src/main --include='*.scala' || true; } | wc -l)"
+test_only=0
+for name in $({ grep -rhoE '^  ((final|implicit) )*def [A-Za-z_][A-Za-z0-9_]*' src/main --include='*.scala' || true; } | sed -E 's/.*def //' | sort -u); do
+  uses=$({ grep -rwh "$name" src/main perfbench/src --include='*.scala' || true; } | { grep -cvE "def $name\b" || true; })
+  if [ "$uses" -eq 0 ]; then test_only=$((test_only + 1)); fi
+done
+echo "main_test_only_defs $test_only"
 echo "main_env_vars $({ grep -rhoE 'SPARK_GRAFT_[A-Z0-9_]+' src/main --include='*.scala' || true; } | sort -u | wc -l)"
 echo "session_builder_sites $(count_lines '\.builder\(\)' src/main src/test)"
 echo "main_round_tags $(count_lines "$round_tags" src/main)"
