@@ -111,18 +111,6 @@ object Similarity {
       .select("a_id", "b_id", "cos")
   }
 
-  /** IVF (inverted-file) approximate top-k: the corpus is partitioned
-    * into `nCentroids` inverted lists by nearest coarse centroid;
-    * each query scores only the lists of its `nProbe` nearest
-    * centroids. Centroids are deterministic unit vectors (no k-means
-    * fit — at scale you'd fit them offline and broadcast; the
-    * assignment/probe machinery is identical).
-    *
-    * This is the second scale path next to [[annTopK]]'s
-    * hyperplane-LSH: IVF bounds work per query to nProbe/nCentroids
-    * of the corpus and its lists shard naturally (shuffle on
-    * cluster id = the inverted index).
-    */
   /** Unit-norm deterministic coarse centroids (the IVF codebook). */
   def normalizedCentroids(nCentroids: Int, dim: Int, seed: Long): Array[Array[Double]] =
     hyperplanes(nCentroids, dim, seed).map { c =>
@@ -351,27 +339,19 @@ object Similarity {
     */
   private[ml] val ExprCodebookMax = 32
 
-  /** Persistable IVF corpus index — the (cluster, neighbor_id, v)
-    * inverted lists [[ivfTopK]] derives inline, factored out so a
-    * deployment builds them ONCE per corpus generation (persist with
-    * [[Dedup.saveClusterIndexTable]]-style bucketing on `cluster`)
-    * while query batches pay only the probe joins via
-    * [[ivfTopKIndexed]]. The build is the n·R centroid assignment —
-    * with √n-scaled codebooks that is the inline path's one
-    * superlinear term (n^1.5 dot products), exactly the cost an index
-    * amortizes. The `cluster` column carries the same geometry
-    * fingerprint discipline as [[Dedup.buildClusterIndex]], so probing
-    * with a mismatched codebook fails loudly.
-    */
   /** The corpus-derived IVF geometry rule the scaled rehearsals
     * measure under (`BENCH_SF10_SCALED.json.rule`): sqrt-n coarse
     * lists (list length ~ sqrt n, so probe cost per query ~
     * nProbe*sqrt n stays sublinear at any corpus size), probing 10 %
     * of the lists — the middle level of the rehearsal's measured
     * recall curve (recall@5 ~0.84 at both 2k and 200k vectors).
-    * Registered rule-geometry rows (q_ivf_serve_scaled /
-    * q_ivf_pq_serve_scaled) and the rehearsal derive from here so the
-    * rule has exactly one definition.
+    * The registered rule-geometry rows (q_ivf_serve_scaled /
+    * q_ivf_pq_serve_scaled) and the rehearsal derive their sizes from
+    * here, so the rule has exactly one definition. They share only
+    * this sizing rule: the rehearsal's timed rows use a fitted
+    * codebook ([[fitCentroids]]) with 3-way corpus multi-assignment,
+    * while the registered rows use the deterministic codebook with
+    * each vector in one list, the shape their oracles reproduce.
     */
   def ruleGeometry(nVecs: Long): (Int, Int) = {
     val nCentroids = math.max(16, math.ceil(math.sqrt(nVecs.toDouble)).toInt)
@@ -393,6 +373,18 @@ object Similarity {
     math.max(8, 64 - java.lang.Long.numberOfLeadingZeros(n - 1))
   }
 
+  /** Persistable IVF corpus index — the (cluster, neighbor_id, v)
+    * inverted lists [[ivfTopK]] derives inline, factored out so a
+    * deployment builds them ONCE per corpus generation (persist with
+    * [[Dedup.saveClusterIndexTable]]-style bucketing on `cluster`)
+    * while query batches pay only the probe joins via
+    * [[ivfTopKIndexed]]. The build is the n·R centroid assignment —
+    * with √n-scaled codebooks that is the inline path's one
+    * superlinear term (n^1.5 dot products), exactly the cost an index
+    * amortizes. The `cluster` column carries the same geometry
+    * fingerprint discipline as [[Dedup.buildClusterIndex]], so probing
+    * with a mismatched codebook fails loudly.
+    */
   def buildIvfIndex(
       emb: DataFrame,
       idCol: String,
@@ -488,6 +480,18 @@ object Similarity {
       codebook, effMulti)
   }
 
+  /** IVF (inverted-file) approximate top-k: the corpus is partitioned
+    * into `nCentroids` inverted lists by nearest coarse centroid;
+    * each query scores only the lists of its `nProbe` nearest
+    * centroids. Centroids are deterministic unit vectors (no k-means
+    * fit — at scale you'd fit them offline and broadcast; the
+    * assignment/probe machinery is identical).
+    *
+    * This is the second scale path next to [[annTopK]]'s
+    * hyperplane-LSH: IVF bounds work per query to nProbe/nCentroids
+    * of the corpus and its lists shard naturally (shuffle on
+    * cluster id = the inverted index).
+    */
   def ivfTopK(
       emb: DataFrame,
       idCol: String,

@@ -32,26 +32,11 @@ object DailyAggregate {
   def localDay(datetime: Column, offsetHours: Column): Column =
     to_date(datetime + offsetHours * expr("INTERVAL '1' HOUR"))
 
-  /** Value column for one aggregation type over a grouped `value` column
-    * (named by `valueName` for the sort-based exact percentile).
-    */
-  def aggFor(aggType: String, valueName: String): Column = {
-    val value = col(valueName)
-    aggType match {
-      case "instantaneous" | "mean" => avg(value)
-      case "median"                 => expr(s"percentile($valueName, 0.5)")
-      case "min"                    => min(value)
-      case "max"                    => max(value)
-      case "sum"                    => sum(value)
-      case "min_max_mean"           => (min(value) + max(value)) / lit(2.0)
-      case other => throw new IllegalArgumentException(s"aggregation type: $other")
-    }
-  }
-
   /** Daily aggregate where the aggregation type is itself a column
     * (per-series metadata joined in). Emits one row per
     * (keyCols, date) with the type-dispatched `value`, plus
-    * n (contributing points) and imputed = bool_or.
+    * n (contributing points) and imputed = bool_or. An `aggType` value
+    * outside the six known types gets a NULL `value`.
     *
     * @param df columns: keyCols, datetime, value, aggType,
     *           offsetHours (int), optionally imputed, periodSeconds

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.PortableHash
-import graft.ml.{Dedup, Dsir, FineDedup, KnLm, Sampling, Similarity, TextStats}
+import graft.ml.{Dedup, Dsir, FineDedup, KnLm, Sampling, TextStats}
 import graft.streaming.StreamingIngest
 import graft.tables.TestTables
 
@@ -22,7 +22,7 @@ import graft.tables.TestTables
   */
 object CorpusQueries {
 
-  import TextMlQueries.{tokCte, shCte, minHashCandCtes, MinHashPerms, MinHashBands}
+  import TextMlQueries.{tokCte, shCte, minHashCandCtes, MinHashPerms, MinHashBands, normVecCte, centroidStructsSql}
 
   // ---- dedup cluster resolution (connected components) -------------
 
@@ -1641,26 +1641,13 @@ object CorpusQueries {
 
   /** Shared oracle CTEs: normalized embeddings + nearest-centroid
     * assignment with the deterministic IVF codebook inlined as
-    * literals (same discipline as q_ivf_clusters).
+    * literals (same fragments as q_ivf_clusters).
     */
-  private lazy val ivfAsgCtes = {
-    val centroids = graft.ml.Similarity.normalizedCentroids(16, 64, 7L)
-    val structs = centroids.zipWithIndex.map { case (c, i) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"{'s': list_inner_product(nv, $arr), 'c': $i}"
-    }
-    s"""e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS FLOAT)::DOUBLE) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv
-       |  FROM e
-       |  WHERE ${Similarity.finiteNormWhere("v")}
-       |), asg AS (
-       |  SELECT vec_id, nv,
-       |         CAST((list_max([${structs.mkString(",\n           ")}])).c AS INT) AS cluster
+  private lazy val ivfAsgCtes =
+    s"""${normVecCte("n", "embeddings")}, asg AS (
+       |  SELECT vec_id, nv, CAST((list_max(${centroidStructsSql(16)})).c AS INT) AS cluster
        |  FROM n
        |)""".stripMargin
-  }
 
   private lazy val semDedupSql =
     s"""WITH $ivfAsgCtes, dups AS (

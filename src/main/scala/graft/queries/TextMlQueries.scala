@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.PortableHash
@@ -10,8 +10,13 @@ import graft.tables.TestTables
 
 /** Training-data-pipeline operators over `documents` / `embeddings`:
   * text stats, language ID, fingerprinting, the dedup family (exact,
-  * Jaccard, MinHash+LSH, SimHash), similarity search (brute-force +
-  * LSH ANN), multimodal binary plumbing.
+  * Jaccard, MinHash+LSH, SimHash), similarity search (brute force and
+  * the LSH, IVF and IVF-PQ ANN families), multimodal binary plumbing.
+  *
+  * Each ANN family has one row function and one oracle generator, both
+  * taking the index geometry as a value ([[AnnGeometry]]): the frozen
+  * rows and their `_scaled` twins register the same function at the
+  * frozen literals and at the corpus-derived rule geometry.
   */
 object TextMlQueries {
 
@@ -636,39 +641,117 @@ object TextMlQueries {
        |FROM sim
        |ORDER BY doc_id""".stripMargin
 
-  // ---- similarity search -------------------------------------------
+  // ---- similarity search: shared embedding fragments ---------------
+
+  private def sqlList(xs: Array[Double]): String = xs.mkString("[", ", ", "]")
+
+  /** `SELECT vec_id[, keep], v` over `from`: the embeddings as double
+    * vectors with the degenerate rows dropped — the row set every
+    * similarity path keeps ([[Similarity.finiteNormWhere]]).
+    */
+  private def finiteVecs(from: String, keep: String): String =
+    s"""SELECT vec_id$keep, v
+       |  FROM (SELECT vec_id$keep, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS v FROM $from)
+       |  WHERE ${Similarity.finiteNormWhere("v")}""".stripMargin
+
+  private def vecCte(name: String, from: String): String =
+    s"$name AS (\n  ${finiteVecs(from, "")}\n)"
+
+  /** `name(vec_id[, keep], nv)`: [[finiteVecs]] L2-normalized — the
+    * DuckDB twin of `Similarity.normalizedVecs`, the one normalized-
+    * vector fragment of every embedding oracle.
+    */
+  private[queries] def normVecCte(name: String, from: String, keep: String = ""): String =
+    s"""$name AS (
+       |  SELECT vec_id$keep, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv
+       |  FROM (${finiteVecs(from, keep)})
+       |)""".stripMargin
+
+  /** The cosine `VectorOps.cosine` computes, over two raw vectors. */
+  private def cosSql(a: String, b: String): String =
+    s"list_dot_product($a, $b) / sqrt(list_dot_product($a, $a) * list_dot_product($b, $b))"
+
+  /** `out`: the rows of `scored` ranked per query by `rankKey`
+    * descending, ties to the lower neighbor id, top 5 kept.
+    */
+  private def top5Cte(out: String, scored: String, rankKey: String): String =
+    s"""$out AS (
+       |  SELECT * FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY $rankKey DESC, neighbor_id) AS rank
+       |    FROM $scored
+       |  )
+       |  WHERE rank <= 5
+       |)""".stripMargin
+
+  /** Inlined-literal budget of the rule-geometry oracles, whose list
+    * and plane counts are only known to DuckDB: 64 centroids cover any
+    * corpus up to 64² = 4096 vectors under the √n rule (gate corpora
+    * are 500, sf0.1 is 2000); 32 planes cover 2³² vectors under the
+    * log2 rule. Both constant families are element-stable in their
+    * count ([[Similarity.hyperplanes]]: component (i, j) depends only
+    * on (i, j, seed)), so every smaller geometry is a prefix, and a
+    * literal geometry inlines exactly its own count.
+    */
+  private val MaxCentroids = 64
+  private val MaxPlanes = 32
+
+  /** The first `n` centroids of the deterministic IVF codebook as
+    * `{'s': nv·c, 'c': id}` struct literals over the normalized-vector
+    * column `nv` — the DuckDB twin of `Similarity.centroidStructs`.
+    */
+  private[queries] def centroidStructsSql(n: Int): String =
+    Similarity
+      .normalizedCentroids(n, 64, 7L)
+      .zipWithIndex
+      .map { case (c, i) => s"{'s': list_dot_product(nv, ${sqlList(c)}), 'c': $i}" }
+      .mkString("[", ",\n     ", "]")
+
+  /** `vec`'s sign-bit bucket over the first `nPlanes` deterministic
+    * hyperplanes — the DuckDB twin of `Similarity.lshBucket`. Each of
+    * the `inlined` plane literals is gated on `i < nPlanes`, so one
+    * fragment serves a literal or a count-derived plane count.
+    */
+  private def lshBucketSql(vec: String, nPlanes: String, inlined: Int): String =
+    Similarity.hyperplanes(inlined, 64).zipWithIndex
+      .map { case (p, i) =>
+        s"CASE WHEN $i < $nPlanes AND list_dot_product($vec, ${sqlList(p)}) >= 0 THEN ${1L << i} ELSE 0 END"
+      }
+      .mkString("CAST(", "\n    + ", " AS BIGINT)")
+
+  /** `bucket` and its `nPlanes` one-bit flips: the 1-bit multiprobe set. */
+  private def lshProbesSql(nPlanes: String): String =
+    s"list_concat([bucket], list_transform(range($nPlanes), i -> xor(bucket, 1::BIGINT << i)))"
+
+  // ---- brute-force similarity --------------------------------------
 
   private def cosineTopK(s: SparkSession, d: String): DataFrame =
-    Similarity
-      .cosineTopK(
+    annRows(
+      Similarity.cosineTopK(
         TestTables.embeddingsDeg(s, d),
         "vec_id",
         "embedding",
         queryPred = col("vec_id") % 100 === 0,
         k = 5
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+      ),
+      "cos"
+    )
+
+  /** Exact top 5 of every `vec_id % 100 = 0` query over `from`, ranked
+    * on the unquantized cosine: `out(query_id, neighbor_id, cos, rank)`.
+    * q_cosine_topk's chain, and the truth q_ann_recall measures.
+    */
+  private def cosineTopCtes(out: String, from: String): String =
+    s"""${vecCte(s"${out}_e", from)}, ${out}_scored AS (
+       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, ${cosSql("q.v", "e.v")} AS cos
+       |  FROM ${out}_e q, ${out}_e e
+       |  WHERE q.vec_id % 100 = 0 AND e.vec_id <> q.vec_id
+       |), ${top5Cte(out, s"${out}_scored", "cos")}""".stripMargin
 
   private val cosineTopKSql =
-    s"""WITH $embDegCte, e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS FLOAT)::DOUBLE) AS v FROM emb_deg
-      |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-      |), q AS (
-      |  SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0
-      |), scored AS (
-      |  SELECT query_id, e.vec_id AS neighbor_id,
-      |         list_dot_product(qv, v) / sqrt(list_dot_product(qv, qv) * list_dot_product(v, v)) AS cos
-      |  FROM q, e
-      |  WHERE e.vec_id <> q.query_id
-      |)
-      |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos
-      |FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-      |  FROM scored
-      |)
-      |WHERE rank <= 5
-      |ORDER BY query_id, rank""".stripMargin
+    s"""WITH $embDegCte, ${cosineTopCtes("brute", "emb_deg")}
+       |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos
+       |FROM brute
+       |ORDER BY query_id, rank""".stripMargin
 
   /** Embedding-cosine near-duplicate pairs at threshold 0.35 over the
     * degenerate-fixture corpus (the driver testdata has no true dups —
@@ -695,16 +778,7 @@ object TextMlQueries {
   }
 
   private val embedNearDupSql =
-    s"""WITH $embDegCte, e AS (
-      |  SELECT vec_id, label,
-      |         list_transform(embedding, x -> CAST(x AS FLOAT)::DOUBLE) AS v
-      |  FROM emb_deg
-      |), n AS (
-      |  SELECT vec_id, label,
-      |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv
-      |  FROM e
-      |  WHERE ${Similarity.finiteNormWhere("v")}
-      |)
+    s"""WITH $embDegCte, ${normVecCte("n", "emb_deg", ", label")}
       |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
       |       round(list_dot_product(a.nv, b.nv), 4) AS cos,
       |       a.label = b.label AS same_label
@@ -718,8 +792,7 @@ object TextMlQueries {
     * only same/probed-bucket pairs are ever scored, which is what
     * replaces q_embed_neardup's all-pairs baseline at corpus scale.
     * The oracle reproduces bucket assignment from inlined plane
-    * literals (sign of the dot is normalization-invariant, so it
-    * buckets the raw double vector) and the same xor multiprobe.
+    * literals and the same xor multiprobe.
     */
   private def embedNearDupBlocked(s: SparkSession, d: String): DataFrame =
     Similarity
@@ -727,31 +800,17 @@ object TextMlQueries {
       .select(col("a_id"), col("b_id"), round(col("cos"), 4).as("cos"))
       .orderBy(col("a_id"), col("b_id"))
 
-  private lazy val embedNearDupBlockedSql = {
-    val planes = Similarity.hyperplanes(8, 64)
-    // bucket the NORMALIZED vector, exactly as lshBucket does in
-    // nearDupPairsBlocked — sign(dot(nv, plane)) and sign(dot(v, plane))
-    // agree in exact arithmetic but are different float roundings, and
-    // the oracle must reproduce the engine's formula, not an algebraic
-    // equivalent
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      val arr = p.mkString("[", ", ", "]")
-      s"CASE WHEN list_inner_product(nv, $arr) >= 0 THEN ${1L << i} ELSE 0 END"
-    }
-    val probes = (0 until 8).map(i => s"xor(bucket, ${1L << i})").mkString(", ")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS FLOAT)::DOUBLE) AS v FROM embeddings
-       |), n AS (
-       |  SELECT vec_id,
-       |         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nv
-       |  FROM e
-       |  WHERE ${Similarity.finiteNormWhere("v")}
-       |), nb AS (
-       |  SELECT vec_id, nv,
-       |         CAST(${bits.mkString("\n  + ")} AS BIGINT) AS bucket
+  // buckets the NORMALIZED vector, exactly as lshBucket does in
+  // nearDupPairsBlocked — sign(dot(nv, plane)) and sign(dot(v, plane))
+  // agree in exact arithmetic but are different float roundings, and
+  // the oracle must reproduce the engine's formula, not an algebraic
+  // equivalent
+  private lazy val embedNearDupBlockedSql =
+    s"""WITH ${normVecCte("n", "embeddings")}, nb AS (
+       |  SELECT vec_id, nv, ${lshBucketSql("nv", "8", 8)} AS bucket
        |  FROM n
        |), probed AS (
-       |  SELECT vec_id, nv, unnest([bucket, $probes]) AS bucket FROM nb
+       |  SELECT vec_id, nv, unnest(${lshProbesSql("8")}) AS bucket FROM nb
        |), pairs AS (
        |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
        |  FROM probed a JOIN nb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
@@ -762,36 +821,13 @@ object TextMlQueries {
        |JOIN n ob ON ob.vec_id = p.b_id
        |WHERE list_dot_product(na.nv, ob.nv) >= 0.35
        |ORDER BY a_id, b_id""".stripMargin
-  }
-
-  /** Approximate ANN via random-hyperplane LSH buckets + 1-bit
-    * multiprobe. Fully hash-checked: the deterministic plane constants
-    * are inlined into the oracle SQL as literals (same discipline as
-    * q_lsh_buckets), and ranking quantizes the score to 4 decimals
-    * with id tie-break, so near-tie order is engine-stable.
-    */
-  private def annLsh(s: SparkSession, d: String): DataFrame =
-    Similarity
-      .annTopK(
-        TestTables.embeddings(s, d),
-        "vec_id",
-        "embedding",
-        queryPred = col("vec_id") % 100 === 0,
-        k = 5,
-        nPlanes = 12
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
 
   /** Hash-checks the ANN path's novel math — the 12-plane sign-bit
     * bucket of every embedding — by EMBEDDING the deterministic plane
-    * constants into the oracle SQL as literals. Scoring/top-k is
-    * oracle-proven elsewhere (q_cosine_topk, q_embed_neardup); rank
-    * output stays rows-only because near-tie ordering is not
-    * cross-engine stable.
+    * constants into the oracle SQL as literals.
     */
   private def lshBuckets(s: SparkSession, d: String): DataFrame = {
-    val planes = Similarity.hyperplanes(12, 64)
+    val planes = Similarity.hyperplanes(Frozen.nPlanes, 64)
     TestTables.embeddings(s, d)
       .select(
         col("vec_id"),
@@ -802,16 +838,10 @@ object TextMlQueries {
       .orderBy(col("vec_id"))
   }
 
-  private lazy val lshBucketsSql = {
-    val planes = Similarity.hyperplanes(12, 64)
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      val arr = p.mkString("[", ", ", "]")
-      s"CASE WHEN list_inner_product(CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]), $arr) >= 0 THEN ${1L << i} ELSE 0 END"
-    }
-    s"""SELECT vec_id, CAST(${bits.mkString("\n  + ")} AS BIGINT) AS bucket
+  private lazy val lshBucketsSql =
+    s"""SELECT vec_id, ${lshBucketSql("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])", Frozen.nPlanes.toString, Frozen.nPlanes)} AS bucket
        |FROM embeddings
        |ORDER BY vec_id""".stripMargin
-  }
 
   /** Hash-checks the IVF path's novel math — nearest-centroid
     * assignment of every normalized embedding — with the centroid
@@ -821,161 +851,233 @@ object TextMlQueries {
     */
   private def ivfClusters(s: SparkSession, d: String): DataFrame =
     Similarity
-      .clusterAssignments(TestTables.embeddingsDeg(s, d), "vec_id", "embedding", nCentroids = 16, seed = 7L)
+      .clusterAssignments(TestTables.embeddingsDeg(s, d), "vec_id", "embedding", nCentroids = Frozen.nCentroids, seed = 7L)
       .orderBy(col("vec_id"))
 
-  private lazy val ivfClustersSql = {
-    val centroids = Similarity.normalizedCentroids(16, 64, 7L)
-    val structs = centroids.zipWithIndex.map { case (c, i) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"{'s': list_inner_product(nv, $arr), 'c': $i}"
-    }
-    s"""WITH $embDegCte, nv0 AS (
-       |  SELECT vec_id,
-       |         list_transform(
-       |           CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]),
-       |           x -> x / sqrt(list_inner_product(CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]), CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])))
-       |         ) AS nv
-       |  FROM emb_deg
-       |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-       |)
+  private lazy val ivfClustersSql =
+    s"""WITH $embDegCte, ${normVecCte("n", "emb_deg")}
        |SELECT vec_id,
-       |       CAST((list_max([${structs.mkString(",\n         ")}])).c AS INT) AS cluster
-       |FROM nv0
+       |       CAST((list_max(${centroidStructsSql(Frozen.nCentroids)})).c AS INT) AS cluster
+       |FROM n
        |ORDER BY vec_id""".stripMargin
+
+  // ---- ANN index geometry ------------------------------------------
+
+  /** One ANN row's index geometry: `nCentroids` coarse IVF lists with
+    * `nProbe` probed per query, `nPlanes` LSH hyperplanes, and the
+    * query sample `vec_id % queryMod = 0`. Each ANN family has one row
+    * function and one oracle generator; its rows differ only in this
+    * value.
+    */
+  private final case class AnnGeometry(nCentroids: Int, nProbe: Int, nPlanes: Int, queryMod: Long) {
+    def queries: Column = col("vec_id") % queryMod === 0
   }
 
-  /** Full LSH-ANN oracle: bucket assignment with inlined plane
-    * literals, the 13-bucket multiprobe set (identity + 12 one-bit
-    * flips), candidate dedup, cosine scoring, quantized-margin rank.
+  /** The frozen geometry of q_ann_lsh, q_ivf_ann, q_ivf_pq_ann and
+    * their serve forms: 16 lists, 4 probed, 12 planes, 1 % of the
+    * vectors as queries.
     */
-  private lazy val annLshSql = {
-    val planes = Similarity.hyperplanes(12, 64)
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      val arr = p.mkString("[", ", ", "]")
-      s"CASE WHEN list_dot_product(v, $arr) >= 0 THEN ${1L << i} ELSE 0 END"
-    }
-    val probes = (0 until 12).map(i => s"xor(bucket, ${1L << i})").mkString(", ")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS FLOAT)::DOUBLE) AS v FROM embeddings
-       |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-       |), b AS (
-       |  SELECT vec_id, CAST(${bits.mkString("\n  + ")} AS BIGINT) AS bucket FROM e
-       |), qprobe AS (
-       |  SELECT vec_id AS query_id, unnest([bucket, $probes]) AS bucket
-       |  FROM b WHERE vec_id % 100 = 0
-       |), cand AS (
-       |  SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
-       |  FROM qprobe q JOIN b c USING (bucket)
-       |  WHERE c.vec_id <> q.query_id
-       |), scored AS (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |         list_dot_product(qe.v, ne.v)
-       |           / sqrt(list_dot_product(qe.v, qe.v) * list_dot_product(ne.v, ne.v)) AS cos
-       |  FROM cand
-       |  JOIN e qe ON qe.vec_id = cand.query_id
-       |  JOIN e ne ON ne.vec_id = cand.neighbor_id
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 4) DESC, neighbor_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
+  private val Frozen = AnnGeometry(nCentroids = 16, nProbe = 4, nPlanes = 12, queryMod = 100L)
+
+  /** The corpus-derived geometry of the `_scaled` rows: lists and
+    * probes from [[Similarity.ruleGeometry]] (√n lists, 10 % probed),
+    * planes from [[Similarity.rulePlanes]], and a ~200-query sample.
+    * Costs one count job.
+    */
+  private def ruleGeometry(emb: DataFrame): AnnGeometry = {
+    val n = emb.count()
+    val (nCentroids, nProbe) = Similarity.ruleGeometry(n)
+    AnnGeometry(nCentroids, nProbe, Similarity.rulePlanes(n), math.max(1L, n / 200L))
   }
 
-  /** IVF ANN — inverted lists by nearest deterministic coarse
-    * centroid, nProbe-list probing. Fully hash-checked: centroid
-    * constants inlined in the oracle (q_ivf_clusters discipline),
-    * quantized-margin rank for engine-stable near-tie order.
+  /** [[AnnGeometry]] as DuckDB expressions for the oracle generators;
+    * `ctes` is the CTE prefix the expressions read (empty for literals),
+    * and `centroidLits` / `planeLits` bound the constants inlined.
     */
-  private def ivfAnn(s: SparkSession, d: String): DataFrame =
-    Similarity
-      .ivfTopK(
-        TestTables.embeddings(s, d),
-        "vec_id",
-        "embedding",
-        queryPred = col("vec_id") % 100 === 0,
-        k = 5,
-        nCentroids = 16,
-        nProbe = 4
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
+  private final case class GeometrySql(
+      ctes: String,
+      nCentroids: String,
+      nProbe: String,
+      nPlanes: String,
+      queryMod: String,
+      centroidLits: Int,
+      planeLits: Int
+  )
+
+  private def literalSql(g: AnnGeometry): GeometrySql =
+    GeometrySql("", g.nCentroids.toString, g.nProbe.toString, g.nPlanes.toString, g.queryMod.toString,
+      g.nCentroids, g.nPlanes)
+
+  private val FrozenSql = literalSql(Frozen)
+
+  /** [[ruleGeometry]] derived from `count(*)` in SQL, with the same
+    * integer-exact arithmetic the Scala rule performs: IEEE-double
+    * ceil(sqrt) and ceil(0.1·nc) for the lists, bit length of n − 1
+    * (DuckDB's binary format) for ceil(log2 n). A corpus that outgrows
+    * the inlined [[MaxCentroids]] / [[MaxPlanes]] budget `error()`s
+    * instead of silently truncating; each guard sits on the one field
+    * that needs it, so an LSH oracle never trips the centroid budget.
+    */
+  private lazy val RuleSql: GeometrySql = {
+    def guarded(field: String, max: Int, what: String) =
+      s"(SELECT CASE WHEN $field > $max " +
+        s"THEN error('rule-geometry oracle: corpus needs more than $max inlined $what') " +
+        s"ELSE $field END FROM geom)"
+    GeometrySql(
+      ctes = """geom AS (
+               |  SELECT ncent, greatest(4, CAST(ceil(CAST(0.10 AS DOUBLE) * ncent) AS INT)) AS nprobe, npl, qmod
+               |  FROM (
+               |    SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS INT)) AS ncent,
+               |           greatest(8, length(format('{:b}', count(*) - 1))) AS npl,
+               |           greatest(1, count(*) // 200) AS qmod
+               |    FROM embeddings
+               |  )
+               |),
+               |""".stripMargin,
+      nCentroids = guarded("ncent", MaxCentroids, "centroids"),
+      nProbe = "(SELECT nprobe FROM geom)",
+      nPlanes = guarded("npl", MaxPlanes, "planes"),
+      queryMod = "(SELECT qmod FROM geom)",
+      centroidLits = MaxCentroids,
+      planeLits = MaxPlanes
+    )
+  }
+
+  private def annRows(df: DataFrame, score: String): DataFrame =
+    df.select(col("query_id"), col("rank"), col("neighbor_id"), round(col(score), 4).as(score))
       .orderBy(col("query_id"), col("rank"))
 
-  /** The production serving shape of [[ivfAnn]]: the inverted lists
-    * are built ONCE (`Similarity.buildIvfIndex`), persisted to
-    * parquet, and the same query batch probes the STORED lists
-    * (`ivfTopKIndexed`) — the per-corpus-generation build /
-    * per-batch serve split a real deployment runs (the build's
-    * n·√n centroid assignment is the inline path's one superlinear
-    * term). The oracle is byte-for-byte q_ivf_ann's: serving a
-    * persisted index must change nothing about the answer.
+  /** Builds an index once, persists it to parquet, and serves `probe`
+    * from the stored copy — the per-corpus-generation build / per-batch
+    * serve split a deployment runs. The result is materialized before
+    * the index files are removed.
     */
-  private def ivfAnnServe(s: SparkSession, d: String): DataFrame = {
-    val emb = TestTables.embeddings(s, d)
-    val dir = graft.TempRoots.newDir("graft-ivfserve").toString
-    Similarity
-      .buildIvfIndex(emb, "vec_id", "embedding", nCentroids = 16)
-      .write
-      .mode("overwrite")
-      .parquet(dir)
-    val out = Similarity
-      .ivfTopKIndexed(
-        emb,
-        "vec_id",
-        "embedding",
-        queryPred = col("vec_id") % 100 === 0,
-        index = s.read.parquet(dir),
-        k = 5,
-        nCentroids = 16,
-        nProbe = 4
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true)
+  private def served(s: SparkSession, prefix: String, index: DataFrame)(probe: DataFrame => DataFrame): DataFrame = {
+    val dir = graft.TempRoots.newDir(prefix).toString
+    index.write.mode("overwrite").parquet(dir)
+    val out = probe(s.read.parquet(dir)).localCheckpoint(true)
     graft.TempRoots.rmTree(dir)
     out
   }
 
-  /** Full IVF-ANN oracle: nearest-centroid lists + nProbe=4 probe
-    * sets from the same inlined centroid literals, normalized-vector
-    * dot scoring, quantized-margin rank.
+  /** One ANN row's oracle: `chain` at geometry `g`, its top-5 rows in
+    * rank order with `score` rounded to 4 decimals.
     */
-  private lazy val ivfAnnSql = {
-    val centroids = Similarity.normalizedCentroids(16, 64, 7L)
-    val structs = centroids.zipWithIndex.map { case (c, i) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"{'s': list_dot_product(nv, $arr), 'c': $i}"
-    }
-    s"""WITH nv0 AS (
-       |  SELECT vec_id,
-       |         list_transform(
-       |           CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]),
-       |           x -> x / sqrt(list_dot_product(CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]), CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])))
-       |         ) AS nv
-       |  FROM embeddings
-       |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-       |), rankedc AS (
-       |  SELECT vec_id, nv, list_reverse_sort([${structs.mkString(",\n         ")}]) AS rc FROM nv0
-       |), corpus AS (
-       |  SELECT vec_id AS neighbor_id, nv AS v, CAST((rc[1]).c AS INT) AS cluster FROM rankedc
-       |), q AS (
-       |  SELECT vec_id AS query_id, nv AS qv,
-       |         CAST(unnest(list_transform(list_slice(rc, 1, 4), x -> x.c)) AS INT) AS cluster
-       |  FROM rankedc WHERE vec_id % 100 = 0
-       |), scored AS (
-       |  SELECT query_id, neighbor_id, list_dot_product(qv, v) AS cos
-       |  FROM q JOIN corpus USING (cluster)
-       |  WHERE neighbor_id <> query_id
-       |), r AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 4) DESC, neighbor_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos
-       |FROM r WHERE rank <= 5
+  private def annSql(g: GeometrySql, chain: (GeometrySql, String) => String, score: String): String =
+    s"""WITH ${g.ctes}${chain(g, "ann")}
+       |SELECT query_id, rank, neighbor_id, round($score, 4) AS $score
+       |FROM ann
        |ORDER BY query_id, rank""".stripMargin
+
+  // ---- LSH ANN -----------------------------------------------------
+
+  /** Approximate ANN via random-hyperplane LSH buckets + 1-bit
+    * multiprobe at geometry `g` (q_ann_lsh frozen, q_ann_lsh_scaled at
+    * rule planes: 2^planes buckets track the corpus, so per-bucket
+    * candidate pairs stay O(1)). Ranking quantizes the score to 4
+    * decimals with id tie-break, so near-tie order is engine-stable.
+    */
+  private def annLsh(geometry: DataFrame => AnnGeometry)(s: SparkSession, d: String): DataFrame = {
+    val emb = TestTables.embeddings(s, d)
+    val g = geometry(emb)
+    annRows(
+      Similarity.annTopK(emb, "vec_id", "embedding", queryPred = g.queries, k = 5, nPlanes = g.nPlanes),
+      "cos"
+    )
   }
+
+  /** The LSH oracle generator: bucket assignment from the inlined plane
+    * literals, the 1-bit multiprobe set, candidate dedup, cosine
+    * scoring and quantized-margin rank, ending in
+    * `out(query_id, neighbor_id, cos, rank)`.
+    */
+  private def lshCtes(g: GeometrySql, out: String): String =
+    s"""${vecCte(s"${out}_e", "embeddings")}, ${out}_b AS (
+       |  SELECT vec_id, ${lshBucketSql("v", g.nPlanes, g.planeLits)} AS bucket
+       |  FROM ${out}_e
+       |), ${out}_probe AS (
+       |  SELECT vec_id AS query_id, unnest(${lshProbesSql(g.nPlanes)}) AS bucket
+       |  FROM ${out}_b WHERE vec_id % ${g.queryMod} = 0
+       |), ${out}_cand AS (
+       |  SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id
+       |  FROM ${out}_probe p JOIN ${out}_b c USING (bucket)
+       |  WHERE c.vec_id <> p.query_id
+       |), ${out}_scored AS (
+       |  SELECT c.query_id, c.neighbor_id, ${cosSql("q.v", "n.v")} AS cos
+       |  FROM ${out}_cand c
+       |  JOIN ${out}_e q ON q.vec_id = c.query_id
+       |  JOIN ${out}_e n ON n.vec_id = c.neighbor_id
+       |), ${top5Cte(out, s"${out}_scored", "round(cos, 4)")}""".stripMargin
+
+  // ---- IVF ANN -----------------------------------------------------
+
+  /** IVF ANN — inverted lists by nearest deterministic coarse
+    * centroid, nProbe-list probing, at the frozen geometry.
+    */
+  private def ivfAnn(s: SparkSession, d: String): DataFrame =
+    annRows(
+      Similarity.ivfTopK(
+        TestTables.embeddings(s, d),
+        "vec_id",
+        "embedding",
+        queryPred = Frozen.queries,
+        k = 5,
+        nCentroids = Frozen.nCentroids,
+        nProbe = Frozen.nProbe
+      ),
+      "cos"
+    )
+
+  /** The production serving shape of [[ivfAnn]] at geometry `g`
+    * (q_ivf_ann_serve frozen, q_ivf_serve_scaled at rule geometry): the
+    * inverted lists are built ONCE (`Similarity.buildIvfIndex`),
+    * persisted, and the query batch probes the STORED lists
+    * (`ivfTopKIndexed`). The build's n·√n centroid assignment is the
+    * inline path's one superlinear term. The frozen row's oracle is
+    * q_ivf_ann's: serving a persisted index must change nothing.
+    */
+  private def ivfServe(geometry: DataFrame => AnnGeometry)(s: SparkSession, d: String): DataFrame = {
+    val emb = TestTables.embeddings(s, d)
+    val g = geometry(emb)
+    served(s, "graft-ivfserve", Similarity.buildIvfIndex(emb, "vec_id", "embedding", nCentroids = g.nCentroids)) {
+      index =>
+        annRows(
+          Similarity.ivfTopKIndexed(emb, "vec_id", "embedding", queryPred = g.queries, index = index,
+            k = 5, nCentroids = g.nCentroids, nProbe = g.nProbe),
+          "cos"
+        )
+    }
+  }
+
+  /** IVF lists and probes at geometry `g`, CTEs prefixed `p`:
+    * `p_rc(vec_id, nv, rc)` ranks the first nCentroids centroids for
+    * every normalized vector, `p_lists(neighbor_id, nv, cluster)` files
+    * each vector under its nearest, and `p_q(query_id, qv, cluster)`
+    * holds each query's nProbe nearest lists. Shared by the IVF and
+    * IVF-PQ generators.
+    */
+  private def ivfListCtes(g: GeometrySql, p: String): String =
+    s"""${normVecCte(s"${p}_nv", "embeddings")}, ${p}_rc AS (
+       |  SELECT vec_id, nv, list_reverse_sort(list_slice(${centroidStructsSql(g.centroidLits)}, 1, ${g.nCentroids})) AS rc
+       |  FROM ${p}_nv
+       |), ${p}_lists AS (
+       |  SELECT vec_id AS neighbor_id, nv, CAST((rc[1]).c AS INT) AS cluster FROM ${p}_rc
+       |), ${p}_q AS (
+       |  SELECT vec_id AS query_id, nv AS qv,
+       |         CAST(unnest(list_transform(list_slice(rc, 1, ${g.nProbe}), x -> x.c)) AS INT) AS cluster
+       |  FROM ${p}_rc WHERE vec_id % ${g.queryMod} = 0
+       |)""".stripMargin
+
+  /** The IVF oracle generator: [[ivfListCtes]], normalized-vector dot
+    * scoring and quantized-margin rank, ending in
+    * `out(query_id, neighbor_id, cos, rank)`.
+    */
+  private def ivfCtes(g: GeometrySql, out: String): String =
+    s"""${ivfListCtes(g, out)}, ${out}_scored AS (
+       |  SELECT query_id, neighbor_id, list_dot_product(qv, nv) AS cos
+       |  FROM ${out}_q JOIN ${out}_lists USING (cluster)
+       |  WHERE neighbor_id <> query_id
+       |), ${top5Cte(out, s"${out}_scored", "round(cos, 4)")}""".stripMargin
 
   // ---- ANN quality evaluation: recall@k vs brute truth -------------
 
@@ -993,15 +1095,15 @@ object TextMlQueries {
   private def annRecall(s: SparkSession, d: String): DataFrame = {
     val e = TestTables.embeddings(s, d)
     val brute = Similarity
-      .cosineTopK(e, "vec_id", "embedding", queryPred = col("vec_id") % 100 === 0, k = 5)
+      .cosineTopK(e, "vec_id", "embedding", queryPred = Frozen.queries, k = 5)
       .select(col("query_id"), col("neighbor_id"))
     // two probe settings of the same 16-list index: the default
     // nProbe=4 shows where the knob starts, nProbe=12 shows it
     // reaching deployable recall — the acceptance curve, not a point
-    def hitsAt(nProbe: Int, alias: String) = brute
+    def hitsAt(g: AnnGeometry, alias: String) = brute
       .join(
         Similarity
-          .ivfTopK(e, "vec_id", "embedding", queryPred = col("vec_id") % 100 === 0, k = 5, nCentroids = 16, nProbe = nProbe)
+          .ivfTopK(e, "vec_id", "embedding", queryPred = g.queries, k = 5, nCentroids = g.nCentroids, nProbe = g.nProbe)
           .select(col("query_id"), col("neighbor_id")),
         Seq("query_id", "neighbor_id")
       )
@@ -1010,8 +1112,8 @@ object TextMlQueries {
     brute
       .select("query_id")
       .distinct()
-      .join(hitsAt(4, "h4"), Seq("query_id"), "left")
-      .join(hitsAt(12, "h12"), Seq("query_id"), "left")
+      .join(hitsAt(Frozen, "h4"), Seq("query_id"), "left")
+      .join(hitsAt(Frozen.copy(nProbe = 12), "h12"), Seq("query_id"), "left")
       .select(
         col("query_id"),
         coalesce(col("h4"), lit(0L)).as("n_hits_p4"),
@@ -1022,76 +1124,14 @@ object TextMlQueries {
       .orderBy(col("query_id"))
   }
 
-  /** Both proven fragment chains verbatim (brute = q_cosine_topk's,
-    * IVF = q_ivf_ann's with the same inlined centroid literals),
-    * renamed to avoid CTE collisions, joined on the survivor sets.
+  /** q_cosine_topk's brute chain and the IVF generator at nProbe 4 and
+    * 12, joined on the survivor sets.
     */
-  private lazy val annRecallSql = {
-    val centroids = Similarity.normalizedCentroids(16, 64, 7L)
-    val structs = centroids.zipWithIndex.map { case (c, i) =>
-      val arr = c.mkString("[", ", ", "]")
-      s"{'s': list_dot_product(nv, $arr), 'c': $i}"
-    }
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS FLOAT)::DOUBLE) AS v FROM embeddings
-       |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-       |), bq AS (
-       |  SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0
-       |), bscored AS (
-       |  SELECT query_id, e.vec_id AS neighbor_id,
-       |         list_dot_product(qv, v) / sqrt(list_dot_product(qv, qv) * list_dot_product(v, v)) AS cos
-       |  FROM bq, e
-       |  WHERE e.vec_id <> bq.query_id
-       |), brute AS (
-       |  SELECT query_id, neighbor_id
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |    FROM bscored
-       |  )
-       |  WHERE rank <= 5
-       |), nv0 AS (
-       |  SELECT vec_id,
-       |         list_transform(
-       |           CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]),
-       |           x -> x / sqrt(list_dot_product(CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]), CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])))
-       |         ) AS nv
-       |  FROM embeddings
-       |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-       |), rankedc AS (
-       |  SELECT vec_id, nv, list_reverse_sort([${structs.mkString(",\n         ")}]) AS rc FROM nv0
-       |), corpus AS (
-       |  SELECT vec_id AS neighbor_id, nv AS v, CAST((rc[1]).c AS INT) AS cluster FROM rankedc
-       |), iq4 AS (
-       |  SELECT vec_id AS query_id, nv AS qv,
-       |         CAST(unnest(list_transform(list_slice(rc, 1, 4), x -> x.c)) AS INT) AS cluster
-       |  FROM rankedc WHERE vec_id % 100 = 0
-       |), iscored4 AS (
-       |  SELECT query_id, neighbor_id, list_dot_product(qv, v) AS cos
-       |  FROM iq4 JOIN corpus USING (cluster)
-       |  WHERE neighbor_id <> query_id
-       |), ivf4 AS (
-       |  SELECT query_id, neighbor_id
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 4) DESC, neighbor_id) AS rank
-       |    FROM iscored4
-       |  )
-       |  WHERE rank <= 5
-       |), iq12 AS (
-       |  SELECT vec_id AS query_id, nv AS qv,
-       |         CAST(unnest(list_transform(list_slice(rc, 1, 12), x -> x.c)) AS INT) AS cluster
-       |  FROM rankedc WHERE vec_id % 100 = 0
-       |), iscored12 AS (
-       |  SELECT query_id, neighbor_id, list_dot_product(qv, v) AS cos
-       |  FROM iq12 JOIN corpus USING (cluster)
-       |  WHERE neighbor_id <> query_id
-       |), ivf12 AS (
-       |  SELECT query_id, neighbor_id
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 4) DESC, neighbor_id) AS rank
-       |    FROM iscored12
-       |  )
-       |  WHERE rank <= 5
-       |), hits4 AS (
+  private lazy val annRecallSql =
+    s"""WITH ${cosineTopCtes("brute", "embeddings")},
+       |${ivfCtes(FrozenSql, "ivf4")},
+       |${ivfCtes(literalSql(Frozen.copy(nProbe = 12)), "ivf12")},
+       |hits4 AS (
        |  SELECT b.query_id, count(*) AS n_hits
        |  FROM brute b JOIN ivf4 i ON i.query_id = b.query_id AND i.neighbor_id = b.neighbor_id
        |  GROUP BY 1
@@ -1109,7 +1149,6 @@ object TextMlQueries {
        |LEFT JOIN hits4 h4 USING (query_id)
        |LEFT JOIN hits12 h12 USING (query_id)
        |ORDER BY q.query_id""".stripMargin
-  }
 
   // ---- IVF-PQ: product-quantized ANN -------------------------------
 
@@ -1118,8 +1157,6 @@ object TextMlQueries {
   private val PqSubDim = 8
   private val PqSeed = 11L
   private lazy val pqCb = graft.ml.ProductQuantize.codebooks(PqM, PqK, PqSubDim, PqSeed)
-
-  private def sqlList(xs: Array[Double]): String = xs.mkString("[", ", ", "]")
 
   /** DuckDB argmin struct for subspace j — the same `c·c − 2·sub·c`
     * surrogate with the SAME inlined literals as the engine, so the
@@ -1134,27 +1171,11 @@ object TextMlQueries {
     s"list_sort([${entries.mkString(",\n             ")}])[1]"
   }
 
-  private val pqNvCte =
-    s"""nv0 AS (
-      |  SELECT vec_id,
-      |         list_transform(
-      |           CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]),
-      |           x -> x / sqrt(list_dot_product(CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]), CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])))
-      |         ) AS nv
-      |  FROM embeddings
-      |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-      |)""".stripMargin
-
-  private def pqSubsCte: String = {
-    val subs = (0 until PqM)
+  /** The `sub0 … sub7` subvector slices of a normalized vector `nv`. */
+  private lazy val pqSubs =
+    (0 until PqM)
       .map(j => s"list_slice(nv, ${j * PqSubDim + 1}, ${(j + 1) * PqSubDim}) AS sub$j")
       .mkString(",\n         ")
-    s"""subs AS (
-       |  SELECT vec_id, nv,
-       |         $subs
-       |  FROM nv0
-       |)""".stripMargin
-  }
 
   private def pqEncQuery(s: SparkSession, d: String): DataFrame =
     graft.ml.ProductQuantize
@@ -1170,7 +1191,10 @@ object TextMlQueries {
     val recon = (0 until PqM)
       .map(j => s"(list_dot_product(sub$j, sub$j) + st$j.s)")
       .mkString(" + ")
-    s"""WITH $pqNvCte, $pqSubsCte, enc AS (
+    s"""WITH ${normVecCte("nv0", "embeddings")}, subs AS (
+       |  SELECT vec_id, $pqSubs
+       |  FROM nv0
+       |), enc AS (
        |  SELECT vec_id,
        |         $sts
        |  FROM subs
@@ -1182,103 +1206,70 @@ object TextMlQueries {
   }
 
   private def ivfPqAnn(s: SparkSession, d: String): DataFrame =
-    graft.ml.ProductQuantize
-      .ivfPqTopK(
+    annRows(
+      graft.ml.ProductQuantize.ivfPqTopK(
         TestTables.embeddings(s, d),
         "vec_id",
         "embedding",
-        queryPred = col("vec_id") % 100 === 0,
+        queryPred = Frozen.queries,
         kNN = 5,
         m = PqM,
         k = PqK,
         pqSeed = PqSeed,
-        nCentroids = 16,
-        nProbe = 4,
+        nCentroids = Frozen.nCentroids,
+        nProbe = Frozen.nProbe,
         coarseSeed = 7L
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("adc"), 4).as("adc"))
-      .orderBy(col("query_id"), col("rank"))
+      ),
+      "adc"
+    )
 
-  /** [[ivfPqAnn]]'s production serving shape: the PQ-encoded inverted
-    * lists built ONCE (`ProductQuantize.buildIvfPqIndex` — coarse
-    * assignment + PQ encode, the per-corpus-generation build),
-    * persisted to parquet, and the same query batch probed via
-    * `ivfPqTopKIndexed`. Oracle byte-for-byte q_ivf_pq_ann's.
+  /** [[ivfPqAnn]]'s production serving shape at geometry `g`
+    * (q_ivf_pq_ann_serve frozen, q_ivf_pq_serve_scaled at rule
+    * geometry): the PQ-encoded inverted lists built ONCE
+    * (`ProductQuantize.buildIvfPqIndex` — coarse assignment + PQ
+    * encode), persisted, and the query batch probed via
+    * `ivfPqTopKIndexed`. The PQ codebook is fixed by (m, k, pqSeed);
+    * only the coarse lists follow the geometry.
     */
-  private def ivfPqAnnServe(s: SparkSession, d: String): DataFrame = {
+  private def ivfPqServe(geometry: DataFrame => AnnGeometry)(s: SparkSession, d: String): DataFrame = {
     val emb = TestTables.embeddings(s, d)
-    val dir = graft.TempRoots.newDir("graft-ivfpqserve").toString
-    graft.ml.ProductQuantize
-      .buildIvfPqIndex(emb, "vec_id", "embedding", m = PqM, k = PqK, pqSeed = PqSeed,
-        nCentroids = 16, coarseSeed = 7L)
-      .write
-      .mode("overwrite")
-      .parquet(dir)
-    val out = graft.ml.ProductQuantize
-      .ivfPqTopKIndexed(
-        emb,
-        "vec_id",
-        "embedding",
-        queryPred = col("vec_id") % 100 === 0,
-        index = s.read.parquet(dir),
-        kNN = 5,
-        m = PqM,
-        k = PqK,
-        pqSeed = PqSeed,
-        nCentroids = 16,
-        nProbe = 4,
-        coarseSeed = 7L
+    val g = geometry(emb)
+    val pq = graft.ml.ProductQuantize
+    served(s, "graft-ivfpqserve",
+      pq.buildIvfPqIndex(emb, "vec_id", "embedding", m = PqM, k = PqK, pqSeed = PqSeed,
+        nCentroids = g.nCentroids, coarseSeed = 7L)) { index =>
+      annRows(
+        pq.ivfPqTopKIndexed(emb, "vec_id", "embedding", queryPred = g.queries, index = index,
+          kNN = 5, m = PqM, k = PqK, pqSeed = PqSeed, nCentroids = g.nCentroids, nProbe = g.nProbe,
+          coarseSeed = 7L),
+        "adc"
       )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("adc"), 4).as("adc"))
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true)
-    graft.TempRoots.rmTree(dir)
-    out
+    }
   }
 
-  /** Full IVF-PQ oracle: coarse probe lists from the q_ivf_ann
-    * centroid literals, per-subspace argmin codes, ADC scoring of the
-    * query's exact subvectors against the code-named codebook entries,
-    * quantized-margin rank.
+  /** The IVF-PQ oracle generator: [[ivfListCtes]], per-subspace argmin
+    * codes of every listed vector, ADC scoring of the query's exact
+    * subvectors against the code-named codebook entries, and
+    * quantized-margin rank, ending in `out(query_id, neighbor_id, adc, rank)`.
     */
-  private lazy val ivfPqAnnSql = {
-    val coarse = Similarity.normalizedCentroids(16, 64, 7L)
-    val coarseStructs = coarse.zipWithIndex.map { case (c, i) =>
-      s"{'s': list_dot_product(nv, ${sqlList(c)}), 'c': $i}"
-    }
-    val sts = (0 until PqM).map(j => s"${pqStSql(j)}.c AS code$j").mkString(",\n         ")
+  private def ivfPqCtes(g: GeometrySql, out: String): String = {
+    val codes = (0 until PqM).map(j => s"${pqStSql(j)}.c AS code$j").mkString(",\n         ")
     val adc = (0 until PqM)
       .map { j =>
         val cbLit = s"[${pqCb(j).map(sqlList).mkString(", ")}]"
-        s"list_dot_product(list_slice(q.nv, ${j * PqSubDim + 1}, ${(j + 1) * PqSubDim}), ($cbLit)[c.code$j + 1])"
+        s"list_dot_product(list_slice(q.qv, ${j * PqSubDim + 1}, ${(j + 1) * PqSubDim}), ($cbLit)[c.code$j + 1])"
       }
       .mkString("\n         + ")
-    s"""WITH $pqNvCte, $pqSubsCte, rankedc AS (
-       |  SELECT vec_id, list_reverse_sort([${coarseStructs.mkString(",\n         ")}]) AS rc FROM nv0
-       |), enc AS (
-       |  SELECT vec_id,
-       |         $sts
-       |  FROM subs
-       |), corpus AS (
-       |  SELECT r.vec_id AS neighbor_id, CAST((r.rc[1]).c AS INT) AS cluster,
-       |         e.* EXCLUDE (vec_id)
-       |  FROM rankedc r JOIN enc e USING (vec_id)
-       |), q AS (
-       |  SELECT r.vec_id AS query_id, n.nv,
-       |         CAST(unnest(list_transform(list_slice(r.rc, 1, 4), x -> x.c)) AS INT) AS cluster
-       |  FROM rankedc r JOIN nv0 n USING (vec_id) WHERE r.vec_id % 100 = 0
-       |), scored AS (
+    s"""${ivfListCtes(g, out)}, ${out}_codes AS (
+       |  SELECT neighbor_id, cluster,
+       |         $codes
+       |  FROM (SELECT neighbor_id, cluster, $pqSubs FROM ${out}_lists)
+       |), ${out}_scored AS (
        |  SELECT q.query_id, c.neighbor_id,
        |         $adc AS adc
-       |  FROM q JOIN corpus c USING (cluster)
+       |  FROM ${out}_q q JOIN ${out}_codes c USING (cluster)
        |  WHERE c.neighbor_id <> q.query_id
-       |), r AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(adc, 4) DESC, neighbor_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(adc, 4) AS adc
-       |FROM r WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
+       |), ${top5Cte(out, s"${out}_scored", "round(adc, 4)")}""".stripMargin
   }
 
   // ---- multimodal binary plumbing ----------------------------------
@@ -1482,296 +1473,19 @@ object TextMlQueries {
     QueryDef("q_cosine_topk", cosineTopK, Some(cosineTopKSql)),
     QueryDef("q_embed_neardup", embedNearDup, Some(embedNearDupSql)),
     QueryDef("q_embed_neardup_blocked", embedNearDupBlocked, Some(embedNearDupBlockedSql)),
-    QueryDef("q_ann_lsh", annLsh, Some(annLshSql)),
+    QueryDef("q_ann_lsh", annLsh(_ => Frozen), Some(annSql(FrozenSql, lshCtes, "cos"))),
     QueryDef("q_lsh_buckets", lshBuckets, Some(lshBucketsSql)),
-    QueryDef("q_ivf_ann", ivfAnn, Some(ivfAnnSql)),
-    QueryDef("q_ivf_ann_serve", ivfAnnServe, Some(ivfAnnSql)),
+    QueryDef("q_ivf_ann", ivfAnn, Some(annSql(FrozenSql, ivfCtes, "cos"))),
+    QueryDef("q_ivf_ann_serve", ivfServe(_ => Frozen), Some(annSql(FrozenSql, ivfCtes, "cos"))),
     QueryDef("q_ann_recall", annRecall, Some(annRecallSql)),
     QueryDef("q_ivf_clusters", ivfClusters, Some(ivfClustersSql)),
     QueryDef("q_pq_encode", pqEncQuery, Some(pqEncodeSql)),
-    QueryDef("q_ivf_pq_ann", ivfPqAnn, Some(ivfPqAnnSql)),
-    QueryDef("q_ivf_pq_ann_serve", ivfPqAnnServe, Some(ivfPqAnnSql)),
+    QueryDef("q_ivf_pq_ann", ivfPqAnn, Some(annSql(FrozenSql, ivfPqCtes, "adc"))),
+    QueryDef("q_ivf_pq_ann_serve", ivfPqServe(_ => Frozen), Some(annSql(FrozenSql, ivfPqCtes, "adc"))),
     QueryDef("q_multimodal_features", multimodalFeatures, Some(multimodalFeaturesSql)),
     QueryDef("q_frame_sample", frameSample, Some(frameSampleSql)),
-    QueryDef("q_ivf_serve_scaled", ivfServeScaled, Some(ivfServeScaledSql)),
-    QueryDef("q_ivf_pq_serve_scaled", ivfPqServeScaled, Some(ivfPqServeScaledSql)),
-    QueryDef("q_ann_lsh_scaled", annLshScaled, Some(annLshScaledSql))
+    QueryDef("q_ivf_serve_scaled", ivfServe(ruleGeometry), Some(annSql(RuleSql, ivfCtes, "cos"))),
+    QueryDef("q_ivf_pq_serve_scaled", ivfPqServe(ruleGeometry), Some(annSql(RuleSql, ivfPqCtes, "adc"))),
+    QueryDef("q_ann_lsh_scaled", annLsh(ruleGeometry), Some(annSql(RuleSql, lshCtes, "cos")))
   )
-
-  // ---- rule-geometry serve twins (rows-only) ------------------------
-
-  /** q_ivf_ann_serve at CORPUS-DERIVED geometry instead of the
-    * 16-list literal its oracle freezes: nCentroids/nProbe from
-    * [[Similarity.ruleGeometry]] (sqrt-n lists, 10 % probe) and a
-    * ~constant ~200-query workload (`vec_id % max(1, n/200) = 0`) —
-    * the exact configuration the scaled rehearsals measure, registered
-    * so the sf1/sf10 artifacts carry these rows DIRECTLY instead of
-    * excluding the frozen-geometry twins with a pointer at
-    * BENCH_SF10_SCALED.json. Full hash oracle despite the
-    * corpus-derived geometry: [[Similarity.hyperplanes]] is
-    * element-stable in the plane count (component (i,j) depends only
-    * on (i,j,seed)), so [[ivfServeScaledSql]] inlines the first
-    * [[DynMaxCentroids]] centroids as literals and SLICES to the
-    * nCentroids it derives from `count(*)` in SQL — the oracle follows
-    * the rule at any corpus size up to the inlined budget and error()s
-    * loudly beyond it.
-    */
-  private def ivfServeScaled(s: SparkSession, d: String): DataFrame = {
-    val emb = TestTables.embeddings(s, d)
-    val nVecs = emb.count()
-    val (nc, np) = Similarity.ruleGeometry(nVecs)
-    val queryMod = math.max(1L, nVecs / 200L)
-    val dir = graft.TempRoots.newDir("graft-ivfservescaled").toString
-    Similarity
-      .buildIvfIndex(emb, "vec_id", "embedding", nCentroids = nc)
-      .write
-      .mode("overwrite")
-      .parquet(dir)
-    val out = Similarity
-      .ivfTopKIndexed(
-        emb, "vec_id", "embedding",
-        queryPred = col("vec_id") % queryMod === 0,
-        index = s.read.parquet(dir),
-        k = 5, nCentroids = nc, nProbe = np
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true)
-    graft.TempRoots.rmTree(dir)
-    out
-  }
-
-  /** q_ann_lsh at rule geometry — see [[ivfServeScaled]]: nPlanes from
-    * [[Similarity.rulePlanes]] (2^planes buckets track the corpus, so
-    * per-bucket candidate pairs stay O(1)) instead of the 12-plane
-    * oracle literal, constant ~200-query workload. Retires the last
-    * frozen-geometry ANN row whose scale story lived only in
-    * BENCH_SF10_SCALED.json.
-    */
-  private def annLshScaled(s: SparkSession, d: String): DataFrame = {
-    val emb = TestTables.embeddings(s, d)
-    val nVecs = emb.count()
-    val queryMod = math.max(1L, nVecs / 200L)
-    Similarity
-      .annTopK(
-        emb, "vec_id", "embedding",
-        queryPred = col("vec_id") % queryMod === 0,
-        k = 5,
-        nPlanes = Similarity.rulePlanes(nVecs)
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** q_ivf_pq_ann_serve at rule geometry — see [[ivfServeScaled]]. */
-  private def ivfPqServeScaled(s: SparkSession, d: String): DataFrame = {
-    val emb = TestTables.embeddings(s, d)
-    val nVecs = emb.count()
-    val (nc, np) = Similarity.ruleGeometry(nVecs)
-    val queryMod = math.max(1L, nVecs / 200L)
-    val dir = graft.TempRoots.newDir("graft-ivfpqservescaled").toString
-    graft.ml.ProductQuantize
-      .buildIvfPqIndex(emb, "vec_id", "embedding", m = PqM, k = PqK, pqSeed = PqSeed, nCentroids = nc)
-      .write
-      .mode("overwrite")
-      .parquet(dir)
-    val out = graft.ml.ProductQuantize
-      .ivfPqTopKIndexed(
-        emb, "vec_id", "embedding",
-        queryPred = col("vec_id") % queryMod === 0,
-        index = s.read.parquet(dir),
-        kNN = 5, m = PqM, k = PqK, pqSeed = PqSeed, nCentroids = nc, nProbe = np
-      )
-      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("adc"), 4).as("adc"))
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true)
-    graft.TempRoots.rmTree(dir)
-    out
-  }
-
-  // ---- dynamic-geometry oracles for the rule-geometry twins ---------
-  //
-  // The twins derive nCentroids/nProbe/nPlanes from the corpus count at
-  // runtime, which a static SQL string can follow because every
-  // generated constant family is element-stable in its count parameter:
-  // hyperplanes(n, dim, seed)(i)(j) depends only on (i, j, seed), so
-  // plane/centroid number i is the SAME array whether the engine asked
-  // for 9 planes or 32. The oracle inlines the first DynMax* constants
-  // as literals, computes the rule geometry from count(*) in SQL
-  // (integer-exact: bit-length for ceil-log2, and the same IEEE-double
-  // ceil(sqrt)/ceil(0.1*nc) ops the Scala rule performs), slices the
-  // literal list to the derived size, and error()s loudly if the corpus
-  // ever outgrows the inlined budget instead of silently truncating.
-
-  /** Inlined-literal budget: 64 centroids covers any corpus up to
-    * 64² = 4096 vectors under the √n rule (gate corpora are 500,
-    * sf0.1 is 2000); 32 planes covers 2³² vectors under the log2 rule.
-    */
-  private val DynMaxCentroids = 64
-  private val DynMaxPlanes = 32
-
-  /** Corpus-derived geometry CTE mirroring [[Similarity.ruleGeometry]]
-    * (√n lists, 10 % probe) + the `n/200` query-workload modulus the
-    * twins use. `geom` is one row; downstream CTEs cross-join it.
-    */
-  private val dynGeomCte =
-    s"""g AS (
-       |  SELECT count(*) AS n, greatest(16, CAST(ceil(sqrt(count(*))) AS INT)) AS nc0
-       |  FROM embeddings
-       |), geom AS (
-       |  SELECT CASE WHEN nc0 > $DynMaxCentroids
-       |              THEN error('rule-geometry oracle: corpus needs more than $DynMaxCentroids inlined centroids')
-       |              ELSE nc0 END AS ncent,
-       |         greatest(4, CAST(ceil(CAST(0.10 AS DOUBLE) * nc0) AS INT)) AS nprobe,
-       |         greatest(1, n // 200) AS qmod
-       |  FROM g
-       |)""".stripMargin
-
-  /** The first [[DynMaxCentroids]] coarse centroids as (score, id)
-    * struct literals over a normalized-vector column `nv` — the
-    * element-stable prefix every rule-derived codebook is a slice of.
-    */
-  private lazy val dynCentroidStructs: String =
-    Similarity
-      .normalizedCentroids(DynMaxCentroids, 64, 7L)
-      .zipWithIndex
-      .map { case (c, i) => s"{'s': list_dot_product(nv, ${sqlList(c)}), 'c': $i}" }
-      .mkString(",\n           ")
-
-  /** Shared IVF coarse-assignment CTE chain at rule geometry: ranked
-    * centroid prefix sliced to the derived ncent, corpus = argmax list,
-    * queries = top-nprobe lists of every `vec_id % qmod = 0` vector.
-    */
-  private lazy val dynIvfCtes =
-    s"""$dynGeomCte, nv0 AS (
-       |  SELECT vec_id,
-       |         list_transform(
-       |           CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]),
-       |           x -> x / sqrt(list_dot_product(CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]), CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])))
-       |         ) AS nv
-       |  FROM embeddings
-       |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-       |), rankedc AS (
-       |  SELECT vec_id, nv,
-       |         list_reverse_sort(list_slice([$dynCentroidStructs], 1, ncent)) AS rc
-       |  FROM nv0, geom
-       |)""".stripMargin
-
-  /** Full-value oracle for [[ivfServeScaled]] — q_ivf_ann's proven
-    * probe/score/quantized-rank SQL with the 16-list literal geometry
-    * replaced by the count(*)-derived rule. Beyond closing the
-    * `no_oracle` gap, this hash-pins the geometry arithmetic itself:
-    * a silent drift in [[Similarity.ruleGeometry]] now breaks the hash.
-    */
-  private lazy val ivfServeScaledSql =
-    s"""WITH $dynIvfCtes, corpus AS (
-       |  SELECT vec_id AS neighbor_id, nv AS v, CAST((rc[1]).c AS INT) AS cluster FROM rankedc
-       |), q AS (
-       |  SELECT r.vec_id AS query_id, r.nv AS qv,
-       |         CAST(unnest(list_transform(list_slice(r.rc, 1, geom.nprobe), x -> x.c)) AS INT) AS cluster
-       |  FROM rankedc r, geom WHERE r.vec_id % geom.qmod = 0
-       |), scored AS (
-       |  SELECT query_id, neighbor_id, list_dot_product(qv, v) AS cos
-       |  FROM q JOIN corpus USING (cluster)
-       |  WHERE neighbor_id <> query_id
-       |), r AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 4) DESC, neighbor_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos
-       |FROM r WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-
-  /** Full-value oracle for [[ivfPqServeScaled]] — q_ivf_pq_ann's ADC
-    * scoring (identical PQ codebook literals: the PQ geometry is fixed
-    * by (m, k, pqSeed), only the coarse lists follow the corpus rule).
-    */
-  private lazy val ivfPqServeScaledSql = {
-    val sts = (0 until PqM).map(j => s"${pqStSql(j)}.c AS code$j").mkString(",\n         ")
-    val adc = (0 until PqM)
-      .map { j =>
-        val cbLit = s"[${pqCb(j).map(sqlList).mkString(", ")}]"
-        s"list_dot_product(list_slice(q.qv, ${j * PqSubDim + 1}, ${(j + 1) * PqSubDim}), ($cbLit)[c.code$j + 1])"
-      }
-      .mkString("\n         + ")
-    s"""WITH $dynIvfCtes, subs AS (
-       |  SELECT vec_id, nv,
-       |         ${(0 until PqM).map(j => s"list_slice(nv, ${j * PqSubDim + 1}, ${(j + 1) * PqSubDim}) AS sub$j").mkString(",\n         ")}
-       |  FROM nv0
-       |), enc AS (
-       |  SELECT vec_id,
-       |         $sts
-       |  FROM subs
-       |), corpus AS (
-       |  SELECT r.vec_id AS neighbor_id, CAST((r.rc[1]).c AS INT) AS cluster,
-       |         e.* EXCLUDE (vec_id)
-       |  FROM rankedc r JOIN enc e USING (vec_id)
-       |), q AS (
-       |  SELECT r.vec_id AS query_id, r.nv AS qv,
-       |         CAST(unnest(list_transform(list_slice(r.rc, 1, geom.nprobe), x -> x.c)) AS INT) AS cluster
-       |  FROM rankedc r, geom WHERE r.vec_id % geom.qmod = 0
-       |), scored AS (
-       |  SELECT q.query_id, c.neighbor_id,
-       |         $adc AS adc
-       |  FROM q JOIN corpus c USING (cluster)
-       |  WHERE c.neighbor_id <> q.query_id
-       |), r AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(adc, 4) DESC, neighbor_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(adc, 4) AS adc
-       |FROM r WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Full-value oracle for [[annLshScaled]] — q_ann_lsh's proven
-    * bucket/multiprobe/score SQL with the plane count derived from
-    * count(*): nPlanes = max(8, bit_length(n−1)) — the integer-exact
-    * form of ceil(log2 n) [[Similarity.rulePlanes]] computes — via
-    * DuckDB's binary format; bucket bits and the 1-bit multiprobe set
-    * are gated per-plane on `i < npl` so the same 32 inlined plane
-    * literals serve any derived plane count.
-    */
-  private lazy val annLshScaledSql = {
-    val planes = Similarity.hyperplanes(DynMaxPlanes, 64)
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      s"CASE WHEN $i < npl AND list_dot_product(v, ${sqlList(p)}) >= 0 THEN ${1L << i} ELSE 0 END"
-    }
-    s"""WITH g AS (
-       |  SELECT count(*) AS n, length(format('{:b}', count(*) - 1)) AS bl FROM embeddings
-       |), geom AS (
-       |  SELECT CASE WHEN bl > $DynMaxPlanes
-       |              THEN error('rule-geometry oracle: corpus needs more than $DynMaxPlanes inlined planes')
-       |              ELSE greatest(8, bl) END AS npl,
-       |         greatest(1, n // 200) AS qmod
-       |  FROM g
-       |), e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS FLOAT)::DOUBLE) AS v FROM embeddings
-       |  WHERE ${Similarity.finiteNormWhere("CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[])")}
-       |), b AS (
-       |  SELECT vec_id, CAST(${bits.mkString("\n  + ")} AS BIGINT) AS bucket FROM e, geom
-       |), qprobe AS (
-       |  SELECT b.vec_id AS query_id,
-       |         unnest(list_concat([b.bucket],
-       |                list_transform(range(geom.npl), i -> xor(b.bucket, (1::BIGINT << i))))) AS bucket
-       |  FROM b, geom WHERE b.vec_id % geom.qmod = 0
-       |), cand AS (
-       |  SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
-       |  FROM qprobe q JOIN b c USING (bucket)
-       |  WHERE c.vec_id <> q.query_id
-       |), scored AS (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |         list_dot_product(qe.v, ne.v)
-       |           / sqrt(list_dot_product(qe.v, qe.v) * list_dot_product(ne.v, ne.v)) AS cos
-       |  FROM cand
-       |  JOIN e qe ON qe.vec_id = cand.query_id
-       |  JOIN e ne ON ne.vec_id = cand.neighbor_id
-       |), ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 4) DESC, neighbor_id) AS rank
-       |  FROM scored
-       |)
-       |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-  }
 }

@@ -205,6 +205,44 @@ class MlSpec extends SparkSpec {
     assert(pairs(Similarity.ivfTopK(emb, "vec_id", "embedding", pred, k = 5)) == ivf)
   }
 
+  test("Similarity.ivfTopK: recall never drops as nProbe grows; probing every list is the exact top-k") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val vecs = Similarity.hyperplanes(200, 64, seed = 3L)
+    val emb = vecs.zipWithIndex
+      .map { case (v, i) => (i.toLong, v.map(_.toFloat).toSeq) }
+      .toSeq
+      .toDF("vec_id", "embedding")
+    val pred = col("vec_id") % 20 === 0
+    def ranked(df: org.apache.spark.sql.DataFrame) = df
+      .collect()
+      .map { r =>
+        (r.getLong(r.fieldIndex("query_id")), r.getInt(r.fieldIndex("rank")), r.getLong(r.fieldIndex("neighbor_id")))
+      }
+      .toSet
+    // exact truth under the ANN rank rule: cosineTopK scores every
+    // neighbor, re-ranked on the 4-decimal quantized cosine with ties
+    // to the lower id
+    val quantized = Window.partitionBy("query_id").orderBy(round(col("cos"), 4).desc, col("neighbor_id"))
+    val exact = ranked(
+      Similarity
+        .cosineTopK(emb, "vec_id", "embedding", pred, k = 200)
+        .withColumn("rank", row_number().over(quantized))
+        .filter(col("rank") <= 5)
+    )
+    assert(exact.size == 10 * 5)
+    val truth = exact.map { case (q, _, n) => (q, n) }
+    // nProbe p probes the p nearest of the 16 lists, so the probe sets
+    // are nested and the candidate sets grow with p
+    val hits = (1 to 16).map { p =>
+      val got = ranked(Similarity.ivfTopK(emb, "vec_id", "embedding", pred, k = 5, nCentroids = 16, nProbe = p))
+      if (p == 16) assert(got == exact, "nProbe = nCentroids must return the exact top-k, ranks included")
+      got.count { case (q, _, n) => truth.contains((q, n)) }
+    }
+    assert(hits.zip(hits.tail).forall { case (a, b) => a <= b }, s"hits by nProbe 1..16: $hits")
+    assert(hits.head < hits.last, s"one probed list must miss some true neighbors: $hits")
+  }
+
   test("ivfTopKIndexed over a parquet-persisted buildIvfIndex == inline ivfTopK; geometry guarded") {
     import spark.implicits._
     val vecs = Similarity.hyperplanes(240, 64, seed = 5L)

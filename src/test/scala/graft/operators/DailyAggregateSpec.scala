@@ -52,4 +52,17 @@ class DailyAggregateSpec extends SparkSpec {
     val out = DailyAggregate(df).select("value").collect().map(_.getDouble(0)).toList
     assert(out == List(5.0))
   }
+
+  test("an unknown agg_type yields a NULL value, not an error") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, ts("2023-01-01 01:00:00"), 2.0, "mode", 0),
+      (1L, ts("2023-01-01 02:00:00"), 8.0, "mode", 0)
+    ).toDF("timeseries_id", "datetime", "value", "agg_type", "offset_hours")
+    val out = DailyAggregate(df).select("agg_type", "value", "n").collect()
+    assert(out.length == 1)
+    assert(out(0).getString(0) == "mode")
+    assert(out(0).isNullAt(1), "no statistic for an unknown type")
+    assert(out(0).getLong(2) == 2L)
+  }
 }
